@@ -213,7 +213,7 @@ def run_cdc_replay(cores: int, n_convs: int, n_incr: int) -> dict:
             spark, os.path.join(work, "transcripts"), TRANSCRIPT_SCHEMA,
             num_buckets=64, fs=fs,
         )
-        orch = CdcOrchestrator(table, buckets_per_group=64, count_input=False)
+        orch = CdcOrchestrator(table, buckets_per_group=64)
         gen_parts = parts
         hist_events = n_convs * SCALE_TURNS
         t_h = time.monotonic()
@@ -828,7 +828,7 @@ def run_mor_ingest(cores: int, n_convs: int, n_incr: int) -> dict:
         table = bootstrap_table(
             spark, os.path.join(work, "t"), TRANSCRIPT_SCHEMA, num_buckets=64
         )
-        orch = CdcOrchestrator(table, buckets_per_group=64, count_input=False)
+        orch = CdcOrchestrator(table, buckets_per_group=64)
         gen_parts = BENCH_JOB_PARTS
         orch.apply_batch(historical_batch(spark, n_convs, SCALE_TURNS, partitions=gen_parts), 1)
         ev = incremental_batch(spark, 2, n_incr, n_convs, SCALE_TURNS, skew=2.0, partitions=gen_parts)

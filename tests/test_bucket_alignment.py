@@ -54,7 +54,7 @@ def test_merge_plan_single_exchange(spark, tmp_path):
     it), exactly ONE Exchange total (the events' bucket repartition) —
     VERDICT r04 #2's done-criterion, pinned as a regression test."""
     t = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=8)
-    orch = CdcOrchestrator(t, buckets_per_group=8, count_input=False)
+    orch = CdcOrchestrator(t, buckets_per_group=8)
     orch.apply_batch(_events(spark), 1)
     t.refresh()
     deduped = lww_dedup(
@@ -83,7 +83,7 @@ def test_files_per_bucket_stay_bounded(spark, tmp_path):
     replay every bucket holds one current file and O(batches) history
     files."""
     t = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=8)
-    orch = CdcOrchestrator(t, buckets_per_group=8, count_input=False)
+    orch = CdcOrchestrator(t, buckets_per_group=8)
     for b in (1, 2, 3):
         orch.apply_batch(_events(spark, base=b * 10000), b)
     snap = t.refresh().snapshot
@@ -102,7 +102,7 @@ def test_legacy_xxhash_layout_still_reads(spark, tmp_path):
         properties={"bucket.hash": "xxhash64"},
     )
     assert not t.spark_aligned
-    orch = CdcOrchestrator(t, buckets_per_group=8, count_input=False)
+    orch = CdcOrchestrator(t, buckets_per_group=8)
     orch.apply_batch(_events(spark), 1)
     _df, bucketed = t.read_bucketed(family="current")
     assert not bucketed
@@ -131,14 +131,14 @@ def test_object_store_fallback(spark, tmp_path):
     t = bootstrap_table(
         spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=8, fs=ObjectStoreFS()
     )
-    orch = CdcOrchestrator(t, buckets_per_group=8, count_input=False)
+    orch = CdcOrchestrator(t, buckets_per_group=8)
     orch.apply_batch(_events(spark), 1)
     _df, bucketed = t.read_bucketed(family="current")
     assert not bucketed
     orch.apply_batch(_events(spark, base=5000), 2)
 
     ref = bootstrap_table(spark, str(tmp_path / "ref"), TRANSCRIPT_SCHEMA, num_buckets=8)
-    ro = CdcOrchestrator(ref, buckets_per_group=8, count_input=False)
+    ro = CdcOrchestrator(ref, buckets_per_group=8)
     ro.apply_batch(_events(spark), 1)
     ro.apply_batch(_events(spark, base=5000), 2)
     got = {tuple(r) for r in current_state(t).collect()}
@@ -152,7 +152,7 @@ def test_insert_only_bootstrap_equals_merge_path(spark, tmp_path):
     zero-lifetime tombstones, LWW winners only, same lineage columns)."""
     ev = _events(spark, n=3000)
     t = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=8)
-    CdcOrchestrator(t, buckets_per_group=8, count_input=False).apply_batch(ev, 1)
+    CdcOrchestrator(t, buckets_per_group=8).apply_batch(ev, 1)
 
     deduped = lww_dedup(align_events(ev, t), t.key_cols)
     # reference: the merge form against an explicitly empty target
@@ -181,7 +181,7 @@ def test_rebucket_upgrades_legacy_layout(spark, tmp_path):
         spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=8,
         properties={"bucket.hash": "xxhash64"},
     )
-    orch = CdcOrchestrator(t, buckets_per_group=8, count_input=False)
+    orch = CdcOrchestrator(t, buckets_per_group=8)
     orch.apply_batch(_events(spark), 1)
     before = {tuple(r) for r in current_state(t).collect()}
 

@@ -91,6 +91,38 @@ def test_apply_batch_atomic_all_or_nothing_visibility(spark, tmp_path):
     assert reader.state.summary["batch_id"] == 1
 
 
+def test_pooled_applies_keep_caller_job_group(spark, tmp_path):
+    """apply_batch_atomic overlaps per-table applies on a thread pool;
+    every pooled apply must still see the caller's Spark local
+    properties (here its job group — the streaming query id the
+    orchestrator reads rides the same mechanism)."""
+    cat, orchs = _fresh_catalog(spark, tmp_path)
+    sc = spark.sparkContext
+    seen = []
+
+    def recording(orch):
+        inner = orch.apply_batch
+
+        def apply_batch(events, batch_id, **kw):
+            seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+            return inner(events, batch_id, **kw)
+
+        orch.apply_batch = apply_batch
+        return orch
+
+    ev = _events(spark, 1)
+    sc.setJobGroup("caller-group", "pooled apply test")
+    try:
+        apply_batch_atomic(
+            cat, {n: (recording(o), ev) for n, o in orchs.items()}, batch_id=1
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(orchs) == 2
+    assert seen == ["caller-group"] * len(orchs)
+
+
 def test_crash_between_table_commit_and_catalog_flip_resumes(spark, tmp_path):
     cat, orchs = _fresh_catalog(spark, tmp_path)
     ev1 = _events(spark, 1)

@@ -232,6 +232,81 @@ def test_crash_resume_mid_batch(spark, tmp_path):
     )
 
 
+def test_single_group_resume_after_seal(spark, tmp_path):
+    """The whole-table single-group path (buckets_per_group >= buckets,
+    the bulk-replay shape): killed at the commit after its manifest was
+    sealed, the batch resumes from the manifest. The forced counting
+    pass resolves the input accounting (events_in is the input count),
+    a NULL-key event under the "error" policy still fails the batch
+    before its commit, and the final state equals an uninterrupted
+    run."""
+    batches = make_batches(spark, n_batches=2)
+
+    def build(path):
+        table = bootstrap_table(spark, str(path), TRANSCRIPT_SCHEMA, num_buckets=4)
+        return table, CdcOrchestrator(table, buckets_per_group=4)
+
+    t_ref, o_ref = build(tmp_path / "ref")
+    for bid, df in batches:
+        o_ref.apply_batch(df, bid)
+
+    t, o = build(tmp_path / "crash")
+    o.apply_batch(batches[0][1], 1)
+    ev2 = batches[1][1]
+    orig = t.commit
+
+    def killed(*a, **kw):
+        raise RuntimeError("kill at commit")
+
+    t.commit = killed
+    with pytest.raises(RuntimeError, match="kill at commit"):
+        o.apply_batch(ev2, 2)
+    t.commit = orig
+    assert not t.refresh().is_batch_committed(2)
+
+    # Same batch id, same sealed manifest, but a NULL-key event in the
+    # input: the forced pass sees it and the batch fails uncommitted.
+    poisoned = ev2.unionByName(
+        spark.createDataFrame(
+            [("I", 99_999, None, 1, "user", "null conv", dt.datetime(2024, 1, 9))],
+            "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+            "role string, text string, ts timestamp",
+        ),
+        allowMissingColumns=True,
+    )
+    with pytest.raises(ValueError, match="NULL business-key"):
+        o.apply_batch(poisoned, 2)
+    assert not t.refresh().is_batch_committed(2)
+
+    rec = o.apply_batch(ev2, 2)
+    assert rec["groups"][0]["resumed"] is True
+    assert rec["events_in"] == ev2.count()
+    assert_pdf_equal(
+        current_state(t).toPandas(),
+        current_state(t_ref).toPandas(),
+        ["conv_id", "turn_idx"],
+    )
+
+
+def test_empty_batch_commits_with_zero_counts(spark, tmp_path):
+    """An empty batch commits on both the grouped and the single-group
+    path with events_in == 0. AQE replaces an empty input by an empty
+    relation, which drops the accounting Observation from the plan; the
+    counts must come from a direct count instead of failing the apply."""
+    batches = make_batches(spark, n_batches=1)
+    for bpg in (2, 8):
+        table = bootstrap_table(
+            spark, str(tmp_path / f"t{bpg}"), TRANSCRIPT_SCHEMA, num_buckets=8
+        )
+        orch = CdcOrchestrator(table, buckets_per_group=bpg)
+        orch.apply_batch(batches[0][1], 1)
+        before = current_state(table).count()
+        rec = orch.apply_batch(batches[0][1].limit(0), 2)
+        assert rec["events_in"] == 0 and rec["events_null_key"] == 0
+        assert table.is_batch_committed(2)
+        assert current_state(table).count() == before
+
+
 def test_resume_across_geometry_change(spark, tmp_path):
     """A batch killed mid-apply in grouped mode then resumed in SINGLE-group
     mode must not reuse the grouped manifest (which covers only the first

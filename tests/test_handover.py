@@ -181,3 +181,80 @@ def test_snapshot_batch_refuses_pending_mor_deltas(spark, tmp_path):
     assert ("conv-000000", 0) not in live.index
     assert live.loc[("conv-000001", 1), "text"] == "tail rewrite"
     assert rec["rows_inserted"] == N_CONVS * TURNS - 2
+
+
+def test_snapshot_chunk_killed_after_seal_honors_later_tail_delete(spark, tmp_path):
+    """A chunk killed after its manifest was sealed must not be resumed
+    once the tail moved on: a tail batch that deletes one of the chunk's
+    keys commits in between, and the re-applied chunk recomputes its
+    insert set (the sealed one was planned against the older snapshot),
+    so the deleted key stays deleted."""
+    table = bootstrap_table(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4
+    )
+    orch = CdcOrchestrator(table)
+    chunk = snapshot_chunks(spark, n_chunks=1)[0]
+    orig = table.commit
+
+    def killed(*a, **kw):
+        raise RuntimeError("kill at commit")
+
+    table.commit = killed
+    with pytest.raises(RuntimeError, match="kill at commit"):
+        orch.apply_snapshot_batch(chunk, 11)
+    table.commit = orig
+
+    delete = spark.createDataFrame(
+        [("D", 20_000, "conv-000003", 2, None, None, dt.datetime(2024, 1, 2))],
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp",
+    )
+    orch.apply_batch(delete, 12)
+    rec = orch.apply_snapshot_batch(chunk, 11)
+    assert not rec["groups"][0].get("resumed")
+    assert rec["rows_inserted"] == N_CONVS * TURNS - 1
+    live = current_state(table).toPandas().set_index(["conv_id", "turn_idx"])
+    assert ("conv-000003", 2) not in live.index
+    assert len(live) == N_CONVS * TURNS - 1
+
+
+def test_refused_batches_leave_nothing_behind(spark, tmp_path):
+    """Refusals come before any side effect. A snapshot chunk and a late
+    batch that carry a new column, refused for pending MoR deltas, leave
+    no schema-evolution snapshot. A chunk refused for a 'D' event writes
+    no file (its counts are eager, checked before the write)."""
+    import os
+
+    from tpc_di_spark.cdc.mor import apply_batch_mor, compact_deltas
+
+    path = str(tmp_path / "t")
+    table = bootstrap_table(spark, path, TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)
+    apply_batch_mor(orch, tail_batches(spark)[1], 3)
+    before = table.refresh().snapshot.snapshot_id
+    chunk = snapshot_chunks(spark, n_chunks=1)[0]
+    with_tool = chunk.withColumn("tool", F.lit("search"))
+    with pytest.raises(ValueError, match="pending MoR delta"):
+        orch.apply_snapshot_batch(with_tool, 11)
+    with pytest.raises(ValueError, match="pending MoR delta"):
+        orch.apply_late_batch(with_tool, 2)
+    assert table.refresh().snapshot.snapshot_id == before
+    assert "tool" not in table.schema.fieldNames()
+
+    compact_deltas(orch)
+
+    def files():
+        return {
+            os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+        }
+
+    on_disk, before = files(), table.refresh().snapshot.snapshot_id
+    delete = spark.createDataFrame(
+        [("D", 1, "conv-000005", 0, None, None, dt.datetime(2024, 1, 1))],
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp",
+    )
+    with pytest.raises(ValueError, match="snapshot batch contains 'D'"):
+        orch.apply_snapshot_batch(chunk.unionByName(delete), 11)
+    assert table.refresh().snapshot.snapshot_id == before
+    assert files() == on_disk

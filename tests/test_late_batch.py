@@ -16,6 +16,7 @@ import pytest
 
 from tests.conftest import assert_pdf_equal
 from tpc_di_spark.cdc import CdcOrchestrator, current_state
+from tpc_di_spark.cdc.apply import align_events, lww_dedup, merge_batch_rows
 from tpc_di_spark.cdc.generator import historical_batch, incremental_batch
 from tpc_di_spark.cdc.orchestrator import bootstrap_table
 from tpc_di_spark.schemas import TRANSCRIPT_SCHEMA
@@ -204,9 +205,9 @@ def test_late_batch_refuses_pending_mor_deltas(spark, tmp_path):
 
 def test_null_key_policy(spark, tmp_path):
     """NULL-business-key events: error policy fails the batch in the
-    accounting job; drop policy filters + counts them; and even
-    unchecked (count_input=False) they stay VISIBLE in the table rather
-    than silently vanishing from the merge (presence-marker fix)."""
+    accounting job; drop policy filters + counts them; and the merge
+    itself keeps them VISIBLE rather than silently vanishing (the
+    presence-marker fix, checked directly on ``merge_batch_rows``)."""
     import pyspark.sql.functions as F2
 
     good = historical_batch(spark, 10, 4)
@@ -231,19 +232,23 @@ def test_null_key_policy(spark, tmp_path):
     assert live.count() == 40  # the 2 null-key events were dropped
     assert live.filter(F2.col("conv_id").isNull() | F2.col("turn_idx").isNull()).count() == 0
 
-    # Unchecked path (count_input=False, bench contract): rows are NOT
-    # silently lost — they land visibly with NULL keys, where a WAP
-    # not_null audit or a reconcile catches them.
+    # The merge's presence markers are structural flags, not key
+    # NULL-ness: NULL-key events are NOT silently lost — they come out
+    # as visible current rows, where a WAP not_null audit or a
+    # reconcile catches them.
     t3 = bootstrap_table(spark, str(tmp_path / "raw"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    CdcOrchestrator(t3, count_input=False).apply_batch(mixed, 1)
-    raw = current_state(t3)
+    empty = spark.createDataFrame([], t3.schema)
+    raw = merge_batch_rows(
+        empty, lww_dedup(align_events(mixed, t3), t3.key_cols), 1, t3
+    ).filter(F2.col("is_current"))
     assert raw.count() == 42
     assert raw.filter(F2.col("conv_id").isNull()).count() == 1
-    # second batch against the poisoned table still merges fine
-    CdcOrchestrator(t3, count_input=False).apply_batch(
-        incremental_batch(spark, 2, 50, 10, 4), 2
+    # a second batch against the poisoned state keeps the NULL-key row
+    nxt = lww_dedup(
+        align_events(incremental_batch(spark, 2, 50, 10, 4), t3), t3.key_cols
     )
-    assert current_state(t3).filter(F2.col("conv_id").isNull()).count() == 1
+    merged = merge_batch_rows(raw, nxt, 2, t3).filter(F2.col("is_current"))
+    assert merged.filter(F2.col("conv_id").isNull()).count() == 1
 
 
 def test_late_batch_exact_after_compaction(spark, tmp_path):

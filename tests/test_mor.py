@@ -184,3 +184,18 @@ def test_lookup_mor_folds_pending_deltas(spark, tmp_path):
         if r.conv_id in {k["conv_id"] for k in keys}
     }
     assert got == full
+
+
+def test_mor_append_refuses_nonpositive_batch_id(spark, tmp_path):
+    """A MoR append shares the CoW entry guard: batch_id <= 0 raises and
+    commits nothing. A negative id is the delete-tombstone marker, which
+    compaction would otherwise materialize as real rows."""
+    table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)
+    events = make_batches(spark, n_batches=1)[0][1]
+    before = table.refresh().snapshot.snapshot_id
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match="batch_id must be >= 1"):
+            apply_batch_mor(orch, events, bad)
+        assert table.refresh().snapshot.snapshot_id == before
+    assert pending_delta_batches(table) == []

@@ -24,7 +24,7 @@ def test_hot_conversation_spreads_over_buckets(spark, tmp_path):
         F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
     )
     table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=16)
-    orch = CdcOrchestrator(table, buckets_per_group=16, count_input=False)
+    orch = CdcOrchestrator(table, buckets_per_group=16)
     rec = orch.apply_batch(df, 1)
 
     # The hot conversation's rows land in every bucket, roughly evenly.

@@ -1,3 +1,4 @@
+import json
 import textwrap
 
 import pyspark.sql.functions as F
@@ -551,7 +552,7 @@ def test_debezium_reader_quarantine_and_apply(spark, tmp_path):
 
     # end-to-end: the parsed tail applies through the normal CDC path
     table = bootstrap_table(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    CdcOrchestrator(table, count_input=False).apply_batch(events, 1)
+    CdcOrchestrator(table).apply_batch(events, 1)
     state = {(r.conv_id, r.turn_idx): r.text for r in current_state(table).collect()}
     assert state == {("c1", 0): "v2"}
 
@@ -567,7 +568,7 @@ def test_debezium_reader_quarantine_and_apply(spark, tmp_path):
     qdir = str(tmp_path / "quarantine")
     q = start_cdc_stream(
         raw_stream,
-        CdcOrchestrator(t2, count_input=False),
+        CdcOrchestrator(t2),
         str(tmp_path / "ckpt"),
         transform=transform,
         quarantine_dir=qdir,
@@ -647,3 +648,51 @@ def test_streaming_wap_audit_gate(spark, tmp_path):
     run("ckpt_fresh")
     table.refresh()
     assert {r.conv_id: r.text for r in current_state(table).collect()} == state
+
+
+def test_streaming_wap_keeps_orchestrator_config(spark, tmp_path):
+    """The audited stream stages each micro-batch through an orchestrator
+    configured like the caller's: with null_key_policy="drop", a
+    micro-batch holding one NULL-key event publishes its other rows and
+    counts the dropped one (a hand-built staged orchestrator fell back to
+    "error" and failed the epoch)."""
+    import datetime as dt
+    import os
+
+    from tpc_di_spark.cdc import CdcOrchestrator, current_state
+    from tpc_di_spark.cdc.orchestrator import bootstrap_table, metrics_path
+    from tpc_di_spark.lake.wap import list_branches, not_null
+    from tpc_di_spark.schemas import TRANSCRIPT_SCHEMA
+    from tpc_di_spark.streaming.stream_apply import start_cdc_stream, stream_events
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t0 = dt.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [("I", 1, "c1", 0, "user", "v1", t0),
+         ("I", 2, "c2", 0, "user", "w1", t0),
+         ("I", 3, None, 0, "user", "no key", t0)],
+        # CHANGE_EVENT_SCHEMA declares the key non-nullable; the upstream
+        # file is exactly what breaks that promise.
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp",
+    ).coalesce(1).write.parquet(str(src / "f1"))
+
+    table = bootstrap_table(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table, null_key_policy="drop")
+    q = start_cdc_stream(
+        stream_events(spark, str(src) + "/*"),
+        orch, str(tmp_path / "ckpt"), base_batch_id=100,
+        audit_checks=[not_null(table.key_cols)],
+        quarantine_dir=str(tmp_path / "quarantine"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    table.refresh()
+    assert {r.conv_id: r.text for r in current_state(table).collect()} == {
+        "c1": "v1", "c2": "w1",
+    }
+    assert list_branches(table) == {}
+    assert not os.path.exists(tmp_path / "quarantine")
+    with open(metrics_path(table.path, 100)) as f:
+        assert json.load(f)["events_null_key"] == 1

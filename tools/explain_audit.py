@@ -128,7 +128,7 @@ def _cdc_merge_plan_section(spark) -> list[str]:
         table = bootstrap_table(
             spark, os.path.join(work, "t"), TRANSCRIPT_SCHEMA, num_buckets=16
         )
-        orch = CdcOrchestrator(table, buckets_per_group=16, count_input=False)
+        orch = CdcOrchestrator(table, buckets_per_group=16)
         orch.apply_batch(historical_batch(spark, 2000, 20, partitions=8), 1)
         ev = align_events(
             incremental_batch(spark, 2, 20000, 2000, 20, skew=2.0, partitions=8),

@@ -31,7 +31,7 @@ from typing import TYPE_CHECKING
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from tpc_di_spark.cdc.apply import align_events, data_cols, lww_dedup
+from tpc_di_spark.cdc.apply import data_cols, lww_dedup
 from tpc_di_spark.lake.table import LakeTable
 
 if TYPE_CHECKING:
@@ -49,11 +49,12 @@ def apply_batch_mor(orch: "CdcOrchestrator", events: DataFrame, batch_id: int) -
 
     t0 = time.monotonic()
     table = orch.table
-    table.refresh()
-    if table.is_batch_committed(batch_id):
+    # The orchestrator's entry guard: batch_id >= 1 (a negative id is the
+    # delete-tombstone marker compaction would materialize), refresh,
+    # exactly-once skip, schema evolution, alignment.
+    events = orch._enter(events, batch_id)
+    if events is None:
         return {"batch_id": batch_id, "skipped": "already-committed"}
-    orch._maybe_evolve(events, batch_id)
-    events = align_events(events, table)
     # One exchange total: bucket-layout repartition feeds the LWW groupBy
     # (distribution satisfied) AND bucket-co-locates the delta write (no
     # write-side repartition — see LakeTable._bucket_clustered).

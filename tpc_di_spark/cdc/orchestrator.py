@@ -1,45 +1,64 @@
 """Batch orchestrator: exactly-once CDC apply with mid-batch resume.
 
 Replaces the reference's AWS Step Functions chain (report §4.2-4.3) with a
-deterministic local protocol:
+deterministic local protocol. Every way a batch reaches the table —
+``apply_batch``, ``apply_snapshot_batch``, ``apply_late_batch`` and MoR
+delta compaction (``cdc/mor.py``) — runs ONE apply core,
+:meth:`CdcOrchestrator._apply`, in this order:
 
-1. **Exactly-once**: each LakeTable snapshot records its committed batch
-   ids; re-applying a committed batch is a no-op. The snapshot flip is the
-   single atomic commit point — a crash anywhere before it leaves the old
-   table state fully live (the reference's per-row INSERT stream has no
-   such property; a killed Lambda leaves half a batch applied,
+1. **Entry guard**: ``batch_id >= 1`` (negative ids are the delete-
+   tombstone marker, ``cdc/apply.py``), refresh, exactly-once skip,
+   transactional schema evolution (a batch carrying new payload columns
+   evolves the schema in a metadata-only commit first, per north_rule),
+   ``align_events``. MoR appends share this guard.
+2. **Input accounting** (:meth:`~CdcOrchestrator._account`): total,
+   NULL-business-key and (snapshot chunks) delete counts ride a lazy
+   ``Observation`` inside the first job that reads the batch — zero extra
+   passes. Inside a Structured Streaming micro-batch (local property
+   ``sql.streaming.queryId`` set; foreachBatch threads carry it, and the
+   catalog/WAP pools inherit it) CollectMetrics breaks, so there the same
+   counts come from one eager aggregate job. The counts are checked
+   against ``null_key_policy`` before any manifest is sealed.
+3. **Per group: reuse the sealed manifest, or plan → write → seal**. The
+   touched buckets are split into groups (or one whole-table group); each
+   group's rows are written under a deterministic commit tag and sealed
+   with a ``.done`` manifest (file lists, per-bucket row counts = partition
+   lineage, the group geometry, and the snapshot the rows were computed
+   against). A resumed run reuses a sealed group only while the table is
+   still at that snapshot — snapshot chunks and late batches interleave
+   with the tail, and rows planned against an older state are stale.
+4. **One atomic snapshot commit** — the single commit point: a crash
+   anywhere before it leaves the old table state fully live (the
+   reference's per-row INSERT stream has no such property; a killed
+   Lambda leaves half a batch applied,
    `Incremental1/IncrementalAccount.py:218-343`).
+5. **Duel skip**: a commit that hit the exactly-once guard without
+   flipping means a duelling driver landed this batch id first.
+6. **Staging cleanup**, then 7. **one metrics record** per batch in
+   ``_metrics/`` (fields per operation: README "Per-batch metrics
+   record"), the opt-in compaction policy, and the optional DImessages
+   status row.
 
-2. **Mid-batch resume via per-partition-group checkpoint manifests**: the
-   touched buckets are split into groups; each group's merge output is
-   written to a *deterministic* path and sealed with a ``.done`` manifest
-   (file list + per-bucket row counts = partition lineage). A resumed run
-   skips sealed groups, recomputes unsealed ones (their partial output is
-   overwritten — deterministic tags make this idempotent), then performs
-   the one atomic snapshot commit.
-
-3. **Schema evolution**: a batch carrying new payload columns triggers a
-   transactional evolve-then-apply (metadata-only schema commit, then the
-   merge), per north_rule.
-
-4. **Observability**: a JSON metrics record per batch (row counts,
-   per-bucket lineage, wall time, snapshot id) lands in ``_metrics/``.
-
-5. **Ordering repair**: ``apply_snapshot_batch`` folds late initial-
-   snapshot chunks under tail deletes (DBLog rule); ``apply_late_batch``
-   applies a missed batch after higher-numbered ones under the
-   supersession rule — final current state is arrival-order independent.
+An entry point supplies only its row-set planner and its commit/record
+fields (:class:`_Op`). ``apply_snapshot_batch`` folds late initial-
+snapshot chunks under tail deletes (DBLog rule); ``apply_late_batch``
+applies a missed batch after higher-numbered ones under the supersession
+rule — final current state is arrival-order independent.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import os
 import time
-from typing import Sequence
+from dataclasses import dataclass, field
+from functools import reduce
+from typing import Callable, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructField, StructType
 
 from tpc_di_spark.cdc.apply import (
@@ -50,10 +69,46 @@ from tpc_di_spark.cdc.apply import (
     lww_dedup,
     merge_batch_rows,
 )
-from tpc_di_spark.lake.table import LakeTable
+from tpc_di_spark.lake.table import CommitConflict, LakeTable
 
-_STAGING = "_staging"
-_METRICS = "_metrics"
+
+def staging_dir(table_path: str, batch_id: int) -> str:
+    """Checkpoint-manifest directory of one in-flight batch."""
+    return os.path.join(table_path, "_staging", f"batch-{batch_id:06d}")
+
+
+def metrics_path(table_path: str, batch_id: int) -> str:
+    """The batch's ``_metrics`` record."""
+    return os.path.join(table_path, "_metrics", f"batch-{batch_id:06d}.json")
+
+
+def _skipped(batch_id: int) -> dict:
+    return {"batch_id": batch_id, "skipped": "already-committed"}
+
+
+@dataclass
+class _Op:
+    """What one entry point supplies to the apply core."""
+
+    operation: str  # commit summary and metrics-record "operation"
+    # (src, buckets) -> (rows, bucket_aligned): the row set one group
+    # writes. ``src`` is the LWW-deduped batch (carrying _bucket) limited
+    # to ``buckets``; None = the whole-table single group.
+    plan: Callable[[DataFrame, list | None], tuple[DataFrame, bool]]
+    grouped: bool = False  # bucket-group resume granularity (cdc-apply)
+    # "append" adds an insert set (snapshot chunks); it closes nothing,
+    # so a 'D' event would be silently dropped — the accounting refuses it.
+    mode: str = "replace"
+    # False: the batch id is already committed (MoR delta compaction) —
+    # no exactly-once skip, no batch id on the commit, no null-key policy
+    # (the delta append accepted these events; compaction must not change
+    # the live view), and files tagged compact-delta-NNNNNN (the
+    # changelog's closing-batch tag for materialized deltas).
+    claims_batch: bool = True
+    refuse_pending: bool = False  # refuse while MoR deltas are pending
+    summary: dict = field(default_factory=dict)
+    properties: Callable[[], dict] | None = None  # new table properties
+    extra: Callable[[dict], dict] = lambda record: {}  # extra record keys
 
 
 class CdcOrchestrator:
@@ -61,7 +116,6 @@ class CdcOrchestrator:
         self,
         table: LakeTable,
         buckets_per_group: int = 8,
-        count_input: bool = True,
         messages_log=None,
         auto_compact_files_per_bucket: int = 0,
         null_key_policy: str = "error",
@@ -69,10 +123,6 @@ class CdcOrchestrator:
         self.table = table
         self.spark = table.spark
         self.buckets_per_group = buckets_per_group
-        # count_input=False skips the pre-dedup events.count() (a full
-        # extra pass over the source); metrics then report the post-LWW
-        # count as events_in=None. Used by throughput benches.
-        self.count_input = count_input
         # Optional plans.messages.MessagesLog: one queryable DImessages
         # status row per applied batch (the reference's "Status: Inserted
         # rows" insert, `Historical/prospect.py:158-163`). Opt-in — the
@@ -83,12 +133,9 @@ class CdcOrchestrator:
         # unreachable junk rows (and pre-round-6 they silently VANISHED
         # from the merge — the presence-marker fix in cdc/apply.py makes
         # them visible instead). Policy: "error" (default) fails the
-        # batch when any key column is NULL — checked inside the same
-        # job as the input count, so it costs nothing extra; with
-        # count_input=False the check is documented-skipped along with
-        # the count (the bench's zero-extra-job contract). "drop"
-        # filters them out free-of-charge in the same scan and reports
-        # events_null_key in the metrics.
+        # batch when any key column is NULL — counted inside the input
+        # accounting, so it costs nothing extra. "drop" filters them out
+        # in the same scan and reports events_null_key in the metrics.
         if null_key_policy not in ("error", "drop"):
             raise ValueError(f"unknown null_key_policy {null_key_policy!r}")
         self.null_key_policy = null_key_policy
@@ -108,105 +155,91 @@ class CdcOrchestrator:
         return CdcOrchestrator(
             table,
             buckets_per_group=self.buckets_per_group,
-            count_input=self.count_input,
             messages_log=self.messages_log,
             auto_compact_files_per_bucket=self.auto_compact_files_per_bucket,
             null_key_policy=self.null_key_policy,
         )
 
-    def _key_null_expr(self):
-        key_null = None
-        for k in self.table.key_cols:
-            c = F.col(k).isNull()
-            key_null = c if key_null is None else (key_null | c)
-        return key_null
+    # ------------------------------------------------------- accounting
+    def _account(
+        self, events: DataFrame, batch_id: int, policy: str | None, refuse_deletes: bool
+    ):
+        """The input accounting: returns ``(events, resolve)``. Call
+        ``resolve()`` once a job has materialized the batch, or
+        ``resolve(force=True)`` when none did (every group resumed from
+        its manifest: one counting pass). It returns ``(events_in,
+        events_null_key)`` and enforces the input contract — the null-key
+        policy and, for an append, no 'D' events — BEFORE any seal or
+        commit, so a bad batch never becomes visible and never leaves a
+        reusable manifest.
 
-    def _account_input(self, events: DataFrame, batch_id: int):
-        """EAGER input accounting: (events, n_events, n_null_key) in AT
-        MOST one job. Used by the exception paths (snapshot handover,
-        late repair) whose early ``limit(1).count()`` guard actions would
-        corrupt a lazy Observation (a limit can stop before scanning
-        every row, so observed metrics from that action undercount). The
-        hot ``apply_batch`` path uses :meth:`_lazy_account_input` — same
-        numbers, ZERO extra pass."""
-        key_null = self._key_null_expr()
-        n_events = n_null = None
-        if self.count_input:
-            row = events.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum(key_null.cast("long")), F.lit(0)).alias("nn"),
-            ).collect()[0]
-            n_events, n_null = row["n"], row["nn"]
-            self._check_null_policy(n_null, batch_id)
-        if self.null_key_policy == "drop":
-            events = events.filter(~key_null)
-        return events, n_events, n_null
-
-    def _lazy_account_input(self, events: DataFrame):
-        """Zero-extra-job input accounting for the hot apply path: attach
-        an :class:`pyspark.sql.Observation` computing (total, null-key
-        count) INSIDE whatever job first materializes the batch (the
-        grouped path's bucket-count job, or the single-group path's merge
-        write) instead of running a dedicated ``agg().collect()`` pass
-        over the source — at sf0.1 that pass was ~40% of a batch's wall
-        time, and at scale it is a full extra read of the change stream.
-        Resolve with :meth:`_resolve_accounting` after the first action.
-        The "drop" policy's filter sits ABOVE the observation so dropped
-        rows still count (events_in is the pre-drop total, as before)."""
-        if not self.count_input:
-            if self.null_key_policy == "drop":
-                events = events.filter(~self._key_null_expr())
-            return events, None
-        from pyspark.sql import Observation
-
-        key_null = self._key_null_expr()
-        obs = Observation()
-        events = events.observe(
-            obs,
+        By default an :class:`Observation` computes the counts INSIDE the
+        first job that materializes the batch (the grouped path's bucket-
+        count job, or the single group's merge write) instead of a
+        dedicated ``agg().collect()`` pass — at sf0.1 that pass was ~40%
+        of a batch's wall time. Two cases count in one eager aggregate
+        job instead, checked before anything is written: a streaming
+        micro-batch (the ``sql.streaming.queryId`` local property is set),
+        where the observed node stack-overflows the stream thread on
+        re-planning; and an append (snapshot chunk, a one-shot bootstrap
+        path), so a misrouted tail batch is refused before it writes. The
+        "drop" filter sits ABOVE the counts, so events_in is the pre-drop
+        total."""
+        key_null = reduce(operator.or_, [F.col(k).isNull() for k in self.table.key_cols])
+        aggs = [
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(key_null.cast("long")), F.lit(0)).alias("nn"),
-        )
-        if self.null_key_policy == "drop":
+        ]
+        if refuse_deletes:
+            is_del = (F.col("cdc_flag") == F.lit("D")).cast("long")
+            aggs.append(F.coalesce(F.sum(is_del), F.lit(0)).alias("nd"))
+        source, counts = events, None
+        if refuse_deletes or self.spark.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        ):
+            counts = source.agg(*aggs).collect()[0].asDict()
+        else:
+            obs = Observation()
+            events = observed = events.observe(obs, *aggs)
+
+        def resolve(force: bool = False) -> tuple[int, int]:
+            c = counts
+            if c is None:
+                if force:
+                    observed.count()
+                try:
+                    c = obs.get
+                except Py4JJavaError:
+                    # The action carried no metrics: AQE replaced the
+                    # observed subtree by an empty relation (an empty
+                    # batch, or a planner that kept none of it). Count
+                    # directly — one job, only in that degenerate case.
+                    c = source.agg(*aggs).collect()[0].asDict()
+            if c["nn"] and policy == "error":
+                raise ValueError(
+                    f"batch {batch_id}: {c['nn']} events carry NULL business-"
+                    f"key columns ({list(self.table.key_cols)}) — upstream "
+                    "garbage an equi-join merge can never match again. Fix "
+                    "the source, or construct the orchestrator with "
+                    "null_key_policy='drop' to filter and count them."
+                )
+            if c.get("nd"):
+                # A snapshot is a set of point-in-time READS — 'D' cannot
+                # occur; its presence means tail events were routed here.
+                raise ValueError(
+                    "snapshot batch contains 'D' events — deletes belong on "
+                    "the tail path (apply_batch); routing them here would "
+                    "silently drop them"
+                )
+            return c["n"], c["nn"]
+
+        if counts is not None:
+            resolve()  # eager counts: enforce the contract before any write
+        if policy == "drop":
             events = events.filter(~key_null)
-        return events, obs
-
-    def _resolve_accounting(self, obs, batch_id: int, ensure: DataFrame | None = None):
-        """Read a :meth:`_lazy_account_input` observation after an action
-        materialized the observed plan. ``ensure`` forces a materializing
-        action first — only the resumed single-group path needs it (its
-        manifest made the write a no-op, so no job ran over the events).
-        Enforces the same null_key_policy='error' contract as the eager
-        path: the batch still fails BEFORE its atomic commit, so no bad
-        state becomes visible (the error now surfaces after the merge
-        compute instead of before it)."""
-        if obs is None:
-            return None, None
-        if isinstance(obs, tuple):  # eager_accounting already resolved
-            return obs
-        if ensure is not None:
-            ensure.count()
-        row = obs.get
-        n_events, n_null = row["n"], row["nn"]
-        self._check_null_policy(n_null, batch_id)
-        return n_events, n_null
-
-    def _check_null_policy(self, n_null, batch_id: int) -> None:
-        if n_null and self.null_key_policy == "error":
-            raise ValueError(
-                f"batch {batch_id}: {n_null} events carry NULL business-"
-                f"key columns ({list(self.table.key_cols)}) — upstream "
-                "garbage an equi-join merge can never match again. Fix "
-                "the source, or construct the orchestrator with "
-                "null_key_policy='drop' to filter and count them."
-            )
+        return events, resolve
 
     # ------------------------------------------------------------ utilities
-    def _staging_dir(self, batch_id: int) -> str:
-        return os.path.join(self.table.path, _STAGING, f"batch-{batch_id:06d}")
-
-    def _metrics_path(self, batch_id: int) -> str:
-        return os.path.join(self.table.path, _METRICS, f"batch-{batch_id:06d}.json")
-
     def _geometry(self, group_buckets: list | None) -> dict:
         """Group geometry stamped into every checkpoint manifest. A batch
         killed mid-apply and resumed under a different geometry (e.g.
@@ -219,13 +252,25 @@ class CdcOrchestrator:
             "group_buckets": group_buckets,  # None = whole-table single group
         }
 
-    def _manifest_valid(self, manifest: dict, geometry: dict, table_path: str) -> bool:
-        return manifest.get("geometry") == geometry and all(
-            self.table.fs.exists(os.path.join(table_path, rel))
-            for fmap in (manifest["files"], manifest.get("hist_files", {}))
-            for fl in fmap.values()
-            for rel in fl
+    def _sealed(self, path: str, buckets: list | None, basis: list) -> dict | None:
+        """The group's sealed manifest when it is reusable: same group
+        geometry, computed by the same operation against the snapshot the
+        table is still at, and every file still on disk."""
+        fs = self.table.fs
+        if not fs.exists(path):
+            return None
+        m = json.loads(fs.read_text(path))
+        ok = (
+            m.get("geometry") == self._geometry(buckets)
+            and m.get("basis") == basis
+            and all(
+                fs.exists(os.path.join(self.table.path, rel))
+                for fmap in (m["files"], m["hist_files"])
+                for fl in fmap.values()
+                for rel in fl
+            )
         )
+        return m if ok else None
 
     def _lineage_rows(
         self, files: dict[str, list[str]], hist_delta: dict[str, list[str]]
@@ -287,7 +332,6 @@ class CdcOrchestrator:
         # by one knob.
         if self.table.snapshot.properties.get("index.bloom.column"):
             from tpc_di_spark.lake.maintenance import consolidate_blooms
-            from tpc_di_spark.lake.table import CommitConflict
 
             try:
                 brec = consolidate_blooms(
@@ -321,6 +365,244 @@ class CdcOrchestrator:
         )
         self.table.evolve_schema(evolved)
 
+    # ------------------------------------------------------------ the core
+    def _enter(
+        self,
+        events: DataFrame,
+        batch_id: int,
+        claims_batch: bool = True,
+        refuse_pending: bool = False,
+    ) -> DataFrame | None:
+        """Entry guard of every apply path, MoR appends included: the
+        batch aligned to the (possibly evolved) table schema, or None when
+        its id is already committed. Negative batch ids are the delete-
+        tombstone marker (cdc/apply.py) — real batches must stay strictly
+        positive. Every refusal comes BEFORE the schema evolution, which
+        is a commit of its own: a refused batch leaves no snapshot."""
+        if batch_id <= 0:
+            raise ValueError(f"batch_id must be >= 1, got {batch_id}")
+        self.table.refresh()
+        if claims_batch and self.table.is_batch_committed(batch_id):
+            return None
+        if refuse_pending:
+            from tpc_di_spark.cdc.mor import pending_delta_batches
+
+            # Snapshot chunks and late batches read changed_keys_since,
+            # which reads DATA files: keys touched only in uncompacted MoR
+            # deltas are invisible to it, so applying now could resurrect
+            # a delta-deleted key.
+            if pending_delta_batches(self.table):
+                raise ValueError(
+                    "pending MoR delta batches exist — compact them first: "
+                    "the keys they touch are not yet visible to "
+                    "changed_keys_since"
+                )
+        self._maybe_evolve(events, batch_id)
+        return align_events(events, self.table)
+
+    def _apply(self, events: DataFrame, batch_id: int, op: _Op) -> dict:
+        """The one stage → write → seal → commit → record path (module
+        docstring, steps 1-7). Raises :class:`CommitConflict` when another
+        writer advanced the table; the caller decides what to recompute."""
+        t0 = time.monotonic()
+        events = self._enter(events, batch_id, op.claims_batch, op.refuse_pending)
+        if events is None:
+            return _skipped(batch_id)
+        fs = self.table.fs
+        policy = self.null_key_policy if op.claims_batch else None
+        events, resolve = self._account(
+            events, batch_id, policy, refuse_deletes=op.mode == "append"
+        )
+
+        # ONE exchange for the whole batch: repartition the events to the
+        # table's bucket layout BEFORE the LWW groupBy. The groupBy's
+        # ClusteredDistribution(key) is satisfied by that partitioning
+        # (no aggregate exchange), the merge join against the bucketed
+        # target scan is satisfied by it (no join exchange), and the
+        # family-split write is bucket-co-located by it (no write
+        # exchange). Trade: the LWW fold loses its pre-shuffle partial
+        # combine, so a key duplicated k times in one batch ships k rows
+        # instead of O(partitions) — CDC batches carry ~1-2 events/key,
+        # and the hot-CONVERSATION skew story is unchanged (full-key
+        # bucketing spreads a hot conversation's turns over all buckets).
+        deduped = self.table.with_bucket(
+            lww_dedup(self.table.bucket_partitioned(events), self.table.key_cols)
+        )
+        # Sparse batches merge bucket group by bucket group (resume per
+        # group, only touched buckets rewritten). A batch whose group
+        # spans the whole table merges in ONE pass (generation -> dedup
+        # shuffle -> merge join -> write) and skips the touched-bucket
+        # discovery job, which would recompute the dedup: right when
+        # batches touch most buckets anyway (bulk replays, benches).
+        grouped = op.grouped and self.buckets_per_group < self.table.num_buckets
+        tag = "batch" if op.claims_batch else "compact-delta"
+        staging = staging_dir(self.table.path, batch_id)
+        base = self.table.snapshot  # every group is planned against it
+        basis = [op.operation, base.snapshot_id, base.summary.get("committed_at")]
+        counted = bucket_counts = None
+        files: dict[str, list[str]] = {}
+        hist: dict[str, list[str]] = {}
+        stats: dict[str, list] = {}
+        group_metrics = []
+        if grouped:
+            # Persist BEFORE the bucket-count job so that ONE pass
+            # computes the dedup DAG: the count materializes the cache
+            # and every group's merge reads from it (for changelog-
+            # derived batches that DAG is itself joins over the parent
+            # table). At cluster scale this caches the batch, never the
+            # table.
+            deduped.persist()
+        try:
+            if grouped:
+                # One job yields both the touched-bucket set and per-bucket
+                # event counts (metadata-sized collect: <= num_buckets
+                # rows), and resolves the accounting before any write.
+                bucket_counts = {
+                    r[0]: r[1]
+                    for r in deduped.groupBy(LakeTable.BUCKET_COL).count().collect()
+                }
+                counted = resolve()
+                touched = sorted(bucket_counts)
+                groups = [
+                    touched[i : i + self.buckets_per_group]
+                    for i in range(0, len(touched), self.buckets_per_group)
+                ]
+            else:
+                groups = [None]
+            fs.makedirs(staging)
+            for gi, buckets in enumerate(groups):
+                manifest_path = os.path.join(staging, f"group-{gi:03d}.done.json")
+                sealed = self._sealed(manifest_path, buckets, basis)
+                if sealed is not None:
+                    sealed["metrics"]["resumed"] = True
+                else:
+                    g0 = time.monotonic()
+                    src = deduped
+                    if buckets is not None:
+                        src = deduped.filter(F.col(LakeTable.BUCKET_COL).isin(buckets))
+                    rows, aligned = op.plan(src, buckets)
+                    gfiles, ghist = self.table.write_data_files_split(
+                        self.table.with_bucket(rows),
+                        f"{tag}-{batch_id:06d}/group-{gi:03d}",
+                        assume_bucket_partitioned=aligned,
+                    )
+                    if counted is None:  # the write materialized the batch
+                        counted = resolve()
+                    lineage_rows, fstats = self._lineage_rows(gfiles, ghist)
+                    sealed = {
+                        "files": gfiles, "hist_files": ghist, "file_stats": fstats,
+                        "geometry": self._geometry(buckets), "basis": basis,
+                        "metrics": {
+                            "group": gi,
+                            "buckets": buckets if buckets is not None else sorted(
+                                int(b) for b in set(gfiles) | set(ghist)
+                            ),
+                            "events": (
+                                sum(bucket_counts[b] for b in buckets) if grouped else None
+                            ),
+                            "rows_written": lineage_rows,
+                            "secs": round(time.monotonic() - g0, 3),
+                        },
+                    }
+                    fs.replace_text(manifest_path, json.dumps(sealed))
+                files.update(sealed["files"])
+                for b, fl in sealed["hist_files"].items():
+                    hist.setdefault(b, []).extend(fl)
+                stats.update(sealed["file_stats"])
+                group_metrics.append(sealed["metrics"])
+        finally:
+            if grouped:
+                deduped.unpersist(blocking=False)
+        if counted is None:  # every group resumed: nothing read the events
+            counted = resolve(force=True)
+        n_events, n_null = counted
+
+        # Buckets whose current rows this apply re-derived: the touched
+        # ones of a grouped merge; EVERY pre-existing current bucket of a
+        # whole-table merge (any may have lost all its rows to deletes);
+        # only the new files' buckets of an append. History is
+        # append-only under every mode.
+        if op.mode == "append":
+            scope = set()
+        elif grouped:
+            scope = {str(b) for b in bucket_counts}
+        else:
+            scope = set(base.files)
+        replaced = scope | set(files)
+        before = self.table.snapshot.snapshot_id
+        snap = self.table.commit(
+            new_files_by_bucket=files,
+            mode=op.mode,
+            replaced_buckets=replaced,
+            batch_id=batch_id if op.claims_batch else None,
+            append_hist_by_bucket=hist,
+            new_file_stats=stats,
+            summary={"operation": op.operation, "events": n_events, **op.summary},
+            new_properties=op.properties() if op.properties else None,
+        )
+        # The staging manifests memoize only THIS attempt: drop them with
+        # it whether it committed or lost the duel below.
+        fs.rmtree(staging)
+        if snap.snapshot_id == before:
+            # commit() hit its exactly-once guard without flipping: a
+            # duelling driver landed this batch id first. Our salted-
+            # attempt files are unreferenced (expire-swept).
+            return _skipped(batch_id)
+
+        elapsed = time.monotonic() - t0
+        n_deduped = sum(g["events"] for g in group_metrics) if grouped else None
+        rate = n_events or n_deduped
+        record = {
+            "batch_id": batch_id,
+            "operation": op.operation,
+            "snapshot_id": snap.snapshot_id,
+            "events_in": n_events,
+            "events_null_key": n_null,
+            "events_after_lww": n_deduped,
+            "buckets_touched": len(replaced),
+            "groups": group_metrics,
+            "secs": round(elapsed, 3),
+            "events_per_sec": round(rate / elapsed, 1) if rate and elapsed > 0 else None,
+        }
+        record.update(op.extra(record))
+        self._maybe_auto_compact(record)
+        path = metrics_path(self.table.path, batch_id)
+        fs.makedirs(os.path.dirname(path))
+        fs.replace_text(path, json.dumps(record))
+        self._emit_status(record)
+        return record
+
+    def _merge_plan(self, batch_id: int):
+        """Row-set planner of the CoW merge (``apply_batch``, late
+        batches, and MoR compaction under the ORIGINAL batch id, so the
+        materialized lineage equals an all-CoW replay).
+
+        Only the CURRENT file family joins the merge: history files are
+        immutable closed versions the merge can never touch, so skipping
+        them halves-or-better the per-batch scan as history accumulates.
+        ``read_bucketed`` exposes the scope as a catalog bucketed scan, so
+        the full-outer merge join plans with NO Exchange above the table
+        side and its output stays bucket-partitioned — the write then
+        skips its repartition too, but only when the scan really was
+        bucketed (a plain-scan fallback leaves the join's layout to the
+        planner, and the partitionBy write would emit partitions x buckets
+        small files; see LakeTable._bucket_clustered). A scope with no
+        current rows (historical load / bootstrap) skips the join: the
+        insert-only projection of the bucket-partitioned batch."""
+
+        def plan(src: DataFrame, buckets: list | None):
+            t = self.table
+            src = src.drop(LakeTable.BUCKET_COL)
+            live = t.snapshot.files
+            if buckets is not None:
+                live = [b for b in buckets if live.get(str(b))]
+            if not live:
+                return insert_only_rows(src, batch_id, t), t.spark_aligned
+            tgt, aligned = t.read_bucketed(family="current", buckets=buckets)
+            return merge_batch_rows(tgt, src, batch_id, t), aligned
+
+        return plan
+
     # ------------------------------------------------------------ main apply
     def apply_batch(self, events: DataFrame, batch_id: int, retries: int = 2) -> dict:
         """Apply one CDC batch exactly once, with optimistic-concurrency
@@ -334,332 +616,16 @@ class CdcOrchestrator:
         resolves the duelling-driver case where the competing writer
         committed THIS batch id. Bounded (default 2 re-computations) so
         livelock surfaces as the underlying conflict."""
-        from tpc_di_spark.lake.table import CommitConflict
-
         try:
-            return self._apply_batch_once(events, batch_id)
+            return self._apply(
+                events, batch_id,
+                _Op("cdc-apply", self._merge_plan(batch_id), grouped=True),
+            )
         except CommitConflict:
             if retries <= 0:
                 raise
-            staging = self._staging_dir(batch_id)
-            if self.table.fs.exists(staging):
-                self.table.fs.rmtree(staging)
-            self.table.refresh()
+            self.table.fs.rmtree(staging_dir(self.table.path, batch_id))
             return self.apply_batch(events, batch_id, retries=retries - 1)
-
-    def _apply_batch_once(self, events: DataFrame, batch_id: int) -> dict:
-        """One optimistic attempt of :meth:`apply_batch`."""
-        t0 = time.monotonic()
-        if batch_id <= 0:
-            # Negative batch ids are the delete-tombstone marker
-            # (cdc/apply.py) — real batches must stay strictly positive.
-            raise ValueError(f"batch_id must be >= 1, got {batch_id}")
-        self.table.refresh()
-        if self.table.is_batch_committed(batch_id):
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-
-        self._maybe_evolve(events, batch_id)
-        events = align_events(events, self.table)
-        if getattr(self, "eager_accounting", False):
-            # foreachBatch micro-batch plans break CollectMetrics (the
-            # stream execution thread stack-overflows re-planning the
-            # observed node), so streaming drivers opt back into the
-            # eager one-job accounting (streaming/stream_apply.py).
-            events, n_eager, nn_eager = self._account_input(events, batch_id)
-            obs = (n_eager, nn_eager)
-        else:
-            events, obs = self._lazy_account_input(events)
-
-        # ONE exchange for the whole batch: repartition the events to the
-        # table's bucket layout BEFORE the LWW groupBy. The groupBy's
-        # ClusteredDistribution(key) is satisfied by that partitioning
-        # (no aggregate exchange), the merge join against the bucketed
-        # target scan is satisfied by it (no join exchange), and the
-        # family-split write is bucket-co-located by it (no write
-        # exchange). Trade: the LWW fold loses its pre-shuffle partial
-        # combine, so a key duplicated k times in one batch ships k rows
-        # instead of O(partitions) — CDC batches carry ~1-2 events/key,
-        # and the hot-CONVERSATION skew story is unchanged (full-key
-        # bucketing spreads a hot conversation's turns over all buckets).
-        deduped = lww_dedup(
-            self.table.bucket_partitioned(events), self.table.key_cols
-        )
-        deduped = self.table.with_bucket(deduped)
-
-        if self.buckets_per_group >= self.table.num_buckets:
-            # Single-group fast path: the batch is merged against the whole
-            # table in ONE pass (generation -> dedup shuffle -> merge join
-            # -> write), skipping the separate touched-bucket discovery job
-            # that would recompute the dedup. Right when batches touch most
-            # buckets anyway (bulk replays, benches); bucket-pruned multi-
-            # group mode remains the default for sparse batches.
-            return self._apply_single_group(
-                events, deduped, batch_id, obs, t0
-            )
-
-        try:
-            # Persist BEFORE the bucket-count job so that ONE pass
-            # computes the dedup DAG: the count materializes the cache
-            # and every group's merge reads from it. (The old order —
-            # persist after the count, only for multi-group batches —
-            # recomputed the full upstream DAG once for the count and
-            # again for the first group; for changelog-derived batches
-            # that DAG is itself joins over the parent table.) At
-            # cluster scale this caches the batch (<= events), never the
-            # table.
-            deduped.persist()
-            # One job yields both the touched-bucket set and per-bucket
-            # event counts (metadata-sized collect: <= num_buckets rows).
-            bucket_counts = {
-                r[0]: r[1]
-                for r in deduped.groupBy(LakeTable.BUCKET_COL).count().collect()
-            }
-            # That job materialized the observed events, so the input
-            # accounting resolves here at zero extra cost — and the
-            # null_key_policy='error' check still fires BEFORE any write.
-            n_events, n_null = self._resolve_accounting(obs, batch_id)
-            touched = sorted(bucket_counts)
-            groups = [
-                touched[i : i + self.buckets_per_group]
-                for i in range(0, len(touched), self.buckets_per_group)
-            ]
-            staging = self._staging_dir(batch_id)
-            self.table.fs.makedirs(staging)
-
-            all_files: dict[str, list[str]] = {}
-            all_hist: dict[str, list[str]] = {}
-            all_stats: dict[str, list] = {}
-            group_metrics = []
-            n_deduped = 0
-            for gi, buckets in enumerate(groups):
-                manifest_path = os.path.join(staging, f"group-{gi:03d}.done.json")
-                geometry = self._geometry(buckets)
-                if self.table.fs.exists(manifest_path):
-                    manifest = json.loads(self.table.fs.read_text(manifest_path))
-                    if self._manifest_valid(manifest, geometry, self.table.path):
-                        all_files.update(manifest["files"])
-                        for b, fl in manifest.get("hist_files", {}).items():
-                            all_hist.setdefault(b, []).extend(fl)
-                        all_stats.update(manifest.get("file_stats", {}))
-                        group_metrics.append({**manifest["metrics"], "resumed": True})
-                        n_deduped += manifest["metrics"].get("events", 0)
-                        continue
-                g0 = time.monotonic()
-                src = deduped.filter(F.col(LakeTable.BUCKET_COL).isin(buckets))
-                # Only the CURRENT file family joins the merge: history
-                # files are immutable closed versions the merge can never
-                # touch — skipping them halves-or-better the per-batch
-                # scan as history accumulates. read_bucketed exposes the
-                # group's buckets as a catalog bucketed scan so the merge
-                # join adds no Exchange above the table side.
-                if any(
-                    self.table.snapshot.files.get(str(b)) for b in buckets
-                ):
-                    tgt, aligned = self.table.read_bucketed(
-                        family="current", buckets=buckets
-                    )
-                    merged = merge_batch_rows(
-                        tgt, src.drop(LakeTable.BUCKET_COL), batch_id, self.table,
-                    )
-                else:  # no current rows in this group: insert-only projection
-                    merged = insert_only_rows(
-                        src.drop(LakeTable.BUCKET_COL), batch_id, self.table
-                    )
-                    aligned = self.table.spark_aligned
-                tag = f"batch-{batch_id:06d}/group-{gi:03d}"
-                files, hist_delta = self.table.write_data_files_split(
-                    self.table.with_bucket(merged), tag,
-                    # Skip the write exchange only when the merge inputs
-                    # really were in the bucket layout (bucketed scan +
-                    # bucket_partitioned events, or an insert-only
-                    # projection of the bucket-partitioned batch). When
-                    # read_bucketed fell back to a plain scan the join
-                    # output's layout is the planner's choice — cluster
-                    # it, or the partitionBy write can emit partitions x
-                    # buckets small files. See LakeTable._bucket_clustered.
-                    assume_bucket_partitioned=aligned,
-                )
-                lineage_rows, fstats = self._lineage_rows(files, hist_delta)
-                n_src = sum(bucket_counts[b] for b in buckets)
-                n_deduped += n_src
-                metrics = {
-                    "group": gi,
-                    "buckets": buckets,
-                    "events": n_src,
-                    "rows_written": {str(k): v for k, v in lineage_rows.items()},
-                    "secs": round(time.monotonic() - g0, 3),
-                }
-                self.table.fs.replace_text(
-                    manifest_path,
-                    json.dumps({
-                        "files": files,
-                        "hist_files": hist_delta,
-                        "file_stats": fstats,
-                        "metrics": metrics,
-                        "geometry": geometry,
-                    }),
-                )
-                all_files.update(files)
-                for b, fl in hist_delta.items():
-                    all_hist.setdefault(b, []).extend(fl)
-                all_stats.update(fstats)
-                group_metrics.append(metrics)
-        finally:
-            deduped.unpersist(blocking=False)
-
-        before = self.table.snapshot.snapshot_id
-        snap = self.table.commit(
-            new_files_by_bucket=all_files,
-            mode="replace",
-            replaced_buckets=touched,
-            batch_id=batch_id,
-            append_hist_by_bucket=all_hist,
-            new_file_stats=all_stats,
-            summary={"operation": "cdc-apply", "events": n_events},
-        )
-        if snap.snapshot_id == before:
-            # commit() hit its exactly-once guard without flipping: a
-            # duelling driver landed this batch id first. Our salted-
-            # attempt files are unreferenced (expire-swept); the staging
-            # manifests memoize only OUR attempt, so drop them with it.
-            self.table.fs.rmtree(staging)
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        self.table.fs.rmtree(staging)
-        elapsed = time.monotonic() - t0
-        record = {
-            "batch_id": batch_id,
-            "snapshot_id": snap.snapshot_id,
-            "events_in": n_events,
-            "events_null_key": n_null,
-            "events_after_lww": n_deduped,
-            "buckets_touched": len(touched),
-            "groups": group_metrics,
-            "secs": round(elapsed, 3),
-            "events_per_sec": (
-                round((n_events or n_deduped) / elapsed, 1) if elapsed > 0 else None
-            ),
-        }
-        self._maybe_auto_compact(record)
-        self.table.fs.makedirs(os.path.dirname(self._metrics_path(batch_id)))
-        self.table.fs.replace_text(self._metrics_path(batch_id), json.dumps(record))
-        self._emit_status(record)
-        return record
-
-    def _apply_single_group(
-        self, events, deduped, batch_id, obs, t0
-    ) -> dict:
-        """One-pass apply of a batch that spans (potentially) every bucket.
-        Same checkpoint manifest + atomic commit as the grouped path; the
-        resume granularity is the whole batch. ``obs`` is the lazy input-
-        accounting observation — it resolves off the merge write itself
-        (the batch's ONLY pass over the events), and the null-key error
-        policy is enforced before the atomic commit."""
-        staging = self._staging_dir(batch_id)
-        self.table.fs.makedirs(staging)
-        manifest_path = os.path.join(staging, "group-000.done.json")
-        geometry = self._geometry(None)
-        resumed = False
-        hist_delta: dict[str, list[str]] = {}
-        fstats: dict[str, list] = {}
-        if self.table.fs.exists(manifest_path):
-            manifest = json.loads(self.table.fs.read_text(manifest_path))
-            if self._manifest_valid(manifest, geometry, self.table.path):
-                files = manifest["files"]
-                hist_delta = manifest.get("hist_files", {})
-                fstats = manifest.get("file_stats", {})
-                metrics = {**manifest["metrics"], "resumed": True}
-                resumed = True
-        if not resumed:
-            g0 = time.monotonic()
-            # Current family only — history is append-only and immutable,
-            # so the merge neither reads nor rewrites it (the r02 shape
-            # re-read AND re-wrote every closed version every batch; at
-            # the 10^10 design point history is the bulk of the table).
-            # Bucketed scan: the full-outer merge join plans with NO
-            # Exchange above the table side, and its output stays
-            # physically bucket-partitioned so the write skips its
-            # repartition too — the batch's only shuffle is the incoming
-            # events' bucket_partitioned exchange in apply_batch. An
-            # empty current family (historical load / bootstrap) skips
-            # the join entirely: insert-only projection.
-            if self.table.snapshot.files:
-                tgt, aligned = self.table.read_bucketed(family="current")
-                merged = merge_batch_rows(
-                    tgt, deduped.drop(LakeTable.BUCKET_COL), batch_id, self.table
-                )
-            else:
-                merged = insert_only_rows(
-                    deduped.drop(LakeTable.BUCKET_COL), batch_id, self.table
-                )
-                aligned = self.table.spark_aligned
-            tag = f"batch-{batch_id:06d}/group-000"
-            files, hist_delta = self.table.write_data_files_split(
-                self.table.with_bucket(merged), tag,
-                assume_bucket_partitioned=aligned,
-            )
-            lineage_rows, fstats = self._lineage_rows(files, hist_delta)
-            metrics = {
-                "group": 0,
-                "buckets": sorted(int(b) for b in set(files) | set(hist_delta)),
-                "events": None,
-                "rows_written": lineage_rows,
-                "secs": round(time.monotonic() - g0, 3),
-            }
-            self.table.fs.replace_text(
-                manifest_path,
-                json.dumps({
-                    "files": files,
-                    "hist_files": hist_delta,
-                    "file_stats": fstats,
-                    "metrics": metrics,
-                    "geometry": geometry,
-                }),
-            )
-        # The write above (or, on resume, a forced pass — the manifest
-        # made the write a no-op, so nothing materialized the events yet)
-        # resolves the lazy accounting; the error policy still fires
-        # before the commit below, so no bad state becomes visible.
-        n_events, n_null = self._resolve_accounting(
-            obs, batch_id, ensure=events if resumed else None
-        )
-
-        # Every pre-existing CURRENT-family bucket was merged (and may
-        # have lost all its rows to deletes), so the replaced set is
-        # old ∪ new current buckets; history is append-only.
-        replaced = set(self.table.snapshot.files) | set(files)
-        before = self.table.snapshot.snapshot_id
-        snap = self.table.commit(
-            new_files_by_bucket=files,
-            mode="replace",
-            replaced_buckets=replaced,
-            batch_id=batch_id,
-            append_hist_by_bucket=hist_delta,
-            new_file_stats=fstats,
-            summary={"operation": "cdc-apply", "events": n_events},
-        )
-        if snap.snapshot_id == before:
-            # Exactly-once no-op (duelling driver won this batch id) —
-            # see the grouped path; our files/manifests are ours alone.
-            self.table.fs.rmtree(staging)
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        self.table.fs.rmtree(staging)
-        elapsed = time.monotonic() - t0
-        record = {
-            "batch_id": batch_id,
-            "snapshot_id": snap.snapshot_id,
-            "events_in": n_events,
-            "events_null_key": n_null,
-            "events_after_lww": None,
-            "buckets_touched": len(replaced),
-            "groups": [metrics],
-            "secs": round(elapsed, 3),
-            "events_per_sec": round(n_events / elapsed, 1) if n_events and elapsed > 0 else None,
-        }
-        self._maybe_auto_compact(record)
-        self.table.fs.makedirs(os.path.dirname(self._metrics_path(batch_id)))
-        self.table.fs.replace_text(self._metrics_path(batch_id), json.dumps(record))
-        self._emit_status(record)
-        return record
 
     # ------------------------------------------------- snapshot handover
     def apply_snapshot_batch(
@@ -691,6 +657,11 @@ class CdcOrchestrator:
         - the remainder inserts as new current rows via the normal
           family-split write + exactly-once snapshot commit.
 
+        A 'D' event fails the chunk before anything is written (counted
+        in the eager input accounting). A chunk killed after its seal is
+        recomputed when a tail batch committed in between: the sealed
+        insert set was planned against the older state.
+
         One-shot bootstrap path: the two anti-joins cost one scan of the
         tail-touched keys (file-skipped, O(changed since watermark)) and
         one column-pruned scan of live keys — acceptable at handover
@@ -698,94 +669,37 @@ class CdcOrchestrator:
         batch watermark recorded when the snapshot read began (0 for a
         table born at handover).
         """
-        t0 = time.monotonic()
-        if batch_id <= 0:
-            raise ValueError(f"batch_id must be >= 1, got {batch_id}")
-        self.table.refresh()
-        if self.table.is_batch_committed(batch_id):
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        from tpc_di_spark.cdc.mor import pending_delta_batches
         from tpc_di_spark.lake.changelog import changed_keys_since
 
-        if pending_delta_batches(self.table):
-            # changed_keys_since reads DATA files; keys touched only in
-            # uncompacted MoR deltas are invisible to it, so applying a
-            # chunk now could resurrect a delta-deleted key.
-            raise ValueError(
-                "pending MoR delta batches exist — compact them before "
-                "applying a snapshot chunk (their touched keys are not "
-                "yet visible to changed_keys_since)"
-            )
-
-        self._maybe_evolve(events, batch_id)
-        events = align_events(events, self.table)
-        events, n_events, n_null = self._account_input(events, batch_id)
-        # A snapshot is a set of point-in-time READS — 'D' cannot occur.
-        # Its presence means tail events were routed into the snapshot
-        # path, where their deletes would be silently ignored: refuse.
-        if events.filter(F.col("cdc_flag") == F.lit("D")).limit(1).count():
-            raise ValueError(
-                "snapshot batch contains 'D' events — deletes belong on "
-                "the tail path (apply_batch); routing them here would "
-                "silently drop them"
-            )
-        deduped = lww_dedup(
-            self.table.bucket_partitioned(events), self.table.key_cols
-        )
         key = list(self.table.key_cols)
-        touched = changed_keys_since(self.table, tail_start_batch)
-        src = deduped.join(touched.select(*key), on=key, how="left_anti")
-        if self.table.snapshot.files:
-            live = (
-                self.table.read(family="current")
-                .filter(F.col("is_current"))
-                .select(*key)
+
+        def plan(src: DataFrame, _buckets):
+            touched = changed_keys_since(self.table, tail_start_batch)
+            src = src.join(touched.select(*key), on=key, how="left_anti")
+            if self.table.snapshot.files:
+                live = self.table.read(family="current").filter(F.col("is_current"))
+                src = src.join(live.select(*key), on=key, how="left_anti")
+            # Not bucket-aligned: the anti-joins' output layout is the
+            # planner's choice — let the write re-cluster the (small)
+            # surviving insert set.
+            rows = insert_only_rows(src.drop(LakeTable.BUCKET_COL), batch_id, self.table)
+            return rows, False
+
+        def extra(record: dict) -> dict:
+            inserted = sum(
+                n for g in record["groups"] for n in g["rows_written"].values()
             )
-            src = src.join(live, on=key, how="left_anti")
-        rows = insert_only_rows(src.drop(LakeTable.BUCKET_COL), batch_id, self.table)
-        tag = f"batch-{batch_id:06d}/snapshot"
-        # assume_bucket_partitioned=False: the anti-joins' output layout
-        # is the planner's choice — let the write re-cluster the (small)
-        # surviving insert set.
-        files, _hist = self.table.write_data_files_split(
-            self.table.with_bucket(rows), tag
-        )
-        lineage_rows, fstats = self._lineage_rows(files, {})
-        before = self.table.snapshot.snapshot_id
-        snap = self.table.commit(
-            new_files_by_bucket=files,
-            mode="append",
-            batch_id=batch_id,
-            new_file_stats=fstats,
-            summary={
-                "operation": "snapshot-handover",
-                "events": n_events,
+            return {
                 "tail_start_batch": tail_start_batch,
-            },
-        )
-        if snap.snapshot_id == before:
-            # Exactly-once no-op: a duelling driver landed this chunk's
-            # batch id first; our salted-attempt files are orphans.
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        elapsed = time.monotonic() - t0
-        inserted = sum(lineage_rows.values()) if lineage_rows else 0
-        record = {
-            "batch_id": batch_id,
-            "snapshot_id": snap.snapshot_id,
-            "events_in": n_events,
-            "events_null_key": n_null,
-            "rows_inserted": inserted,
-            "rows_dropped_stale_or_present": (
-                (n_events - inserted) if n_events is not None else None
-            ),
-            "buckets_touched": len(files),
-            "tail_start_batch": tail_start_batch,
-            "secs": round(elapsed, 3),
-        }
-        self.table.fs.makedirs(os.path.dirname(self._metrics_path(batch_id)))
-        self.table.fs.replace_text(self._metrics_path(batch_id), json.dumps(record))
-        self._emit_status(record)
-        return record
+                "rows_inserted": inserted,
+                "rows_dropped_stale_or_present": record["events_in"] - inserted,
+            }
+
+        return self._apply(events, batch_id, _Op(
+            "snapshot-handover", plan, mode="append",
+            refuse_pending=True,
+            summary={"tail_start_batch": tail_start_batch}, extra=extra,
+        ))
 
     def apply_late_batch(
         self,
@@ -829,27 +743,15 @@ class CdcOrchestrator:
         snapshot handover: pending deltas hide touched keys from
         ``changed_keys_since``, so compaction must run first.
         """
-        from tpc_di_spark.lake.table import CommitConflict
-
         t0 = time.monotonic()
-        if batch_id <= 0:
-            raise ValueError(f"batch_id must be >= 1, got {batch_id}")
-        self.table.refresh()
-        if self.table.is_batch_committed(batch_id):
-            return {"batch_id": batch_id, "skipped": "already-committed"}
-        from tpc_di_spark.cdc.mor import pending_delta_batches
-
-        if pending_delta_batches(self.table):
-            raise ValueError(
-                "pending MoR delta batches exist — compact them before "
-                "applying a late batch (their touched keys are not yet "
-                "visible to the supersession check)"
-            )
-        self._maybe_evolve(events, batch_id)
-        events = align_events(events, self.table)
+        aligned = self._enter(events, batch_id, refuse_pending=True)
+        if aligned is None:
+            return _skipped(batch_id)
         key = list(self.table.key_cols)
-        touched = self._superseded_keys(batch_id)
-        marked = events.join(
+        from tpc_di_spark.lake.changelog import changed_keys_since_exact
+
+        touched = changed_keys_since_exact(self.table, batch_id)
+        marked = aligned.join(
             touched.withColumn("_superseded", F.lit(True)), on=key, how="left"
         )
         marked.persist()
@@ -861,89 +763,25 @@ class CdcOrchestrator:
                     os.path.join(quarantine_dir, f"batch-{batch_id:06d}")
                 )
             fresh = marked.filter(F.col("_superseded").isNull()).drop("_superseded")
-            try:
-                record = self.apply_batch(fresh, batch_id, retries=0)
-            except CommitConflict:
-                # A concurrent commit landed between our changed-keys read
-                # and the merge CAS: the supersession set itself is stale
-                # (the new batch may outrank this one), so the WHOLE late
-                # apply recomputes, not just the merge.
-                if retries <= 0:
-                    raise
-                marked.unpersist(blocking=False)
-                staging = self._staging_dir(batch_id)
-                if self.table.fs.exists(staging):
-                    self.table.fs.rmtree(staging)
-                self.table.refresh()
-                return self.apply_late_batch(
-                    events, batch_id, quarantine_dir, retries=retries - 1
-                )
+            return self._apply(fresh, batch_id, _Op(
+                "cdc-apply", self._merge_plan(batch_id), grouped=True,
+                extra=lambda record: {
+                    "late_apply": True,
+                    "events_dropped_superseded": n_stale,
+                    "secs": round(time.monotonic() - t0, 3),
+                },
+            ))
+        except CommitConflict:
+            # A concurrent commit landed between our changed-keys read
+            # and the merge CAS: the supersession set itself is stale
+            # (the new batch may outrank this one), so the WHOLE late
+            # apply recomputes, not just the merge.
+            if retries <= 0:
+                raise
         finally:
             marked.unpersist(blocking=False)
-        if record.get("skipped"):
-            return record
-        record = {
-            **record,
-            "late_apply": True,
-            "events_dropped_superseded": n_stale,
-            "secs": round(time.monotonic() - t0, 3),
-        }
-        self.table.fs.replace_text(self._metrics_path(batch_id), json.dumps(record))
-        return record
-
-    def _superseded_keys(self, batch_id: int) -> DataFrame:
-        """EXACT set of keys changed by batches with id > ``batch_id``.
-
-        `changed_keys_since` is the fast path, but it OVER-approximates
-        once a compaction/rebucket erased closing tags ("closing batch
-        unknown" files are included) — safe for consumers that merely
-        re-pull extra keys, WRONG here where membership DROPS the late
-        batch's events (over-approximation = data loss). When such a
-        rewrite exists anywhere in retained history, rebuild the set
-        per-batch instead: created keys from row-level batch_id (exact
-        across compaction) plus closed keys from each batch's committing
-        snapshot (time travel; ``strict=True`` raises when retention has
-        expired it — a missed close would resurrect a newer delete, so
-        "repair window passed" must be an error, not a silent wrong
-        answer)."""
-        from tpc_di_spark.lake.changelog import (
-            _closing_batch_of,
-            changed_keys_since,
-            rows_closed_in,
-            rows_created_in,
-        )
-
-        key = list(self.table.key_cols)
-        # Gate the fast path STRUCTURALLY, not via retained snapshot
-        # history: a compaction erases closing tags from the files it
-        # rewrites, and once expire_snapshots drops the compaction
-        # snapshot the history-based trigger goes blind — the fast path
-        # would then include unknown-closing-tag files wholesale and
-        # wrongly supersede (silently drop) legitimate late events. Any
-        # history file whose rel carries no closing-batch tag forces the
-        # exact per-batch reconstruction, regardless of what history
-        # still shows.
-        tags_intact = all(
-            _closing_batch_of(rel) is not None
-            for fl in self.table.snapshot.hist_files.values()
-            for rel in fl
-        )
-        if tags_intact:
-            return changed_keys_since(self.table, batch_id).select(*key)
-        after = [
-            b for b in sorted(self.table.snapshot.committed_batches) if b > batch_id
-        ]
-        touched = None
-        for b in after:
-            part = rows_created_in(self.table, b).select(*key).unionByName(
-                rows_closed_in(
-                    self.table, b, include_tombstones=True, strict=True
-                ).select(*key)
-            )
-            touched = part if touched is None else touched.unionByName(part)
-        if touched is None:  # nothing committed after the late id
-            return self.table.read(family="current").select(*key).limit(0)
-        return touched.distinct()
+        self.table.fs.rmtree(staging_dir(self.table.path, batch_id))
+        return self.apply_late_batch(events, batch_id, quarantine_dir, retries - 1)
 
     def _emit_status(self, record: dict) -> None:
         if self.messages_log is None:
@@ -969,51 +807,26 @@ class CdcOrchestrator:
         in the SAME atomic commit, pop it from the pending-delta list.
         New row versions carry the ORIGINAL batch id, so the materialized
         lineage is identical to an all-CoW replay. Killed mid-compaction:
-        nothing committed, the delta stays pending, and the retry writes
-        a fresh salted attempt (the killed attempt's files are
-        unreferenced orphans, expire-swept)."""
-        import time as _time
-
+        nothing committed and the delta stays pending; the retry reuses
+        the sealed output while the table has not moved, else recomputes
+        (the killed attempt's files are unreferenced orphans, expire-
+        swept)."""
         from tpc_di_spark.cdc.mor import pending_delta_batches
 
-        t0 = _time.monotonic()
-        deduped = lww_dedup(
-            self.table.bucket_partitioned(align_events(events, self.table)),
-            self.table.key_cols,
-        )
-        tgt, aligned = self.table.read_bucketed(family="current")
-        merged = merge_batch_rows(tgt, deduped, orig_batch_id, self.table)
-        tag = f"compact-delta-{orig_batch_id:06d}"
-        files, hist_delta = self.table.write_data_files_split(
-            self.table.with_bucket(merged), tag,
-            assume_bucket_partitioned=aligned,
-        )
-        replaced = set(self.table.snapshot.files) | set(files)
+        def properties() -> dict:
+            remaining = [
+                b for b in pending_delta_batches(self.table)
+                if b["batch_id"] != orig_batch_id
+            ]
+            return {**self.table.snapshot.properties, "delta_batches": remaining}
 
-        props = dict(self.table.snapshot.properties)
-        remaining = [
-            b for b in pending_delta_batches(self.table) if b["batch_id"] != orig_batch_id
-        ]
-        props["delta_batches"] = remaining
-        snap = self.table.commit(
-            new_files_by_bucket=files,
-            mode="replace",
-            replaced_buckets=replaced,
-            batch_id=None,
-            append_hist_by_bucket=hist_delta,
-            summary={"operation": "compact-delta", "delta_batch": orig_batch_id},
-            new_properties=props,
-        )
-        return {
-            "delta_batch": orig_batch_id,
-            "snapshot_id": snap.snapshot_id,
-            "secs": round(_time.monotonic() - t0, 3),
-        }
+        return self._apply(events, orig_batch_id, _Op(
+            "compact-delta", self._merge_plan(orig_batch_id), claims_batch=False,
+            summary={"delta_batch": orig_batch_id}, properties=properties,
+        ))
 
     # --------------------------------------------------------------- replay
-    def replay(
-        self, batches: Sequence[tuple[int, DataFrame]]
-    ) -> list[dict]:
+    def replay(self, batches: Sequence[tuple[int, DataFrame]]) -> list[dict]:
         """Apply batches strictly in order (the reference's Batch2→Batch3
         sequencing, report §4.3). Already-committed batches are skipped."""
         return [self.apply_batch(df, bid) for bid, df in batches]

@@ -48,11 +48,13 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
 from tpc_di_spark.lake.fs import CasConflict, LocalFS, TableFS
 from tpc_di_spark.lake.table import _META, _VERSION, LakeTable, Snapshot
+from tpc_di_spark.session import spark_map
 
 _STATE_FMT = "cat-%012d.json"
 
@@ -330,21 +332,16 @@ def apply_batch_atomic(
     """
     txn = catalog.transaction()
     records = {}
-    items = sorted(work.items())
-    if len(items) > 1:
-        # Distinct tables, distinct commit chains: the per-table applies
-        # are independent Spark jobs — overlap them (same reasoning and
-        # crash-retry story as apply_batch_atomic_wap's staging pool;
-        # exactly-once skip of already-committed tables is per-table
-        # state and unaffected by ordering).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(len(items), 4)) as ex:
-            applied = list(
-                ex.map(lambda it: (it[0], it[1][0].apply_batch(it[1][1], batch_id)), items)
-            )
-    else:
-        applied = [(n, o.apply_batch(ev, batch_id)) for n, (o, ev) in items]
+    # Distinct tables, distinct commit chains: the per-table applies are
+    # independent Spark jobs — overlap them (same reasoning and
+    # crash-retry story as apply_batch_atomic_wap's staging pool;
+    # exactly-once skip of already-committed tables is per-table state
+    # and unaffected by ordering).
+    applied = spark_map(
+        catalog.spark,
+        lambda it: (it[0], it[1][0].apply_batch(it[1][1], batch_id)),
+        sorted(work.items()),
+    )
     for name, rec in applied:
         records[name] = rec
         txn.stage(name, work[name][0].table)
@@ -393,22 +390,14 @@ def apply_batch_atomic_wap(
         wap = WapBranch.begin(orch.table, f"xt-batch-{batch_id:06d}")
         return name, wap, orch.for_table(wap.staged).apply_batch(events, batch_id)
 
-    items = sorted(work.items())
-    if len(items) > 1:
-        # Each table's slice stages onto its OWN branch of its OWN table
-        # (distinct ref files, scratch dirs, bucketed-view names), so the
-        # per-table applies are independent Spark jobs — overlap them
-        # instead of paying one merge-write latency per table serially.
-        # Crash-retry is unchanged: a failure leaves the finished tables
-        # staged on their branches, and re-calling resumes every branch
-        # at its staged head exactly as the serial loop did.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(len(items), 4)) as ex:
-            staged = list(ex.map(_stage, items))
-    else:
-        staged = [_stage(i) for i in items]
-    for name, wap, rec in staged:
+    # Each table's slice stages onto its OWN branch of its OWN table
+    # (distinct ref files, scratch dirs, bucketed-view names), so the
+    # per-table applies are independent Spark jobs — overlap them instead
+    # of paying one merge-write latency per table serially. Crash-retry
+    # is unchanged: a failure leaves the finished tables staged on their
+    # branches, and re-calling resumes every branch at its staged head
+    # exactly as the serial loop did.
+    for name, wap, rec in spark_map(catalog.spark, _stage, sorted(work.items())):
         branches[name] = wap
         records[name] = rec
 
@@ -416,8 +405,8 @@ def apply_batch_atomic_wap(
 
     # Flatten every table's checks into ONE concurrent pool (audits are
     # independent read-only counts over staged state; serially they
-    # dominated multi-table publish wall time), then reassemble results
-    # in the exact per-table order the serial loop produced.
+    # dominated multi-table publish wall time), then regroup results by
+    # table in the exact per-table order the serial loop produced.
     published: set[str] = set()
     pending: list[tuple[str, WapBranch, Callable]] = []
     for name, wap in sorted(branches.items()):
@@ -433,20 +422,18 @@ def apply_batch_atomic_wap(
             pending.append((name, wap, c))
     check_results = _run_checks([(w, c) for _n, w, c in pending])
 
-    all_results: list[dict] = []
-    failed = False
-    for name, _wap in sorted(branches.items()):
-        if name in published:
-            all_results.append(
-                {"check": "already-published", "ok": True, "table": name}
-            )
-            continue
-        for (n, _w, _c), r in zip(pending, check_results):
-            if n == name:
-                all_results.append({**r, "table": name})
-                failed = failed or not r["ok"]
-
-    if failed:
+    by_table: dict[str, list[dict]] = {
+        name: (
+            [{"check": "already-published", "ok": True, "table": name}]
+            if name in published
+            else []
+        )
+        for name in sorted(branches)
+    }
+    for (name, _w, _c), r in zip(pending, check_results):
+        by_table[name].append({**r, "table": name})
+    all_results = [r for rs in by_table.values() for r in rs]
+    if not all(r["ok"] for r in all_results):
         for wap in branches.values():
             wap.abort()
         raise AuditFailed(all_results)
@@ -455,9 +442,7 @@ def apply_batch_atomic_wap(
     for name, wap in sorted(branches.items()):
         wap.publish()
         txn.stage(name, wap.base)
-        records[name]["wap_audit"] = [
-            r for r in all_results if r["table"] == name
-        ]
+        records[name]["wap_audit"] = by_table[name]
     txn.commit(
         {
             "operation": "cdc-multi-table-wap",

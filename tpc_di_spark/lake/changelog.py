@@ -300,3 +300,48 @@ def changed_keys_since(
         return table.spark.createDataFrame([], key_schema)
     out = created if closed is None else (closed if created is None else created.unionByName(closed))
     return out.distinct()
+
+
+def changed_keys_since_exact(table: LakeTable, after_batch_id: int) -> DataFrame:
+    """EXACT set of keys changed by batches with id > ``after_batch_id``
+    (the late-batch supersession set, ``CdcOrchestrator.apply_late_batch``).
+
+    :func:`changed_keys_since` is the fast path, but it OVER-approximates
+    once a compaction/rebucket erased closing tags ("closing batch
+    unknown" files are included) — safe for consumers that merely
+    re-pull extra keys, WRONG where membership DROPS events
+    (over-approximation = data loss). When such a rewrite exists, the
+    set is rebuilt per batch instead: created keys from row-level
+    batch_id (exact across compaction) plus closed keys from each batch's
+    committing snapshot (time travel; ``strict=True`` raises when
+    retention has expired it — a missed close would resurrect a newer
+    delete, so "repair window passed" must be an error, not a silent
+    wrong answer)."""
+    key = list(table.key_cols)
+    # Gate the fast path STRUCTURALLY, not via retained snapshot
+    # history: a compaction erases closing tags from the files it
+    # rewrites, and once expire_snapshots drops the compaction
+    # snapshot the history-based trigger goes blind — the fast path
+    # would then include unknown-closing-tag files wholesale and
+    # wrongly supersede (silently drop) legitimate late events. Any
+    # history file whose rel carries no closing-batch tag forces the
+    # exact per-batch reconstruction, regardless of what history
+    # still shows.
+    tags_intact = all(
+        _closing_batch_of(rel) is not None
+        for fl in table.snapshot.hist_files.values()
+        for rel in fl
+    )
+    if tags_intact:
+        return changed_keys_since(table, after_batch_id).select(*key)
+    touched = None
+    for b in sorted(table.snapshot.committed_batches):
+        if b <= after_batch_id:
+            continue
+        part = rows_created_in(table, b).select(*key).unionByName(
+            rows_closed_in(table, b, include_tombstones=True, strict=True).select(*key)
+        )
+        touched = part if touched is None else touched.unionByName(part)
+    if touched is None:  # nothing committed after the checkpoint
+        return table.read(family="current").select(*key).limit(0)
+    return touched.distinct()

@@ -849,7 +849,7 @@ class LakeTable:
         reclaimed by ``expire_snapshots`` (min-age guarded), exactly like
         crash orphans; a resumed run that finds a valid checkpoint
         manifest reuses the previous attempt's files instead of
-        rewriting (orchestrator ``_manifest_valid``).
+        rewriting (orchestrator ``_sealed``).
         """
         out_dir = os.path.join(
             self.path, _DATA, commit_tag, f"attempt-{uuid.uuid4().hex[:8]}"

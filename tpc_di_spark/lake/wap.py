@@ -287,13 +287,11 @@ class WapBranch:
                 )
             except (FileNotFoundError, OSError):
                 staged_only = set()
+            from tpc_di_spark.cdc.orchestrator import metrics_path, staging_dir
+
             for bid in staged_only:
-                fs.rmtree(
-                    os.path.join(self.base.path, "_staging", f"batch-{bid:06d}")
-                )
-                mp = os.path.join(
-                    self.base.path, "_metrics", f"batch-{bid:06d}.json"
-                )
+                fs.rmtree(staging_dir(self.base.path, bid))
+                mp = metrics_path(self.base.path, bid)
                 if fs.exists(mp):
                     fs.remove(mp)
         self._drop_ref()
@@ -382,13 +380,11 @@ def _run_checks(pairs: Sequence[tuple["WapBranch", Callable]]) -> list[dict]:
     raises re-raises here exactly as the serial loop did (after the
     other in-flight checks finish; checks are read-only so the extra
     completed work is harmless)."""
-    if len(pairs) <= 1:
-        return [c(w) for w, c in pairs]
-    from concurrent.futures import ThreadPoolExecutor
+    if not pairs:
+        return []
+    from tpc_di_spark.session import spark_map
 
-    with ThreadPoolExecutor(max_workers=min(len(pairs), 4)) as ex:
-        futs = [ex.submit(c, w) for w, c in pairs]
-        return [f.result() for f in futs]
+    return spark_map(pairs[0][0].staged.spark, lambda p: p[1](p[0]), pairs)
 
 
 # ------------------------------------------------------------ audit checks

@@ -110,9 +110,7 @@ def main(argv=None) -> int:
             )
 
             wap = WapBranch.begin(table, f"batch-{bid}")
-            rec = CdcOrchestrator(
-                wap.staged, buckets_per_group=args.buckets_per_group
-            ).apply_batch(df, bid)
+            rec = orch.for_table(wap.staged).apply_batch(df, bid)
             try:
                 audit = wap.audit(
                     [unique_business_key(), not_null(table.key_cols)]

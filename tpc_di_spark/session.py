@@ -104,3 +104,26 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def spark_map(spark: SparkSession, fn, items) -> list:
+    """``[fn(x) for x in items]`` with the calls overlapped on a thread
+    pool of at most 4, results in input order; the first failure re-raises
+    after the in-flight calls finish.
+
+    Pool threads start with no Spark local properties, so a pooled job
+    would lose the caller's job group and description, and the
+    ``sql.streaming.queryId`` the orchestrator reads to detect a
+    micro-batch. Every call is wrapped by ``inheritable_thread_target``
+    separately: each gets its OWN copy of the caller's properties, so
+    concurrent SQL executions never share (and clobber) one."""
+    items = list(items)
+    if len(items) <= 1:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=min(len(items), 4)) as ex:
+        futs = [ex.submit(inheritable_thread_target(spark)(fn), x) for x in items]
+        return [f.result() for f in futs]

@@ -8,6 +8,13 @@ replay model. This module is the optional continuous front-end: a
 path shares the exactly-once/LWW/SCD2 machinery instead of reimplementing
 it, and Spark's checkpointing handles source progress while the
 LakeTable's committed-batch ids make re-delivered micro-batches no-ops.
+
+Input accounting needs no streaming switch: a foreachBatch function runs
+with the ``sql.streaming.queryId`` local property set, and the
+orchestrator then counts each micro-batch with one eager aggregate job
+instead of its default Observation (CollectMetrics breaks on a
+micro-batch plan). The catalog and WAP thread pools carry the property
+into their workers (``session.spark_map``).
 """
 
 from __future__ import annotations
@@ -102,11 +109,6 @@ def start_cdc_stream(
             "must land somewhere an operator can inspect and replay"
         )
 
-    # Micro-batch DataFrames break the orchestrator's lazy Observation
-    # accounting (CollectMetrics inside an incremental-execution plan
-    # stack-overflows the stream thread) — use the eager one-job path.
-    orchestrator.eager_accounting = True
-
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         bid = base_batch_id + int(epoch_id)
         if transform is not None:
@@ -123,13 +125,7 @@ def start_cdc_stream(
             from tpc_di_spark.lake.wap import AuditFailed, WapBranch
 
             wap = WapBranch.begin(orchestrator.table, f"epoch-{int(epoch_id):06d}")
-            staged_orch = CdcOrchestrator(
-                wap.staged,
-                buckets_per_group=orchestrator.buckets_per_group,
-                count_input=orchestrator.count_input,
-            )
-            staged_orch.eager_accounting = True  # micro-batch plan (see above)
-            staged_orch.apply_batch(batch_df, bid)
+            orchestrator.for_table(wap.staged).apply_batch(batch_df, bid)
             try:
                 wap.audit(audit_checks)
                 wap.publish()
@@ -187,9 +183,6 @@ def start_cdc_multi_stream(
     catalog readers meanwhile stay on the previous trigger's snapshots.
     """
     from tpc_di_spark.lake.catalog import apply_batch_atomic
-
-    for _orch, _route in work.values():
-        _orch.eager_accounting = True  # micro-batch plan (see start_cdc_stream)
 
     def apply(batch_df: DataFrame, epoch_id: int) -> None:
         bid = base_batch_id + int(epoch_id)
