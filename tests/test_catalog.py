@@ -123,6 +123,32 @@ def test_pooled_applies_keep_caller_job_group(spark, tmp_path):
     assert seen == ["caller-group"] * len(orchs)
 
 
+def test_pool_stops_queued_calls_after_first_failure(spark):
+    """apply_batch_atomic and WAP audits run through session.spark_map:
+    once one call fails, the calls still queued must never start (a
+    failed multi-table publish stops applying sibling tables)."""
+    import threading
+    import time
+
+    from tpc_di_spark.session import spark_map
+
+    ran, lock = [], threading.Lock()
+
+    def call(i):
+        with lock:
+            ran.append(i)
+        if i == 0:
+            raise RuntimeError("item 0 failed")
+        time.sleep(0.3)
+        return i
+
+    with pytest.raises(RuntimeError, match="item 0 failed"):
+        spark_map(spark, call, range(6))
+    assert 0 in ran
+    assert not {4, 5} & set(ran)
+    assert spark_map(spark, lambda i: i * i, range(6)) == [0, 1, 4, 9, 16, 25]
+
+
 def test_crash_between_table_commit_and_catalog_flip_resumes(spark, tmp_path):
     cat, orchs = _fresh_catalog(spark, tmp_path)
     ev1 = _events(spark, 1)

@@ -203,10 +203,11 @@ def test_bootstrap_after_compaction(spark, tmp_path):
 
 def test_expired_checkpoint_snapshot_forces_fallback(spark, tmp_path):
     """ADVICE r04 (low): when expire_snapshots pruned the checkpoint's
-    snapshot, _needs_per_batch_fallback can no longer PROVE no compaction
+    snapshot, needs_per_batch_fallback can no longer PROVE no compaction
     happened — it must warn and take the fallback instead of assuming."""
     import warnings
 
+    from tpc_di_spark.lake.changelog import needs_per_batch_fallback
     from tpc_di_spark.lake.maintenance import compact, expire_snapshots
 
     table, orch = _make(spark, tmp_path)
@@ -223,5 +224,5 @@ def test_expired_checkpoint_snapshot_forces_fallback(spark, tmp_path):
     assert consumer._load_ckpt()["snapshot_id"] not in reachable
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        assert consumer._needs_per_batch_fallback(consumer._load_ckpt())
+        assert needs_per_batch_fallback(table, consumer._load_ckpt())
     assert any("expired" in str(x.message) for x in w)

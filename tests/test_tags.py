@@ -86,16 +86,45 @@ def test_table_stats_surface(spark, tmp_path):
     assert s["snapshots_on_disk"] >= 2
 
 
-def test_rollback_to_restores_state_and_batch_ids(spark, tmp_path):
+def _view(spark, table, path):
+    """An IncrementalView and its total live row count."""
+    from tpc_di_spark.lake.incremental_view import IncrementalView
+
+    view = IncrementalView(table, path, ["role"], [("count_live", None, "live_turns")])
+    return view, lambda: sum(r["live_turns"] for r in view.state().collect())
+
+
+def _derived(spark, table, path):
+    """An identity DerivedTableSync and its child's live row count."""
+    from tpc_di_spark.cdc import current_state
+    from tpc_di_spark.cdc.orchestrator import bootstrap_table
+    from tpc_di_spark.lake.derived import DerivedTableSync
+    from tpc_di_spark.schemas import TRANSCRIPT_SCHEMA
+
+    child = bootstrap_table(spark, path + "-child", TRANSCRIPT_SCHEMA, num_buckets=4)
+    sync = DerivedTableSync(table, child, path)
+    return sync, lambda: current_state(child.refresh()).count()
+
+
+def _rows(spark, *rows):
+    return spark.createDataFrame(
+        list(rows),
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp",
+    )
+
+
+@pytest.mark.parametrize("make_consumer", [_view, _derived], ids=["view", "derived"])
+def test_rollback_to_restores_state_and_batch_ids(spark, tmp_path, make_consumer):
     """Rollback reproduces the old state atomically; rolled-back batch
-    ids can re-apply (corrected data); consumers whose state includes
-    rolled-back effects refuse with a rebuild instruction."""
+    ids can re-apply (corrected data); every changelog consumer whose
+    state includes rolled-back effects refuses with a rebuild
+    instruction."""
     import datetime as dt
 
     from tpc_di_spark.cdc import CdcOrchestrator, current_state
     from tpc_di_spark.cdc.generator import historical_batch
     from tpc_di_spark.cdc.orchestrator import bootstrap_table
-    from tpc_di_spark.lake.incremental_view import IncrementalView
     from tpc_di_spark.schemas import TRANSCRIPT_SCHEMA
 
     table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4)
@@ -104,17 +133,11 @@ def test_rollback_to_restores_state_and_batch_ids(spark, tmp_path):
     good_sid = table.snapshot.snapshot_id
     n_good = current_state(table).count()
 
-    bad = spark.createDataFrame(
-        [("U", 5_000, "conv-000001", 1, "user", "POISONED", dt.datetime(2024, 2, 1))],
-        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
-        "role string, text string, ts timestamp",
-    )
+    bad = _rows(spark, ("U", 5_000, "conv-000001", 1, "user", "POISONED", dt.datetime(2024, 2, 1)))
     orch.apply_batch(bad, 2)
     assert current_state(table).filter("text = 'POISONED'").count() == 1
 
-    view = IncrementalView(
-        table, str(tmp_path / "v"), ["role"], [("count_live", None, "live_turns")]
-    )
+    view, _ = make_consumer(spark, table, str(tmp_path / "v"))
     view.refresh()  # consumed {1, 2}
 
     snap = table.rollback_to(good_sid)
@@ -130,11 +153,7 @@ def test_rollback_to_restores_state_and_batch_ids(spark, tmp_path):
         view.refresh()
 
     # corrected batch re-applies under the original id
-    fixed = spark.createDataFrame(
-        [("U", 5_001, "conv-000001", 1, "user", "fixed", dt.datetime(2024, 2, 2))],
-        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
-        "role string, text string, ts timestamp",
-    )
+    fixed = _rows(spark, ("U", 5_001, "conv-000001", 1, "user", "fixed", dt.datetime(2024, 2, 2)))
     orch.apply_batch(fixed, 2)
     assert current_state(table).filter("text = 'fixed'").count() == 1
 
@@ -147,10 +166,43 @@ def test_rollback_to_restores_state_and_batch_ids(spark, tmp_path):
 
     # A FRESH consumer built after the re-apply folds the corrected
     # lineage and is not haunted by the old invalidation.
-    view2 = IncrementalView(
-        table, str(tmp_path / "v2"), ["role"], [("count_live", None, "live_turns")]
-    )
+    view2, live_rows = make_consumer(spark, table, str(tmp_path / "v2"))
     view2.refresh()
-    total = sum(r["live_turns"] for r in view2.state().collect())
-    assert total == current_state(table).count()
+    assert live_rows() == current_state(table).count()
     view2.refresh()  # idempotent no-op with the recorded epoch
+
+
+@pytest.mark.parametrize("make_consumer", [_view, _derived], ids=["view", "derived"])
+def test_undone_rollback_keeps_invalidation_log(spark, tmp_path, make_consumer):
+    """Undoing a rollback removes no batch id, but must still carry the
+    rollback-invalidation log forward: resetting it to the target's
+    (empty) log hid the NEXT rollback from a consumer whose checkpoint
+    had already seen one entry, and the consumer then silently kept a
+    batch that a corrected re-apply had replaced."""
+    import datetime as dt
+
+    from tpc_di_spark.cdc import CdcOrchestrator
+    from tpc_di_spark.cdc.orchestrator import bootstrap_table
+    from tpc_di_spark.schemas import TRANSCRIPT_SCHEMA
+
+    table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)
+    s0 = table.snapshot.snapshot_id
+    orch.apply_batch(_rows(spark, ("I", 1, "c1", 0, "user", "v1", dt.datetime(2024, 1, 1))), 1)
+    s1 = table.snapshot.snapshot_id
+    orch.apply_batch(_rows(spark, ("I", 2, "c2", 0, "assistant", "v2", dt.datetime(2024, 1, 2))), 2)
+    s2 = table.snapshot.snapshot_id
+
+    table.rollback_to(s1)
+    consumer, _ = make_consumer(spark, table, str(tmp_path / "c"))
+    consumer.refresh()  # consumed {1}, rollback epoch 1
+    table.rollback_to(s2)  # undo: removes nothing
+    assert len(table.snapshot.properties["rollback.invalidations"]) == 1
+    table.rollback_to(s0)  # removes the consumed batch 1
+    orch.apply_batch(
+        _rows(spark, ("I", 3, "c1", 0, "assistant", "fixed", dt.datetime(2024, 1, 3))), 1
+    )
+    with pytest.raises(ValueError, match="rolled back"):
+        consumer.refresh()
+    with pytest.raises(ValueError, match="engine-maintained"):
+        table.set_properties({"rollback.invalidations": None})

@@ -23,6 +23,9 @@ Iceberg-style incremental reads over the LakeTable snapshot log:
   touched after a checkpoint batch: the handshake a downstream
   incremental consumer needs to re-pull just the affected
   conversations.
+- ``ChangelogConsumer`` / ``ChangelogRange`` — the one checkpoint →
+  rollback guard → range lifecycle behind every consumer
+  (``IncrementalView``, ``DerivedTableSync``, ``IvfIndexSync``).
 
 Reference parity note: TPC-DI has no changelog consumer — its
 incremental batches are INPUTS only (`Incremental1/*.py` read Batch2
@@ -33,8 +36,11 @@ replay.
 
 from __future__ import annotations
 
+import json
 import os
 import re
+from dataclasses import dataclass
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -208,7 +214,7 @@ def rows_closed_since(
     since ``after_batch_id`` was committed (rewrites erase the closing
     tags); callers that cannot guarantee it must loop
     :func:`rows_closed_in` per batch, which recovers exactness through
-    the committing snapshot (see ``lake/incremental_agg.py``). Delete
+    the committing snapshot (see :meth:`ChangelogRange.closed`). Delete
     tombstones are excluded by default, as in :func:`rows_closed_in`."""
     snap = snapshot or table.snapshot
     rels = [
@@ -345,3 +351,209 @@ def changed_keys_since_exact(table: LakeTable, after_batch_id: int) -> DataFrame
     if touched is None:  # nothing committed after the checkpoint
         return table.read(family="current").select(*key).limit(0)
     return touched.distinct()
+
+
+# -- the consumer core --------------------------------------------------------
+# Every changelog consumer (IncrementalView / ConvStatsConsumer,
+# DerivedTableSync / IvfIndexSync) runs the same lifecycle: load the
+# checkpoint, guard against rollbacks, plan the unconsumed batch range
+# below the MoR horizon, fold that range into its own state, then flip the
+# checkpoint. The contract is documented once, in README "Downstream
+# fan-out"; consumers supply only their fold.
+
+CKPT_FILE = "_ckpt.json"
+
+
+def consumed_batch_set(ck: dict | None, committed: list[int]) -> set[int]:
+    """The batch ids a consumer has already folded into its state.
+
+    Checkpoints record the explicit SET, not just the max: out-of-order
+    tail repair (``CdcOrchestrator.apply_late_batch``) can commit a batch
+    id BELOW a consumer's watermark, and a max-only checkpoint would skip
+    it forever — silent divergence from recompute. Legacy max-only
+    checkpoints reconstruct the set as every committed id at-or-below the
+    recorded max (exact unless a late batch landed before the first
+    refresh under set-aware code)."""
+    if ck is None:
+        return set()
+    if "consumed" in ck:
+        return set(ck["consumed"])
+    return {b for b in committed if b <= ck["batch_id"]}
+
+
+def check_rollback_invalidations(
+    table: LakeTable, ck: dict | None, consumed: set[int]
+) -> int:
+    """The one rollback guard: refuse when a rollback removed a batch the
+    consumer already folded. Two cases, one check:
+
+    - the id is no longer committed (``consumed ⊄ committed``);
+    - a corrected batch has since RE-APPLIED under the same id, so the id
+      is committed again and the consumer would skip it as consumed while
+      keeping the POISONED effects. ``rollback_to`` appends every
+      rollback's removed ids to the table's ``rollback.invalidations``
+      log; the checkpoint records how many entries it has seen.
+
+    Returns the current log length for the next checkpoint."""
+    invs = table.snapshot.properties.get("rollback.invalidations", [])
+    removed = consumed - set(table.snapshot.committed_batches)
+    for inv in invs[(ck or {}).get("rollback_epoch", 0):]:
+        removed.update(inv.get("removed_batches", []))
+    hit = sorted(consumed & removed)
+    if hit:
+        raise ValueError(
+            f"table was rolled back past consumed batches {hit} (and "
+            "possibly re-applied under the same ids): this consumer's "
+            "state includes the rolled-back effects while the table's "
+            "lineage replaced them — delete the consumer's state dir (and "
+            "a derived child table) and rebuild (rollback_to docs)"
+        )
+    return len(invs)
+
+
+def needs_per_batch_fallback(table: LakeTable, ck: dict | None) -> bool:
+    """Per-batch time-travel path trigger, three conditions: compaction
+    since checkpoint, bootstrap over an already-compacted table, or an
+    expired checkpoint snapshot (ADVICE r04). Compaction/rebucket rewrites
+    history files and erases their closing-batch tags, so the one-scan
+    :func:`rows_closed_since` would under-count."""
+    hist = table.history()
+    since = ck["snapshot_id"] if ck else -1
+    if ck is not None and not any(h["snapshot_id"] <= since for h in hist):
+        import warnings
+
+        warnings.warn(
+            f"consumer checkpoint snapshot {since} was expired from "
+            f"{table.path}; forcing the per-batch time-travel "
+            "refresh path (exact only within snapshot retention)",
+            stacklevel=3,
+        )
+        return True
+    return any(
+        h["snapshot_id"] > since
+        and h["summary"].get("operation") in ("compact", "rebucket")
+        for h in hist
+    )
+
+
+@dataclass(frozen=True)
+class ChangelogRange:
+    """One refresh's unconsumed committed batches, ``pending`` (empty when
+    the consumer is up to date), and how to read their changelog."""
+
+    table: LakeTable
+    snap: Snapshot
+    ck: dict | None
+    consumed: frozenset[int]
+    pending: tuple[int, ...]
+    pending_mor: tuple[int, ...]
+    rollback_epoch: int
+    fallback: bool
+
+    @property
+    def last(self) -> int:
+        return max(self.consumed) if self.consumed else 0
+
+    @property
+    def upto(self) -> int:
+        return self.pending[-1]
+
+    @property
+    def contiguous(self) -> bool:
+        # A LATE id below the watermark (apply_late_batch) makes the
+        # pending set non-contiguous with the consumed one: the fast
+        # (last, upto] range reads would re-consume already-folded
+        # batches (double-counting deltas), so fall to exact per-batch
+        # reads of exactly the pending ids.
+        return not self.consumed or self.pending[0] > self.last
+
+    def _per_batch(self, read) -> DataFrame:
+        return reduce(
+            DataFrame.unionByName, [read(self.table, b, self.snap) for b in self.pending]
+        )
+
+    def created(self) -> DataFrame:
+        """Every row version the pending batches created."""
+        if self.contiguous:
+            return rows_created_since(self.table, self.last, self.snap, upto_batch_id=self.upto)
+        return self._per_batch(rows_created_in)
+
+    def closed(self) -> DataFrame:
+        """Every version the pending batches closed. Exact: after a
+        compaction the per-batch reads time-travel to each committing
+        snapshot — an over-approximated close would retract a live,
+        untouched row."""
+        if self.fallback or not self.contiguous:
+            return self._per_batch(rows_closed_in)
+        return rows_closed_since(self.table, self.last, self.snap, upto_batch_id=self.upto)
+
+    def checkpoint(self, **extras) -> dict:
+        """The checkpoint body after folding this range, plus the
+        consumer's own fields (``state_rel``, ``moved_since_retrain``)."""
+        return {
+            "batch_id": self.upto,
+            "snapshot_id": self.snap.snapshot_id,
+            **extras,
+            "consumed": sorted(self.consumed | set(self.pending)),
+            "rollback_epoch": self.rollback_epoch,
+        }
+
+
+class ChangelogConsumer:
+    """Checkpoint I/O and range planning for a consumer of ``source``'s
+    changelog; subclasses fold :meth:`_plan`'s range into their state and
+    flip the checkpoint with :meth:`_save_ckpt`."""
+
+    def __init__(self, source: LakeTable, state_dir: str) -> None:
+        self.source = source
+        self.state_dir = state_dir
+        self.fs = source.fs
+        self.fs.makedirs(state_dir)
+
+    def _ckpt_path(self) -> str:
+        return os.path.join(self.state_dir, CKPT_FILE)
+
+    def _load_ckpt(self) -> dict | None:
+        if not self.fs.exists(self._ckpt_path()):
+            return None
+        return json.loads(self.fs.read_text(self._ckpt_path()))
+
+    def _save_ckpt(self, body: dict, first: bool) -> None:
+        """Flip the checkpoint atomically (rename on POSIX, conditional
+        PUT on object stores) — the consumer's commit point."""
+        text = json.dumps(body)
+        if first and not self.fs.exists(self._ckpt_path()):
+            self.fs.write_text(self._ckpt_path(), text)
+        else:
+            self.fs.replace_text(self._ckpt_path(), text)
+
+    def _plan(self) -> ChangelogRange:
+        """Refresh the source, guard, and plan every committed batch below
+        the merge-on-read MATERIALIZATION HORIZON: a pending delta batch's
+        rows are invisible to the changelog until compaction materializes
+        them, so consumption stops at the oldest one."""
+        from tpc_di_spark.cdc.mor import pending_delta_batches
+
+        self.source.refresh()
+        snap = self.source.snapshot
+        committed = sorted(snap.committed_batches)
+        ck = self._load_ckpt()
+        consumed = consumed_batch_set(ck, committed)
+        epoch = check_rollback_invalidations(self.source, ck, consumed)
+        pending_mor = [d["batch_id"] for d in pending_delta_batches(self.source)]
+        horizon = min(pending_mor) if pending_mor else None
+        pending = [
+            b
+            for b in committed
+            if b not in consumed and (horizon is None or b < horizon)
+        ]
+        return ChangelogRange(
+            table=self.source,
+            snap=snap,
+            ck=ck,
+            consumed=frozenset(consumed),
+            pending=tuple(pending),
+            pending_mor=tuple(pending_mor),
+            rollback_epoch=epoch,
+            fallback=bool(pending) and needs_per_batch_fallback(self.source, ck),
+        )

@@ -32,10 +32,10 @@ Per refresh, for the unconsumed committed batch range ``(last, upto]``:
 
 Everything is DataFrame ops — the refresh costs one file-skipped
 changelog scan of the range plus one key-partitioned merge into the
-child: O(changed rows), independent of either table's size. Exactness
-across compaction and merge-on-read pending deltas follows the same
-guard/horizon contract as :mod:`tpc_di_spark.lake.incremental_view`
-(this module reuses its fallback trigger).
+child: O(changed rows), independent of either table's size. The range,
+checkpoint and guards are the shared consumer contract
+(:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
+"Downstream fan-out").
 
 Schema evolution propagates: when a projected parent column first
 appears (e.g. ``tool``), the child orchestrator's evolve step adds it to
@@ -44,26 +44,16 @@ the child schema before the merge — no operator intervention.
 
 from __future__ import annotations
 
-import json
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from tpc_di_spark.cdc.apply import LINEAGE_COLS
 from tpc_di_spark.cdc.orchestrator import CdcOrchestrator
-from tpc_di_spark.lake.changelog import (
-    rows_closed_in,
-    rows_closed_since,
-    rows_created_in,
-    rows_created_since,
-)
+from tpc_di_spark.lake.changelog import ChangelogConsumer
 from tpc_di_spark.lake.table import LakeTable
 
-_CKPT = "_ckpt.json"
 
-
-class DerivedTableSync:
+class DerivedTableSync(ChangelogConsumer):
     """Maintain ``child = π(σ(parent))`` from the parent's changelog.
 
     ``filter_expr`` is a SQL predicate over the parent's payload columns
@@ -90,69 +80,39 @@ class DerivedTableSync:
         state_dir: str,
         filter_expr: str | None = None,
         select_exprs: dict[str, str] | None = None,
-        child_orchestrator: CdcOrchestrator | None = None,
     ) -> None:
         if list(child.key_cols) != list(parent.key_cols):
             raise ValueError(
                 f"child key {child.key_cols} must equal parent key "
                 f"{parent.key_cols} (row-level sync, no re-keying)"
             )
+        super().__init__(parent, state_dir)
         self.parent = parent
         self.child = child
-        self.state_dir = state_dir
         self.filter_expr = filter_expr
         self.select_exprs = dict(select_exprs or {})
         reserved = set(parent.key_cols) | {"ts", "cdc_flag", "cdc_dsn", "batch_id"}
         bad = reserved & set(self.select_exprs)
         if bad:
             raise ValueError(f"{sorted(bad)} pass through implicitly; do not remap")
-        # Default child orchestrator runs the SINGLE-GROUP fast path: a
+        # The child orchestrator runs the SINGLE-GROUP fast path: a
         # refresh consumes a whole committed batch range whose keys are
         # hash-spread over every bucket, so bucket-pruned grouping buys
         # nothing while its touched-bucket discovery job re-computes the
         # changelog-derivation DAG once more. Single-group applies the
         # child batch in exactly ONE pass (derive -> dedup shuffle ->
-        # merge -> write). Callers with genuinely sparse parents can still
-        # pass a grouped ``child_orchestrator``.
-        self.orch = child_orchestrator or CdcOrchestrator(
-            child, buckets_per_group=child.num_buckets
-        )
-        self.fs = parent.fs
-        self.fs.makedirs(state_dir)
-
-    # -- checkpoint (same shape as IncrementalView's) -----------------------
-
-    def _ckpt_path(self) -> str:
-        return os.path.join(self.state_dir, _CKPT)
-
-    def _load_ckpt(self) -> dict | None:
-        if not self.fs.exists(self._ckpt_path()):
-            return None
-        return json.loads(self.fs.read_text(self._ckpt_path()))
-
-    # -- refresh ------------------------------------------------------------
+        # merge -> write).
+        self.orch = CdcOrchestrator(child, buckets_per_group=child.num_buckets)
 
     def _payload_cols(self, snap) -> list[str]:
         return [f.name for f in snap.schema.fields if f.name not in LINEAGE_COLS]
 
-    def _ckpt_payload(
-        self, upto: int, snap, ck: dict | None, consumed: list[int] | None = None
-    ) -> dict:
-        """Checkpoint body — subclasses extend (e.g. IvfIndexSync's
-        cumulative drift counter rides the same atomic flip). ``consumed``
-        is the full consumed-id SET after this refresh (late-batch
-        awareness, ``incremental_view.consumed_batch_set``)."""
-        out = {"batch_id": upto, "snapshot_id": snap.snapshot_id}
-        if consumed is not None:
-            out["consumed"] = sorted(consumed)
-        rb = getattr(self, "_rb_epoch", None)
-        if rb is not None:
-            out["rollback_epoch"] = rb
-        return out
-
-    def _after_apply(self, rec: dict, events: DataFrame) -> None:
-        """Hook between the child apply and the checkpoint flip (see
-        refresh); the base sync needs nothing here."""
+    def _after_apply(self, out: dict, events: DataFrame, ck: dict | None) -> dict:
+        """Hook between the child apply and the checkpoint flip: may add
+        fields to the refresh record ``out`` and returns extra checkpoint
+        fields that ride the same atomic flip (IvfIndexSync's drift
+        counter). The base sync needs nothing here."""
+        return {}
 
     def _upsert_events(self, matched: DataFrame, payload: list[str]) -> DataFrame:
         """Map the range's live, filter-passing row versions to child 'I'
@@ -175,74 +135,20 @@ class DerivedTableSync:
         """Catch the child up through every committed parent batch below
         the merge-on-read materialization horizon; returns a metrics
         record. No-op when nothing new is committed."""
-        self.parent.refresh()
-        snap = self.parent.snapshot
-        committed = sorted(snap.committed_batches)
-        ck = self._load_ckpt()
-
-        from tpc_di_spark.cdc.mor import pending_delta_batches
-        from tpc_di_spark.lake.incremental_view import (
-            check_rollback_invalidations,
-            consumed_batch_set,
-            needs_per_batch_fallback,
-        )
-
-        consumed = consumed_batch_set(ck, committed)
-        rolled = consumed - set(committed)
-        if rolled:
-            raise ValueError(
-                f"parent table was rolled back past consumed batches "
-                f"{sorted(rolled)}: the child holds their effects while "
-                "the parent no longer does — delete the child table and "
-                "state dir and rebuild (rollback_to docs)"
-            )
-        # Catches the case the guard above cannot: a rolled-back batch
-        # RE-APPLIED under its original id (consumed ⊆ committed again).
-        self._rb_epoch = check_rollback_invalidations(self.parent, ck, consumed)
-        last = max(consumed) if consumed else 0
-        pending_mor = [d["batch_id"] for d in pending_delta_batches(self.parent)]
-        horizon = min(pending_mor) if pending_mor else None
-        pending = [
-            b
-            for b in committed
-            if b not in consumed and (horizon is None or b < horizon)
-        ]
-        if not pending:
-            return {"skipped": "up-to-date", "batch_id": last}
-        upto = pending[-1]
+        rng = self._plan()
+        if not rng.pending:
+            return {"skipped": "up-to-date", "batch_id": rng.last}
+        upto = rng.upto
         # Late-repair ids below the watermark (apply_late_batch) make the
-        # pending set non-contiguous: range reads would re-consume folded
-        # batches, so read exactly the pending ids per batch. Key safety:
-        # a late parent batch only creates/closes rows for keys NO higher
-        # batch touched (its supersession rule), so the child events from
-        # a late refresh never collide with child rows written by
-        # higher-numbered refreshes — the normal child apply is exact.
-        contiguous = not consumed or pending[0] > last
-
+        # range non-contiguous and it reads exactly the pending ids per
+        # batch. Key safety: a late parent batch only creates/closes rows
+        # for keys NO higher batch touched (its supersession rule), so the
+        # child events from a late refresh never collide with child rows
+        # written by higher-numbered refreshes — the normal child apply
+        # is exact.
         keys = list(self.parent.key_cols)
-        payload = self._payload_cols(snap)
-
-        if contiguous:
-            created = rows_created_since(
-                self.parent, last, snap, upto_batch_id=upto
-            )
-        else:
-            created = None
-            for b in pending:
-                part = rows_created_in(self.parent, b, snap)
-                created = part if created is None else created.unionByName(part)
-        # Exactness guard shared with IncrementalView: compaction erases
-        # closing tags, so fall back to per-batch time-travel closes. The
-        # delete set MUST be exact — an over-approximated close would
-        # emit a spurious child delete for a live, untouched parent key.
-        needs_fallback = needs_per_batch_fallback(self.parent, ck)
-        if needs_fallback or not contiguous:
-            closed = None
-            for b in pending:
-                part = rows_closed_in(self.parent, b, snap)
-                closed = part if closed is None else closed.unionByName(part)
-        else:
-            closed = rows_closed_since(self.parent, last, snap, upto_batch_id=upto)
+        payload = self._payload_cols(rng.snap)
+        created, closed = rng.created(), rng.closed()
 
         # Current version per key at `upto`: max created batch in range.
         w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
@@ -291,22 +197,12 @@ class DerivedTableSync:
         # orchestrator skips already-committed batches), so a crash here
         # re-derives the same events and no-ops; the checkpoint flips
         # only after the apply committed.
-        rec = self.orch.apply_batch(events, batch_id=upto)
-        # Subclass hook, called after the apply and before the checkpoint
-        # flip: IvfIndexSync resolves its lazy drift observation here
-        # (and forces a pass when the apply was an already-committed
-        # no-op, so the observation cannot block).
-        self._after_apply(rec, events)
-        new_ck = json.dumps(
-            self._ckpt_payload(upto, snap, ck, consumed=consumed | set(pending))
-        )
-        if ck is None and not self.fs.exists(self._ckpt_path()):
-            self.fs.write_text(self._ckpt_path(), new_ck)
-        else:
-            self.fs.replace_text(self._ckpt_path(), new_ck)
-        return {
+        out = {
             "batch_id": upto,
-            "consumed_batches": pending,
-            "fallback": needs_fallback,
-            "apply": rec,
+            "consumed_batches": list(rng.pending),
+            "fallback": rng.fallback,
+            "apply": self.orch.apply_batch(events, batch_id=upto),
         }
+        extras = self._after_apply(out, events, rng.ck)
+        self._save_ckpt(rng.checkpoint(**extras), first=rng.ck is None)
+        return out

@@ -35,23 +35,10 @@ state — O(changed + state), independent of table age or lineage depth.
 At 10^10 rows, bucket the state table by ``conv_id`` hash to make the
 merge join co-located.
 
-Compaction interplay: a compaction/rebucket AFTER the consumer's
-checkpoint rewrites history files and erases their closing-batch path
-tags, so the one-scan closed-side read would under-count. The consumer
-detects compaction risk — any compact/rebucket since its checkpoint, a
-FIRST refresh over an already-compacted table, or an expired checkpoint
-snapshot — and falls back to per-batch
-:func:`~tpc_di_spark.lake.changelog.rows_closed_in`, which recovers
-exactness by time-traveling to each batch's committing snapshot — the
-consumer is therefore EXACT at any checkpoint cadence within the
-snapshot-retention window (Iceberg's incremental-read contract).
-
-Crash safety / exactly-once: each refresh writes a fresh
-``state-b{N}`` parquet directory, then atomically flips ``_ckpt.json``
-through the table's :class:`~tpc_di_spark.lake.fs.TableFS` (rename on
-POSIX, conditional PUT on object stores). A crash between the two
-leaves the old checkpoint pointing at the old state; the re-run
-recomputes the same delta from the same snapshot range — idempotent.
+Checkpointing, crash safety, the rollback guard, the merge-on-read
+horizon and the compaction fallback are the shared consumer contract
+(:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
+"Downstream fan-out").
 """
 
 from __future__ import annotations
@@ -76,9 +63,7 @@ class ConvStatsConsumer(IncrementalView):
     """Incrementally-maintained per-conversation stats over a transcript
     ``LakeTable`` (see module docstring for semantics and guarantees)."""
 
-    def __init__(
-        self, table: LakeTable, state_dir: str, state_partitions: int = 1
-    ) -> None:
+    def __init__(self, table: LakeTable, state_dir: str) -> None:
         super().__init__(
             table,
             state_dir,
@@ -89,5 +74,4 @@ class ConvStatsConsumer(IncrementalView):
                 ("count_closed", None, "versions_closed"),
                 ("max_created", "ts", "last_event_ts"),
             ],
-            state_partitions=state_partitions,
         )

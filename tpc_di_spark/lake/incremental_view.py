@@ -55,32 +55,26 @@ A key enters the state with its first created version and stays after
 its last live row dies (its monotone counters still carry information);
 filter ``count_live > 0`` at read time for live-only marts.
 
-Exactness across compaction, merge-on-read pending deltas, crash
-safety, and exactly-once checkpointing all follow the contract
-documented in :mod:`tpc_di_spark.lake.incremental_agg` — the two share
-this module's machinery (``ConvStatsConsumer`` is the fixed-spec
-original, kept as the q49 contract surface).
+Checkpointing, the rollback guard, the merge-on-read horizon and the
+compaction fallback are the shared consumer contract
+(:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
+"Downstream fan-out"); this module adds the aggregate fold
+(``ConvStatsConsumer`` is the fixed-spec original, kept as the q49
+contract surface).
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
-from tpc_di_spark.lake.changelog import (
-    rows_closed_in,
-    rows_closed_since,
-    rows_created_in,
-    rows_created_since,
-)
+from tpc_di_spark.lake.changelog import ChangelogConsumer
 from tpc_di_spark.lake.table import LakeTable
 
-_CKPT = "_ckpt.json"
 _VC = "_versions_created"  # hidden membership counter, always maintained
 
 _KINDS = (
@@ -98,81 +92,7 @@ _KINDS = (
 _LIVE_EXTREMES = ("max_live", "min_live")
 
 
-def needs_per_batch_fallback(table: LakeTable, ck: dict | None) -> bool:
-    """Per-batch time-travel path trigger, three conditions: compaction
-    since checkpoint, bootstrap over an already-compacted table, or an
-    expired checkpoint snapshot (ADVICE r04). Shared by every changelog
-    consumer whose range reads need the closing tags intact
-    (:class:`IncrementalView`, ``lake/derived.DerivedTableSync``)."""
-    hist = table.history()
-    since = ck["snapshot_id"] if ck else -1
-    if ck is not None and not any(h["snapshot_id"] <= since for h in hist):
-        import warnings
-
-        warnings.warn(
-            f"consumer checkpoint snapshot {since} was expired from "
-            f"{table.path}; forcing the per-batch time-travel "
-            "refresh path (exact only within snapshot retention)",
-            stacklevel=3,
-        )
-        return True
-    return any(
-        h["snapshot_id"] > since
-        and h["summary"].get("operation") in ("compact", "rebucket")
-        for h in hist
-    )
-
-
-def check_rollback_invalidations(
-    table, ck: dict | None, consumed: set[int]
-) -> int:
-    """Refuse when a rollback since this consumer's checkpoint removed a
-    batch the consumer already folded — EVEN IF a corrected batch has
-    since re-applied under the same id (the ``consumed ⊆ committed``
-    guard alone is defeated by exactly that workflow: the id is
-    committed again, so the consumer would skip it as already-consumed
-    and silently keep the POISONED effects). ``rollback_to`` appends
-    every rollback's removed batch ids to the table's
-    ``rollback.invalidations`` log; the checkpoint records how many
-    entries it has seen. Returns the current log length for the next
-    checkpoint. Shared by every changelog consumer (IncrementalView,
-    DerivedTableSync)."""
-    invs = table.snapshot.properties.get("rollback.invalidations", [])
-    seen = (ck or {}).get("rollback_epoch", 0)
-    removed: set[int] = set()
-    for inv in invs[seen:]:
-        removed.update(inv.get("removed_batches", []))
-    hit = sorted(consumed & removed)
-    if hit:
-        raise ValueError(
-            f"table was rolled back past consumed batches {hit} (and "
-            "possibly re-applied under the same ids): this consumer's "
-            "state includes the rolled-back effects while the table's "
-            "lineage replaced them — delete the state dir and rebuild "
-            "(rollback_to docs)"
-        )
-    return len(invs)
-
-
-def consumed_batch_set(ck: dict | None, committed: list[int]) -> set[int]:
-    """The batch ids this consumer has already folded into its state.
-
-    Checkpoints record the explicit SET, not just the max: out-of-order
-    tail repair (``CdcOrchestrator.apply_late_batch``) can commit a batch
-    id BELOW a consumer's watermark, and a max-only checkpoint would skip
-    it forever — silent divergence from recompute. Legacy max-only
-    checkpoints reconstruct the set as every committed id at-or-below the
-    recorded max (exact unless a late batch landed before the first
-    refresh under set-aware code). Shared by every changelog consumer
-    (:class:`IncrementalView`, ``lake/derived.DerivedTableSync``)."""
-    if ck is None:
-        return set()
-    if "consumed" in ck:
-        return set(ck["consumed"])
-    return {b for b in committed if b <= ck["batch_id"]}
-
-
-class IncrementalView:
+class IncrementalView(ChangelogConsumer):
     """An incrementally-maintained aggregate view over a transcript
     :class:`LakeTable`.
 
@@ -197,11 +117,7 @@ class IncrementalView:
         state_dir: str,
         key_cols: Sequence[str],
         aggs: Sequence[tuple[str, str | None, str]],
-        state_partitions: int = 1,
     ) -> None:
-        # state_partitions sizes the state parquet: 1 at test scale; at
-        # 10^10 rows use ~state_bytes/128MB so successive refresh joins
-        # co-locate on the key hash.
         for kind, expr, name in aggs:
             if kind not in _KINDS:
                 raise ValueError(f"unknown aggregate kind {kind!r} for {name!r}")
@@ -209,23 +125,10 @@ class IncrementalView:
                 raise ValueError(f"{kind} takes no expression ({name!r})")
             if not kind.startswith("count") and expr is None:
                 raise ValueError(f"{kind} requires an expression ({name!r})")
+        super().__init__(table, state_dir)
         self.table = table
-        self.state_dir = state_dir
         self.key_cols = list(key_cols)
         self.aggs = list(aggs)
-        self.state_partitions = state_partitions
-        self.fs = table.fs
-        self.fs.makedirs(state_dir)
-
-    # -- checkpoint ---------------------------------------------------------
-
-    def _ckpt_path(self) -> str:
-        return os.path.join(self.state_dir, _CKPT)
-
-    def _load_ckpt(self) -> dict | None:
-        if not self.fs.exists(self._ckpt_path()):
-            return None
-        return json.loads(self.fs.read_text(self._ckpt_path()))
 
     # -- state --------------------------------------------------------------
 
@@ -292,8 +195,13 @@ class IncrementalView:
 
     # -- refresh ------------------------------------------------------------
 
-    def _needs_per_batch_fallback(self, ck: dict | None) -> bool:
-        return needs_per_batch_fallback(self.table, ck)
+    def _keys_match(self, a: str, b: str) -> Column:
+        """NULL-safe equality of every key column between the join sides
+        aliased ``a`` and ``b``."""
+        cond = F.lit(True)
+        for k in self.key_cols:
+            cond = cond & F.col(f"{a}.{k}").eqNullSafe(F.col(f"{b}.{k}"))
+        return cond
 
     def _null_safe_outer(
         self, left: DataFrame, right: DataFrame, right_cols: list[str]
@@ -305,9 +213,6 @@ class IncrementalView:
         instead of folding into one. Aggregation keys treat NULL as a
         value (SQL GROUP BY semantics) — the merge join must too."""
         l, r = left.alias("l"), right.alias("r")
-        cond = F.lit(True)
-        for k in self.key_cols:
-            cond = cond & F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
         keys = [
             F.coalesce(F.col(f"l.{k}"), F.col(f"r.{k}")).alias(k)
             for k in self.key_cols
@@ -315,7 +220,7 @@ class IncrementalView:
         left_cols = [
             F.col(f"l.{c}") for c in left.columns if c not in self.key_cols
         ]
-        return l.join(r, cond, "full_outer").select(
+        return l.join(r, self._keys_match("l", "r"), "full_outer").select(
             *keys, *left_cols, *[F.col(f"r.{c}") for c in right_cols]
         )
 
@@ -471,10 +376,7 @@ class IncrementalView:
         dirty_keys = merged.filter(any_dirty).select(*self.key_cols).distinct()
         # Null-safe semi join: restrict the live scan to dirty groups.
         l, r = live.alias("l"), dirty_keys.alias("r")
-        cond = F.lit(True)
-        for k in self.key_cols:
-            cond = cond & F.col(f"l.{k}").eqNullSafe(F.col(f"r.{k}"))
-        affected = l.join(r, cond, "left_semi")
+        affected = l.join(r, self._keys_match("l", "r"), "left_semi")
         rec_aggs = [
             (F.max if kind == "max_live" else F.min)(F.expr(expr)).alias(
                 f"_r_{name}"
@@ -486,9 +388,6 @@ class IncrementalView:
         ).agg(*rec_aggs)
 
         m, rr = merged.alias("m"), rec.alias("rr")
-        cond2 = F.lit(True)
-        for k in self.key_cols:
-            cond2 = cond2 & F.col(f"m.{k}").eqNullSafe(F.col(f"rr.{k}"))
         out_cols = []
         for c in merged.columns:
             if c.startswith("_dirty_"):
@@ -504,52 +403,15 @@ class IncrementalView:
                 )
             else:
                 out_cols.append(F.col(f"m.{c}").alias(c))
-        return m.join(rr, cond2, "left").select(*out_cols)
+        return m.join(rr, self._keys_match("m", "rr"), "left").select(*out_cols)
 
     def refresh(self) -> DataFrame:
         """Catch the view up through every committed batch; returns it.
         Reads ONLY the changelog of the unconsumed batch range; calling
         again with nothing new committed is a no-op."""
-        self.table.refresh()
-        snap = self.table.snapshot
-        committed = sorted(snap.committed_batches)
-        ck = self._load_ckpt()
-        consumed = consumed_batch_set(ck, committed)
-        rolled = consumed - set(committed)
-        if rolled:
-            raise ValueError(
-                f"table was rolled back past consumed batches "
-                f"{sorted(rolled)}: this view's state includes their "
-                "effects while the table no longer does — delete the "
-                "state dir and rebuild (rollback_to docs)"
-            )
-        # Catches the case the guard above cannot: a rolled-back batch
-        # RE-APPLIED under its original id (consumed ⊆ committed again).
-        rb_epoch = check_rollback_invalidations(self.table, ck, consumed)
-        last_batch = max(consumed) if consumed else 0
-
-        # MATERIALIZATION HORIZON: consume only below the oldest pending
-        # merge-on-read delta batch (its rows are invisible to the
-        # changelog until compaction materializes them — see
-        # incremental_agg module docstring).
-        from tpc_di_spark.cdc.mor import pending_delta_batches
-
-        pending_mor = [d["batch_id"] for d in pending_delta_batches(self.table)]
-        horizon = min(pending_mor) if pending_mor else None
-        pending = [
-            b
-            for b in committed
-            if b not in consumed and (horizon is None or b < horizon)
-        ]
-        if not pending:
+        rng = self._plan()
+        if not rng.pending:
             return self.state()
-        upto = pending[-1]
-        # A LATE id below the watermark (apply_late_batch) makes the
-        # pending set non-contiguous with the consumed one: the fast
-        # (last, upto] range reads would re-consume already-folded
-        # batches (double-counting deltas), so fall to exact per-batch
-        # reads of exactly the pending ids.
-        contiguous = not consumed or pending[0] > last_batch
 
         live_provider = None
         if any(k in _LIVE_EXTREMES for k, _e, _n in self.aggs):
@@ -559,60 +421,37 @@ class IncrementalView:
             # interleaving where the current family runs ahead of the
             # consumable changelog). Refuse loudly — the alternative is
             # a silently drifting extreme.
-            consumed_after = consumed | set(pending)
             beyond = [
                 b
-                for b in committed
-                if b not in consumed_after and b not in pending_mor
+                for b in sorted(rng.snap.committed_batches)
+                if b not in rng.consumed
+                and b not in rng.pending
+                and b not in rng.pending_mor
             ]
             if beyond:
                 raise ValueError(
                     f"max_live/min_live cannot refresh exactly: batches "
                     f"{beyond} are materialized beyond the consumable "
-                    f"horizon {upto} (pending MoR deltas {pending_mor}). "
-                    "Compact the deltas, then refresh."
+                    f"horizon {rng.upto} (pending MoR deltas "
+                    f"{list(rng.pending_mor)}). Compact the deltas, then refresh."
                 )
             live_provider = lambda: (  # noqa: E731
                 self.table.read(family="current").filter(F.col("is_current"))
             )
 
-        if contiguous:
-            created = rows_created_since(
-                self.table, last_batch, snap, upto_batch_id=upto
-            )
-        else:
-            created = None
-            for b in pending:
-                part = rows_created_in(self.table, b, snap)
-                created = part if created is None else created.unionByName(part)
-        if self._needs_per_batch_fallback(ck) or not contiguous:
-            closed = None
-            for b in pending:
-                part = rows_closed_in(self.table, b, snap)
-                closed = part if closed is None else closed.unionByName(part)
-        else:
-            closed = rows_closed_since(self.table, last_batch, snap, upto_batch_id=upto)
-
-        merged = self._merged_state(self._delta_aggs(created, closed), live_provider)
-
-        state_rel = f"state-b{upto:06d}"
-        merged.repartition(self.state_partitions, *self.key_cols).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.state_dir, state_rel))
-        new_ck = json.dumps(
-            {
-                "batch_id": upto,
-                "snapshot_id": snap.snapshot_id,
-                "state_rel": state_rel,
-                "consumed": sorted(consumed | set(pending)),
-                "rollback_epoch": rb_epoch,
-            }
+        merged = self._merged_state(
+            self._delta_aggs(rng.created(), rng.closed()), live_provider
         )
-        if ck is None and not self.fs.exists(self._ckpt_path()):
-            self.fs.write_text(self._ckpt_path(), new_ck)
-        else:
-            self.fs.replace_text(self._ckpt_path(), new_ck)
-        self._prune_old_states(keep=(state_rel, ck["state_rel"] if ck else None))
+        state_rel = f"state-b{rng.upto:06d}"
+        # One state file, partitioned by the view key: enough at test scale;
+        # at 10^10 rows ~state_bytes/128MB files co-locate the refresh joins.
+        merged.repartition(1, *self.key_cols).write.mode("overwrite").parquet(
+            os.path.join(self.state_dir, state_rel)
+        )
+        self._save_ckpt(rng.checkpoint(state_rel=state_rel), first=rng.ck is None)
+        self._prune_old_states(
+            keep=(state_rel, rng.ck["state_rel"] if rng.ck else None)
+        )
         return self.state()
 
     def _prune_old_states(self, keep: tuple) -> None:

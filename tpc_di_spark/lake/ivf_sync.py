@@ -42,7 +42,6 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from tpc_di_spark.cdc.orchestrator import CdcOrchestrator
 from tpc_di_spark.lake.derived import DerivedTableSync
 from tpc_di_spark.lake.table import LakeTable
 from tpc_di_spark.operators.ivf import ivf_assign
@@ -69,15 +68,12 @@ class IvfIndexSync(DerivedTableSync):
         vec_col: str = "embedding",
         centroids: Sequence[Sequence[float]] | None = None,
         retrain_threshold: float = 0.2,
-        child_orchestrator: CdcOrchestrator | None = None,
     ) -> None:
         if len(parent.key_cols) != 1:
             raise ValueError(
                 f"IvfIndexSync needs a single-column key, got {parent.key_cols}"
             )
-        super().__init__(
-            parent, index, state_dir, child_orchestrator=child_orchestrator
-        )
+        super().__init__(parent, index, state_dir)
         self.key = parent.key_cols[0]
         self.vec_col = vec_col
         self.retrain_threshold = retrain_threshold
@@ -95,7 +91,9 @@ class IvfIndexSync(DerivedTableSync):
                 )
             self.centroids = [[float(x) for x in c] for c in centroids]
             self.fs.write_text(cpath, json.dumps({"centroids": self.centroids}))
-        self._pending_stats: dict | None = None
+        # The drift observation of the refresh in flight, set by
+        # _upsert_events and resolved by _after_apply.
+        self._drift_obs = None
 
     # -- hooks into the changelog-consumption loop --------------------------
 
@@ -139,7 +137,7 @@ class IvfIndexSync(DerivedTableSync):
                 ).otherwise(0)
             ).alias("moved"),
         )
-        self._pending_obs = obs
+        self._drift_obs = obs
         return observed.select(
             F.lit("I").alias("cdc_flag"),
             F.col("batch_id").cast("long").alias("cdc_dsn"),
@@ -148,55 +146,32 @@ class IvfIndexSync(DerivedTableSync):
             F.col("ts"),
         )
 
-    def _after_apply(self, rec: dict, events: DataFrame) -> None:
-        """Resolve the drift observation once the apply's job has run.
-        An already-committed (resumed) apply runs no job, so force one
-        pass first — the observation would otherwise block forever."""
-        obs = getattr(self, "_pending_obs", None)
-        if obs is None:
-            return
-        self._pending_obs = None
-        if rec.get("skipped"):
+    def _after_apply(self, out: dict, events: DataFrame, ck: dict | None) -> dict:
+        """Resolve the drift observation once the apply's job has run,
+        report it with the live index size, and carry the cumulative
+        drift counter into the checkpoint. An already-committed (resumed)
+        apply runs no job, so force one pass first — the observation
+        would otherwise block forever."""
+        obs, self._drift_obs = self._drift_obs, None
+        if out["apply"].get("skipped"):
             events.count()
         s = obs.get
-        self._pending_stats = {
-            "assigned": s["assigned"],
-            "reassigned": int(s["moved"] or 0),
-            "reassigned_fraction": (
-                (s["moved"] or 0) / s["existed"] if s["existed"] else 0.0
-            ),
-        }
-
-    def _ckpt_payload(
-        self, upto: int, snap, ck: dict | None, consumed: list[int] | None = None
-    ) -> dict:
-        moved = (ck or {}).get("moved_since_retrain", 0)
-        if self._pending_stats:
-            moved += self._pending_stats["reassigned"]
-        return {
-            **super()._ckpt_payload(upto, snap, ck, consumed=consumed),
-            "moved_since_retrain": moved,
-        }
-
-    def refresh(self) -> dict:
-        self._pending_stats = None
-        rec = super().refresh()
-        if self._pending_stats is not None:
-            rec.update(self._pending_stats)
-            ck = self._load_ckpt() or {}
-            live = (
-                self.child.refresh()
-                .read(family="current")
-                .filter(F.col("is_current"))
-                .count()
-            )
-            moved = ck.get("moved_since_retrain", 0)
-            rec["moved_since_retrain"] = moved
-            rec["index_live_rows"] = live
-            rec["retrain_due"] = bool(
-                live and moved / live >= self.retrain_threshold
-            )
-        return rec
+        moved = (ck or {}).get("moved_since_retrain", 0) + int(s["moved"] or 0)
+        live = (
+            self.child.refresh()
+            .read(family="current")
+            .filter(F.col("is_current"))
+            .count()
+        )
+        out.update(
+            assigned=s["assigned"],
+            reassigned=int(s["moved"] or 0),
+            reassigned_fraction=(s["moved"] or 0) / s["existed"] if s["existed"] else 0.0,
+            moved_since_retrain=moved,
+            index_live_rows=live,
+            retrain_due=bool(live and moved / live >= self.retrain_threshold),
+        )
+        return {"moved_since_retrain": moved}
 
     # -- the explicit O(corpus) path ----------------------------------------
 
@@ -255,6 +230,5 @@ class IvfIndexSync(DerivedTableSync):
         )
         ck = self._load_ckpt()
         if ck is not None:
-            ck["moved_since_retrain"] = 0
-            self.fs.replace_text(self._ckpt_path(), json.dumps(ck))
+            self._save_ckpt({**ck, "moved_since_retrain": 0}, first=False)
         return {"retrained": True, "nlist": len(centroids), "apply": rec}

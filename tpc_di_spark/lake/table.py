@@ -1189,16 +1189,21 @@ class LakeTable:
         # only after the re-apply sees consumed ⊆ committed and silently
         # keeps the poisoned effects. Consumers record how many log
         # entries they have seen (``rollback_epoch``) and refuse when a
-        # later entry names a batch they consumed (incremental_view.
-        # check_rollback_invalidations).
+        # later entry names a batch they consumed (changelog.
+        # check_rollback_invalidations). The parent's log is carried even
+        # when this rollback removes nothing (e.g. it UNDOES an earlier
+        # rollback): restoring the target's older log would shrink it
+        # below a consumer's recorded epoch and hide the next entry.
         removed = sorted(set(parent.committed_batches) - set(old.committed_batches))
+        invs = list(parent.properties.get("rollback.invalidations", []))
         if removed:
-            invs = list(parent.properties.get("rollback.invalidations", []))
             invs.append({
                 "removed_batches": removed,
                 "from_snapshot": parent.snapshot_id,
                 "to_snapshot": snapshot_id,
             })
+        props.pop("rollback.invalidations", None)
+        if invs:
             props["rollback.invalidations"] = invs
         snap = Snapshot(
             snapshot_id=parent.snapshot_id + 1,
@@ -1225,20 +1230,24 @@ class LakeTable:
         return snap
 
     # Properties the engine itself maintains: user writes through
-    # set_properties would corrupt layout/evolution/MoR state.
-    _PROTECTED_PROPS = ("bucket.hash", "column.map", "delta_batches")
+    # set_properties would corrupt layout/evolution/MoR state or the
+    # consumers' rollback guard.
+    _PROTECTED_PROPS = (
+        "bucket.hash", "column.map", "delta_batches", "rollback.invalidations"
+    )
 
     def set_properties(self, updates: dict, batch_id: int | None = None) -> Snapshot:
         """ALTER TABLE SET TBLPROPERTIES: metadata-only commit merging
         ``updates`` into the table properties; a ``None`` value UNSETS
         its key (e.g. retire the Bloom index column before re-pointing
         it). Engine-internal keys (bucket layout, rename map, pending
-        MoR deltas) are refused."""
+        MoR deltas, rollback-invalidation log) are refused."""
         bad = set(updates) & set(self._PROTECTED_PROPS)
         if bad:
             raise ValueError(
                 f"properties {sorted(bad)} are engine-maintained; use the "
-                "dedicated APIs (rebucket / rename_column / compaction)"
+                "dedicated APIs (rebucket / rename_column / compaction / "
+                "rollback_to)"
             )
         props = {
             k: v

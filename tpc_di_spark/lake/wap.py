@@ -197,7 +197,12 @@ class WapBranch:
         raise_on_fail: bool = True,
     ) -> list[dict]:
         """Run checks against the STAGED state (each check returns
-        ``{"check": name, "ok": bool, ...detail}``)."""
+        ``{"check": name, "ok": bool, ...detail}``).
+
+        The checks run CONCURRENTLY on a small thread pool, in no fixed
+        order: a check must not share mutable state with another one or
+        rely on running after it. The built-in checks only read the
+        staged state through ``read()``."""
         results = _run_checks([(self, c) for c in checks])
         if raise_on_fail and any(not r["ok"] for r in results):
             raise AuditFailed(results)
@@ -378,8 +383,7 @@ def _run_checks(pairs: Sequence[tuple["WapBranch", Callable]]) -> list[dict]:
     scale). Submitting them from a small thread pool lets the scheduler
     overlap them — results return in input order, and a check that
     raises re-raises here exactly as the serial loop did (after the
-    other in-flight checks finish; checks are read-only so the extra
-    completed work is harmless)."""
+    other in-flight checks finish; queued checks never start)."""
     if not pairs:
         return []
     from tpc_di_spark.session import spark_map

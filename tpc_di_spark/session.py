@@ -108,8 +108,9 @@ def stop_spark() -> None:
 
 def spark_map(spark: SparkSession, fn, items) -> list:
     """``[fn(x) for x in items]`` with the calls overlapped on a thread
-    pool of at most 4, results in input order; the first failure re-raises
-    after the in-flight calls finish.
+    pool of at most 4, results in input order. On the first failure the
+    queued calls are cancelled (never started) and it re-raises after the
+    in-flight calls finish, so no Spark job outlives the call.
 
     Pool threads start with no Spark local properties, so a pooled job
     would lose the caller's job group and description, and the
@@ -120,10 +121,30 @@ def spark_map(spark: SparkSession, fn, items) -> list:
     items = list(items)
     if len(items) <= 1:
         return [fn(x) for x in items]
-    from concurrent.futures import ThreadPoolExecutor
+    import threading
+    from concurrent.futures import CancelledError, ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
+    failed = threading.Event()
+
+    def call(x):
+        # Checked by the worker itself: the thread that ran the failing
+        # call takes the next queued item before the caller can cancel it.
+        if failed.is_set():
+            raise CancelledError
+        try:
+            return fn(x)
+        except BaseException:
+            failed.set()
+            raise
+
     with ThreadPoolExecutor(max_workers=min(len(items), 4)) as ex:
-        futs = [ex.submit(inheritable_thread_target(spark)(fn), x) for x in items]
-        return [f.result() for f in futs]
+        futs = [ex.submit(inheritable_thread_target(spark)(call), x) for x in items]
+        try:
+            # Skipped calls were queued behind every started one, so the
+            # first failure in input order is a real one.
+            return [f.result() for f in futs]
+        except BaseException:
+            ex.shutdown(cancel_futures=True)
+            raise
