@@ -89,6 +89,42 @@ def test_schema_evolution_applied(replayed):
     assert df.filter((F.col("batch_id") < 3) & F.col("tool").isNotNull()).count() == 0
 
 
+def test_lineage_named_event_column_refused(spark, tmp_path):
+    """An event column named like a lineage column is refused by name
+    BEFORE the evolve commit: no snapshot, schema unchanged (it used to
+    commit an evolve-schema snapshot holding ``is_current`` twice and
+    only then fail on alignment). ``evolve_schema`` itself refuses a
+    duplicated column name."""
+    from pyspark.sql.types import BooleanType, StructField, StructType
+
+    table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)
+    orch.apply_batch(
+        spark.createDataFrame(
+            [("I", 1, "a", 0, "user", "hi", dt.datetime(2024, 1, 1))],
+            "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+            "role string, text string, ts timestamp",
+        ),
+        1,
+    )
+    history, schema = len(table.history()), table.schema
+    bad = spark.createDataFrame(
+        [("U", 2, "a", 0, "user", "hey", dt.datetime(2024, 1, 2), True)],
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp, is_current boolean",
+    )
+    with pytest.raises(ValueError, match=r"lineage column\(s\) \['is_current'\]"):
+        orch.apply_batch(bad, 2)
+    table.refresh()
+    assert len(table.history()) == history
+    assert table.schema == schema
+    assert not table.is_batch_committed(2)
+    dup = StructType(schema.fields + [StructField("is_current", BooleanType(), True)])
+    with pytest.raises(ValueError, match="may not duplicate"):
+        table.evolve_schema(dup)
+    assert len(table.refresh().history()) == history
+
+
 def test_idempotent_reapply(replayed, spark):
     table, orch, batches, _ = replayed
     before = table.snapshot.snapshot_id

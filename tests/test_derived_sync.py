@@ -212,10 +212,11 @@ def test_mor_horizon_holds_back_pending_deltas(spark, tmp_path):
 
 def test_reserved_and_key_validation(spark, tmp_path):
     parent, child, po, _ = _mk(spark, tmp_path)
-    with pytest.raises(ValueError, match="pass through implicitly"):
-        DerivedTableSync(
-            parent, child, str(tmp_path / "x"), select_exprs={"ts": "ts"}
-        )
+    for name in ("ts", "is_current", "effective_ts", "end_ts", "batch_id"):
+        with pytest.raises(ValueError, match="pass through implicitly"):
+            DerivedTableSync(
+                parent, child, str(tmp_path / "x"), select_exprs={name: "ts"}
+            )
 
 
 def test_streaming_tail_with_derived_sync_consumer(spark, tmp_path):
@@ -252,3 +253,30 @@ def test_streaming_tail_with_derived_sync_consumer(spark, tmp_path):
     run()  # restart: nothing re-delivered, everything a no-op
     assert sync._load_ckpt() == ck
     assert _rows(current_state(child.refresh())) == _rows(_expected(parent))
+
+
+def _refresh_jobs(spark, sync, group):
+    """Spark jobs one refresh launches, counted by job group (pooled
+    applies inherit the caller's group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "derived refresh job count")
+    try:
+        sync.refresh()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_refresh_runs_one_scan_one_fold_one_apply(spark, tmp_path):
+    """A refresh is range scan -> fold shuffle, fold -> child bucket
+    shuffle, and the child merge+write: at most 3 Spark jobs for a
+    one-batch and a two-batch range alike. A branchy derivation (separate
+    scans per join/anti-join/groupBy) launches 11-12 here."""
+    parent, child, po, sync = _mk(spark, tmp_path)
+    po.apply_batch(_batch(spark, BATCHES[1]), 1)
+    one = _refresh_jobs(spark, sync, "derived-jobs-1")
+    po.apply_batch(_batch(spark, BATCHES[2]), 2)
+    po.apply_batch(_batch(spark, BATCHES[3]), 3)
+    two = _refresh_jobs(spark, sync, "derived-jobs-2")
+    assert one <= 3 and two <= 3, (one, two)
+    assert _rows(current_state(child)) == _rows(_expected(parent))

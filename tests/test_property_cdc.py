@@ -261,3 +261,88 @@ def test_any_event_sequence_matches_oracle_through_wap(
     got = current_state(table).toPandas()
     want = oracle.current_df()
     assert_pdf_equal(got, want, ["conv_id", "turn_idx"])
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(events=events_st, refresh_after=st.lists(st.booleans(), min_size=1, max_size=3))
+def test_derived_sync_equals_filter_projection(
+    spark, tmp_path_factory, counter, events, refresh_after
+):
+    """For ANY event sequence and any refresh schedule (skipped refreshes
+    make multi-batch ranges), an identity replica and a filtered,
+    projected replica equal σ/π of the parent's live state after every
+    refresh — NULL roles make the filter NULL, updates cross it both
+    ways, deletes of unknown keys leave tombstones the fold must skip."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import (
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from tpc_di_spark.lake.derived import DerivedTableSync
+    from tpc_di_spark.schemas import LINEAGE_FIELDS
+
+    rows = [
+        (flag, i, conv, turn, role, text, T0 + dt.timedelta(seconds=ts))
+        for i, (flag, conv, turn, role, text, ts) in enumerate(events)
+    ]
+    schema = (
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp"
+    )
+    size = -(-len(rows) // len(refresh_after))
+    chunks = [rows[i : i + size] for i in range(0, len(rows), size)]
+
+    counter["n"] += 1
+    base = tmp_path_factory.mktemp("derived_prop") / f"t{counter['n']}"
+    parent = bootstrap_table(spark, str(base / "p"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    replica = bootstrap_table(spark, str(base / "r"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    child_schema = StructType(
+        [
+            StructField("conv_id", StringType(), False),
+            StructField("turn_idx", IntegerType(), False),
+            StructField("role", StringType(), True),
+            StructField("n_chars", LongType(), True),
+            StructField("ts", TimestampType(), True),
+        ]
+        + LINEAGE_FIELDS
+    )
+    child = bootstrap_table(spark, str(base / "c"), child_schema, num_buckets=4)
+    n_chars = "cast(length(text) as bigint)"
+    syncs = [
+        (DerivedTableSync(parent, replica, str(base / "rs")), None, None),
+        (
+            DerivedTableSync(
+                parent, child, str(base / "cs"), filter_expr="role = 'assistant'",
+                select_exprs={"role": "role", "n_chars": n_chars},
+            ),
+            "role = 'assistant'",
+            ["role", F.expr(n_chars).alias("n_chars")],
+        ),
+    ]
+    orch = CdcOrchestrator(parent)
+
+    def by_key(df):
+        return {(r.conv_id, r.turn_idx): tuple(r) for r in df.collect()}
+
+    for bid, (chunk, do_refresh) in enumerate(zip(chunks, refresh_after), start=1):
+        orch.apply_batch(spark.createDataFrame(chunk, schema), bid)
+        if not (do_refresh or bid == len(chunks)):
+            continue
+        live = current_state(parent)
+        for sync, flt, proj in syncs:
+            rec = sync.refresh()
+            assert rec["batch_id"] == bid
+            want = live if flt is None else live.filter(F.expr(flt)).select(
+                "conv_id", "turn_idx", *proj, "ts"
+            )
+            got = current_state(sync.child)
+            assert by_key(got.select(*want.columns)) == by_key(want), (bid, flt)

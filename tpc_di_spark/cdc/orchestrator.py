@@ -63,6 +63,7 @@ from pyspark.sql.types import StructField, StructType
 
 from tpc_di_spark.cdc.apply import (
     ENVELOPE_COLS,
+    LINEAGE_COLS,
     align_events,
     data_cols,
     insert_only_rows,
@@ -358,7 +359,7 @@ class CdcOrchestrator:
         old = self.table.schema
         # Insert new payload columns before the lineage block, keeping a
         # stable human-readable order.
-        lineage = [f for f in old.fields if f.name in ("is_current", "effective_ts", "end_ts", "batch_id")]
+        lineage = [f for f in old.fields if f.name in LINEAGE_COLS]
         payload = [f for f in old.fields if f not in lineage]
         evolved = StructType(
             payload + [StructField(f.name, f.dataType, True) for f in new_fields] + lineage
@@ -381,6 +382,12 @@ class CdcOrchestrator:
         is a commit of its own: a refused batch leaves no snapshot."""
         if batch_id <= 0:
             raise ValueError(f"batch_id must be >= 1, got {batch_id}")
+        lineage = [c for c in events.columns if c in LINEAGE_COLS]
+        if lineage:
+            raise ValueError(
+                f"events carry lineage column(s) {lineage}: the apply stamps "
+                "those itself — rename or drop them before applying"
+            )
         self.table.refresh()
         if claims_batch and self.table.is_batch_committed(batch_id):
             return None

@@ -12,28 +12,31 @@ changelog:
 
 Per refresh, for the unconsumed committed batch range ``(last, upto]``:
 
-1. ``rows_created_since`` yields every row version created in the range
-   (one surviving version per key per batch, by the LWW merge).
-2. The key's CURRENT version at ``upto`` is its max-``batch_id`` created
-   version — and it is LIVE iff that exact version was not closed by a
-   range batch (a closed row carries its creation ``batch_id``, so the
-   test is one join on ``key + batch_id`` against the range's closed
-   rows). Keys with closes but no creates in the range are pure deletes.
-3. Child change events: ``'I'`` (full replace — a projected column that
-   went NULL in the parent must go NULL in the child, so no 'U'
-   field-coalescing) for live versions passing the filter; ``'D'`` for
-   dead keys, pure deletes, and live versions the filter now rejects
-   (a version update can move a row out of the replica's predicate).
+1. **Scan.** The range's created versions (one surviving version per key
+   per batch, by the LWW merge) unioned with its closed versions
+   (``keys, ts, batch_id``), each row tagged created or closed.
+2. **Fold.** One ``groupBy(key)`` computes the key's CURRENT version at
+   ``upto`` — its max-``batch_id`` created version — the exact set of
+   batch ids of its closed versions, and its max closed ``ts``. A closed
+   row carries its creation ``batch_id``, so the current version is LIVE
+   iff its ``batch_id`` is not in that set. Keys with closes but no
+   creates in the range are pure deletes.
+3. **Projection.** One event per key: ``'I'`` (full replace — a
+   projected column that went NULL in the parent must go NULL in the
+   child, so no 'U' field-coalescing) for a live version passing the
+   filter; ``'D'`` for dead keys, pure deletes, and live versions the
+   filter now rejects (a version update can move a row out of the
+   replica's predicate).
 4. One ``CdcOrchestrator.apply_batch(child, batch_id=upto)`` — the
    orchestrator's per-batch manifest makes the apply exactly-once, so a
    crash between apply and checkpoint replays the same event set into a
    no-op, and the checkpoint flips after. Batch ids inherit the parent's
    ``upto`` (strictly monotone across refreshes).
 
-Everything is DataFrame ops — the refresh costs one file-skipped
-changelog scan of the range plus one key-partitioned merge into the
-child: O(changed rows), independent of either table's size. The range,
-checkpoint and guards are the shared consumer contract
+Everything is DataFrame ops — a refresh costs one file-skipped range
+scan, one fold shuffle and one key-partitioned child apply: O(changed
+rows), independent of either table's size. The range, checkpoint and
+guards are the shared consumer contract
 (:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
 "Downstream fan-out").
 
@@ -45,7 +48,7 @@ the child schema before the merge — no operator intervention.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from tpc_di_spark.cdc.apply import LINEAGE_COLS
 from tpc_di_spark.cdc.orchestrator import CdcOrchestrator
@@ -91,7 +94,7 @@ class DerivedTableSync(ChangelogConsumer):
         self.child = child
         self.filter_expr = filter_expr
         self.select_exprs = dict(select_exprs or {})
-        reserved = set(parent.key_cols) | {"ts", "cdc_flag", "cdc_dsn", "batch_id"}
+        reserved = set(parent.key_cols) | {"ts", "cdc_flag", "cdc_dsn", *LINEAGE_COLS}
         bad = reserved & set(self.select_exprs)
         if bad:
             raise ValueError(f"{sorted(bad)} pass through implicitly; do not remap")
@@ -114,20 +117,24 @@ class DerivedTableSync(ChangelogConsumer):
         counter). The base sync needs nothing here."""
         return {}
 
-    def _upsert_events(self, matched: DataFrame, payload: list[str]) -> DataFrame:
-        """Map the range's live, filter-passing row versions to child 'I'
-        events. Base: the declarative select_exprs projection; subclasses
-        override for projections a SQL expression cannot express (e.g.
-        IvfIndexSync's broadcast-centroid assignment)."""
+    def _events(self, fold: DataFrame, payload: list[str], upto: int) -> DataFrame:
+        """Map the folded range — one row per key: its current version's
+        payload and ``batch_id`` (NULL for a pure delete), ``ts``, and
+        ``_up`` (live and passing the filter) — to child events: 'I' with
+        the version's batch id where ``_up``, else 'D' at ``upto``. Base:
+        the declarative select_exprs projection; subclasses override for
+        projections a SQL expression cannot express (e.g. IvfIndexSync's
+        broadcast-centroid assignment)."""
         keys = list(self.parent.key_cols)
-        proj = [F.expr(e).alias(n) for n, e in self.select_exprs.items()]
-        if not proj:  # identity projection: every non-key payload column
-            proj = [F.col(c) for c in payload if c not in keys and c != "ts"]
-        return matched.select(
-            F.lit("I").alias("cdc_flag"),
-            F.col("batch_id").cast("long").alias("cdc_dsn"),
+        proj = {n: F.expr(e) for n, e in self.select_exprs.items()} or {
+            c: F.col(c) for c in payload if c not in keys and c != "ts"
+        }  # empty select_exprs: identity projection
+        up = F.col("_up")
+        return fold.select(
+            F.when(up, "I").otherwise("D").alias("cdc_flag"),
+            F.when(up, F.col("batch_id")).otherwise(upto).cast("long").alias("cdc_dsn"),
             *keys,
-            *proj,
+            *[F.when(up, e).alias(n) for n, e in proj.items()],
             F.col("ts"),
         )
 
@@ -148,50 +155,38 @@ class DerivedTableSync(ChangelogConsumer):
         # is exact.
         keys = list(self.parent.key_cols)
         payload = self._payload_cols(rng.snap)
-        created, closed = rng.created(), rng.closed()
-
-        # Current version per key at `upto`: max created batch in range.
-        w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
-        latest = (
-            created.select(*payload, "batch_id")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        is_c = F.col("_created")
+        # One scan (a shuffle-free union), one fold shuffle, one select.
+        fold = (
+            rng.created()
+            .select(*payload, "batch_id", F.lit(True).alias("_created"))
+            .unionByName(
+                rng.closed().select(*keys, "ts", "batch_id", F.lit(False).alias("_created")),
+                allowMissingColumns=True,
+            )
+            .groupBy(*keys)
+            .agg(
+                F.max_by(
+                    F.struct(*[c for c in payload if c not in keys], "batch_id"),
+                    F.when(is_c, F.col("batch_id")),
+                ).alias("_v"),
+                F.collect_set(F.when(~is_c, F.col("batch_id"))).alias("_closed"),
+                F.max(F.when(~is_c, F.col("ts"))).alias("_closed_ts"),
+            )
+            .select(*keys, "_v.*", "_closed", "_closed_ts")
         )
-        closed_vers = closed.select(*keys, "batch_id").distinct()
-
-        # Live iff the latest created version was not itself closed in
-        # range (its close would be a pure delete — a replacement would
-        # have created a higher-batch version).
-        live = latest.join(closed_vers, on=[*keys, "batch_id"], how="left_anti")
-        dead = latest.join(closed_vers, on=[*keys, "batch_id"], how="left_semi")
-
+        # Live iff the current version was not itself closed in range
+        # (its close would be a pure delete — a replacement would have
+        # created a higher-batch version); NULL/false filter drops it.
+        has_v = F.col("batch_id").isNotNull()
+        live = has_v & ~F.array_contains("_closed", F.col("batch_id"))
         if self.filter_expr is not None:
-            matched = live.filter(F.expr(self.filter_expr))
-            dropped = live.join(matched.select(*keys), on=keys, how="left_anti")
-        else:
-            matched, dropped = live, live.limit(0)
-
-        # Pure deletes: closed in range, nothing created in range.
-        pure_del = (
-            closed.groupBy(*keys)
-            .agg(F.max("ts").alias("ts"))
-            .join(created.select(*keys).distinct(), on=keys, how="left_anti")
-        )
-
-        upserts = self._upsert_events(matched, payload)
-        del_keys = (
-            dead.select(*keys, "ts")
-            .unionByName(dropped.select(*keys, "ts"))
-            .unionByName(pure_del.select(*keys, "ts"))
-        )
-        deletes = del_keys.select(
-            F.lit("D").alias("cdc_flag"),
-            F.lit(upto).cast("long").alias("cdc_dsn"),
-            *keys,
-            F.col("ts"),
-        )
-        events = upserts.unionByName(deletes, allowMissingColumns=True)
+            live = live & F.expr(self.filter_expr)
+        fold = fold.withColumns({
+            "_up": F.coalesce(live, F.lit(False)),
+            "ts": F.when(has_v, F.col("ts")).otherwise(F.col("_closed_ts")),
+        })
+        events = self._events(fold, payload, upto)
 
         # Exactly-once: the child apply is idempotent per batch_id (the
         # orchestrator skips already-committed batches), so a crash here

@@ -92,15 +92,16 @@ class IvfIndexSync(DerivedTableSync):
             self.centroids = [[float(x) for x in c] for c in centroids]
             self.fs.write_text(cpath, json.dumps({"centroids": self.centroids}))
         # The drift observation of the refresh in flight, set by
-        # _upsert_events and resolved by _after_apply.
+        # _events and resolved by _after_apply.
         self._drift_obs = None
 
     # -- hooks into the changelog-consumption loop --------------------------
 
-    def _upsert_events(self, matched: DataFrame, payload: list[str]) -> DataFrame:
+    def _events(self, fold: DataFrame, payload: list[str], upto: int) -> DataFrame:
         """Assign ONLY the range's changed live vectors (O(changed)
-        exact-DECIMAL distance work) and measure reassignment drift with
-        one column-pruned scan of the index's (key, centroid_id).
+        exact-DECIMAL distance work), delete the index rows of every other
+        folded key, and measure reassignment drift with one column-pruned
+        scan of the index's (key, centroid_id).
 
         Drift accounting is a lazy :class:`~pyspark.sql.Observation`
         computed INSIDE the index apply's own merge job (the left join
@@ -111,6 +112,7 @@ class IvfIndexSync(DerivedTableSync):
         :meth:`_after_apply`, before the checkpoint flip."""
         from pyspark.sql import Observation
 
+        matched = fold.filter(F.col("_up"))
         assigned = ivf_assign(
             matched.select(self.key, self.vec_col), self.key, self.vec_col,
             self.centroids,
@@ -138,13 +140,20 @@ class IvfIndexSync(DerivedTableSync):
             ).alias("moved"),
         )
         self._drift_obs = obs
-        return observed.select(
+        upserts = observed.select(
             F.lit("I").alias("cdc_flag"),
             F.col("batch_id").cast("long").alias("cdc_dsn"),
             F.col(self.key),
             F.col("centroid_id"),
             F.col("ts"),
         )
+        deletes = fold.filter(~F.col("_up")).select(
+            F.lit("D").alias("cdc_flag"),
+            F.lit(upto).cast("long").alias("cdc_dsn"),
+            F.col(self.key),
+            F.col("ts"),
+        )
+        return upserts.unionByName(deletes, allowMissingColumns=True)
 
     def _after_apply(self, out: dict, events: DataFrame, ck: dict | None) -> dict:
         """Resolve the drift observation once the apply's job has run,

@@ -1272,6 +1272,10 @@ class LakeTable:
         buckets (the layout change that requires ``rebucket`` instead).
         """
         old = self.schema
+        names = new_schema.fieldNames()
+        dup = sorted({n for n in names if names.count(n) > 1})
+        if dup:
+            raise ValueError(f"schema evolution may not duplicate column(s) {dup}")
         new_names = {f.name: f for f in new_schema.fields}
         protected = set(self.snapshot.bucket_cols) | set(self.key_cols)
         for f_old in old.fields:
