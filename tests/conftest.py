@@ -21,3 +21,15 @@ def normalize(pdf: pd.DataFrame, sort_cols) -> pd.DataFrame:
 def assert_pdf_equal(left: pd.DataFrame, right: pd.DataFrame, sort_cols) -> None:
     l, r = normalize(left, sort_cols), normalize(right, sort_cols)
     pd.testing.assert_frame_equal(l, r, check_dtype=False, check_like=True)
+
+
+def refresh_jobs(spark, consumer, group: str) -> int:
+    """Spark jobs one ``consumer.refresh()`` launches, counted by job
+    group (pooled applies inherit the caller's group)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "consumer refresh job count")
+    try:
+        consumer.refresh()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

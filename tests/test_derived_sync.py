@@ -19,6 +19,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from tests.conftest import refresh_jobs
 from tpc_di_spark.cdc import CdcOrchestrator, current_state
 from tpc_di_spark.cdc.orchestrator import bootstrap_table
 from tpc_di_spark.lake.derived import DerivedTableSync
@@ -255,18 +256,6 @@ def test_streaming_tail_with_derived_sync_consumer(spark, tmp_path):
     assert _rows(current_state(child.refresh())) == _rows(_expected(parent))
 
 
-def _refresh_jobs(spark, sync, group):
-    """Spark jobs one refresh launches, counted by job group (pooled
-    applies inherit the caller's group)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "derived refresh job count")
-    try:
-        sync.refresh()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_refresh_runs_one_scan_one_fold_one_apply(spark, tmp_path):
     """A refresh is range scan -> fold shuffle, fold -> child bucket
     shuffle, and the child merge+write: at most 3 Spark jobs for a
@@ -274,9 +263,9 @@ def test_refresh_runs_one_scan_one_fold_one_apply(spark, tmp_path):
     scans per join/anti-join/groupBy) launches 11-12 here."""
     parent, child, po, sync = _mk(spark, tmp_path)
     po.apply_batch(_batch(spark, BATCHES[1]), 1)
-    one = _refresh_jobs(spark, sync, "derived-jobs-1")
+    one = refresh_jobs(spark, sync, "derived-jobs-1")
     po.apply_batch(_batch(spark, BATCHES[2]), 2)
     po.apply_batch(_batch(spark, BATCHES[3]), 3)
-    two = _refresh_jobs(spark, sync, "derived-jobs-2")
+    two = refresh_jobs(spark, sync, "derived-jobs-2")
     assert one <= 3 and two <= 3, (one, two)
     assert _rows(current_state(child)) == _rows(_expected(parent))

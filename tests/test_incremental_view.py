@@ -7,6 +7,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 import pytest
 
+from tests.conftest import refresh_jobs
 from tpc_di_spark.cdc import CdcOrchestrator
 from tpc_di_spark.cdc.orchestrator import bootstrap_table
 from tpc_di_spark.lake.incremental_view import IncrementalView
@@ -391,3 +392,73 @@ def test_live_extremes_refuse_cow_above_mor_horizon(spark, tmp_path):
     }
     for k, v in want.items():
         assert st[k] == v
+
+
+def test_sum_and_avg_keep_their_state_types(spark, tmp_path):
+    """sum_live over int, double and decimal expressions and avg_live over
+    the same keep the state's declared type (``sum(expr)``'s) across
+    refreshes and equal a recompute after each one: a widened, uncast
+    state write fails the next refresh's explicit-schema read."""
+    exprs = {
+        "i": "turn_idx",
+        "d": "cast(length(text) as double)",
+        "m": "cast(length(text) as decimal(10,2))",
+    }
+    spec = [("sum_live", e, f"sum_{n}") for n, e in exprs.items()]
+    spec += [("avg_live", e, f"avg_{n}") for n, e in exprs.items()]
+    table, orch = _make(spark, tmp_path)
+    view = IncrementalView(table, str(tmp_path / "v"), ["role"], spec)
+    for b, rows in BATCHES.items():
+        orch.apply_batch(_batch(spark, rows), b)
+        got = {r.role: r.asDict() for r in view.refresh().collect()}
+        live = table.read().filter(F.col("is_current"))
+        want = {
+            r.role: r.asDict()
+            for r in live.groupBy("role").agg(
+                *[F.sum(F.expr(e)).alias(f"sum_{n}") for n, e in exprs.items()],
+                *[F.avg(F.expr(e)).alias(f"avg_{n}") for n, e in exprs.items()],
+            ).collect()
+        }
+        assert got.keys() == want.keys(), b
+        for role, w in want.items():
+            for n in exprs:
+                assert got[role][f"sum_{n}"] == w[f"sum_{n}"], (b, role, n)
+                want_avg = pytest.approx(float(w[f"avg_{n}"]))
+                assert got[role][f"avg_{n}"] == want_avg, (b, role, n)
+
+
+def test_refresh_runs_one_fold_and_one_write(spark, tmp_path):
+    """A refresh is the union -> fold shuffle and the fold -> state write:
+    at most 2 Spark jobs for a one-batch and a two-batch range, and for
+    live extremes whose closes retract no extreme (the write's observed
+    dirty count skips the repair). A join chain per refresh (created x
+    closed, delta x state) launches 7 and 10 here."""
+    table, orch = _make(spark, tmp_path)
+    view = IncrementalView(table, str(tmp_path / "v"), ["role"], ROLE_SPEC)
+    orch.apply_batch(_batch(spark, BATCHES[1]), 1)
+    one = refresh_jobs(spark, view, "view-jobs-1")
+    orch.apply_batch(_batch(spark, BATCHES[2]), 2)
+    orch.apply_batch(_batch(spark, BATCHES[3]), 3)
+    two = refresh_jobs(spark, view, "view-jobs-2")
+    assert one <= 2 and two <= 2, (one, two)
+    assert _viewed(view) == _full_recompute(table)
+
+    table, orch = _make(spark, tmp_path, "x")
+    n_chars = "cast(length(text) as bigint)"
+    ext = IncrementalView(
+        table, str(tmp_path / "xv"), ["role"],
+        [("max_live", n_chars, "hi"), ("min_live", n_chars, "lo")],
+    )
+    orch.apply_batch(_batch(spark, [
+        ("I", 1, "a", 0, "user", "x", T0),
+        ("I", 2, "b", 0, "user", "xxxxx", T0),
+        ("I", 3, "c", 0, "user", "xxxxxxxxx", T0),
+    ]), 1)
+    ext.refresh()
+    # closes the 5-char version: neither the max (9) nor the min (1)
+    orch.apply_batch(_batch(spark, [
+        ("U", 4, "b", 0, "user", "xxxxxx", T0 + dt.timedelta(hours=1)),
+    ]), 2)
+    quiet = refresh_jobs(spark, ext, "view-jobs-extremes")
+    assert quiet <= 2, quiet
+    assert {r.role: (r.hi, r.lo) for r in ext.state().collect()} == {"user": (9, 1)}

@@ -8,7 +8,7 @@ import datetime as dt
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests.conftest import assert_pdf_equal
@@ -65,8 +65,8 @@ def test_any_event_sequence_matches_oracle(spark, tmp_path_factory, counter, eve
 
     consumer = ConvStatsConsumer(table, path + "_stats")
     # keyed on a NULLABLE column on purpose: the state merge must fold
-    # NULL keys like GROUP BY does (null-safe join), and the sum must
-    # invert exactly under retention chains and delete-reinsert.
+    # NULL keys like GROUP BY does, and the sum must invert exactly
+    # under retention chains and delete-reinsert.
     role_view = IncrementalView(
         table, path + "_roleview", ["role"],
         [("count_live", None, "n_live"),
@@ -346,3 +346,93 @@ def test_derived_sync_equals_filter_projection(
             )
             got = current_state(sync.child)
             assert by_key(got.select(*want.columns)) == by_key(want), (bid, flt)
+
+
+# Every IncrementalView aggregate kind over a NULLABLE key (role).
+ALL_KINDS = [
+    ("count_live", None, "n_live"),
+    ("sum_live", "cast(length(text) as bigint)", "chars"),
+    ("count_versions", None, "n_created"),
+    ("count_closed", None, "n_closed"),
+    ("max_created", "ts", "hi_ts"),
+    ("min_created", "ts", "lo_ts"),
+    ("avg_live", "cast(length(text) as bigint)", "avg_chars"),
+    ("last_by_ts", "text", "last_text"),
+    ("max_live", "cast(length(text) as bigint)", "hi_chars"),
+    ("min_live", "text", "lo_text"),
+]
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(events=events_st, refresh_after=st.lists(st.booleans(), min_size=1, max_size=3))
+# Pinned: the second refresh retracts a unique max and min ("xyz" dies,
+# "ab" updates to "a" under the NULL role), so the repair must run.
+@example(
+    events=[("I", "c0", 0, "user", "xyz", 1), ("I", "c1", 0, None, "ab", 2),
+            ("D", "c0", 0, None, None, 3), ("U", "c1", 0, None, "a", 4)],
+    refresh_after=[True, True],
+)
+def test_view_every_kind_equals_recompute(
+    spark, tmp_path_factory, counter, events, refresh_after
+):
+    """For ANY event sequence and any refresh schedule (skipped refreshes
+    make multi-batch ranges), a view holding every aggregate kind keyed
+    on a column that can be NULL equals a full-lineage recompute after
+    every refresh — including live extremes retracted by deletes and
+    updates, and sums whose live set went all-NULL."""
+    import pyspark.sql.functions as F
+
+    from tpc_di_spark.lake.incremental_view import IncrementalView
+
+    rows = [
+        (flag, i, conv, turn, role, text, T0 + dt.timedelta(seconds=ts))
+        for i, (flag, conv, turn, role, text, ts) in enumerate(events)
+    ]
+    schema = (
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp"
+    )
+    size = -(-len(rows) // len(refresh_after))
+    chunks = [rows[i : i + size] for i in range(0, len(rows), size)]
+
+    counter["n"] += 1
+    base = str(tmp_path_factory.mktemp("view_prop") / f"t{counter['n']}")
+    table = bootstrap_table(spark, base, TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)
+    view = IncrementalView(table, base + "_view", ["role"], ALL_KINDS)
+    names = [n for _k, _e, n in ALL_KINDS]
+
+    def recompute():
+        # Tombstones (batch_id < 0) are no created versions.
+        lineage = table.read().filter(F.col("batch_id") >= 0)
+        cur, x = F.col("is_current"), F.length("text").cast("long")
+        agg = lineage.groupBy("role").agg(
+            F.sum(cur.cast("long")).alias("n_live"),
+            # Σ created − Σ closed: NULL only while no version had a value
+            F.when(F.count(x) > 0, F.coalesce(F.sum(F.when(cur, x)), F.lit(0))).alias("chars"),
+            F.count(F.lit(1)).alias("n_created"),
+            F.sum((~cur).cast("long")).alias("n_closed"),
+            F.max("ts").alias("hi_ts"),
+            F.min("ts").alias("lo_ts"),
+            F.avg(F.when(cur, x)).alias("avg_chars"),
+            F.max(
+                F.struct(F.col("ts"), F.col("batch_id").cast("long"), F.col("text").alias("v"))
+            ).getField("v").alias("last_text"),
+            F.max(F.when(cur, x)).alias("hi_chars"),
+            F.min(F.when(cur, F.col("text"))).alias("lo_text"),
+        )
+        return {r.role: tuple(r[n] for n in names) for r in agg.collect()}
+
+    for bid, (chunk, do_refresh) in enumerate(zip(chunks, refresh_after), start=1):
+        orch.apply_batch(spark.createDataFrame(chunk, schema), bid)
+        if not (do_refresh or bid == len(chunks)):
+            continue
+        got = {r.role: tuple(r[n] for n in names) for r in view.refresh().collect()}
+        want = recompute()
+        assert got.keys() == want.keys(), bid
+        for role, w in want.items():
+            assert got[role] == pytest.approx(w), (bid, role, got[role], w)

@@ -446,8 +446,14 @@ def test_streaming_consumer_restart_idempotent(spark, tmp_path):
     view = IncrementalView(
         table, str(tmp_path / "view"), ["role"],
         [("count_live", None, "live_turns"),
-         ("sum_live", "cast(length(text) as bigint)", "live_chars")],
+         ("sum_live", "cast(length(text) as bigint)", "live_chars"),
+         # the close of the assistant's only version ties its max: the
+         # observed dirty count and the repair run inside foreachBatch
+         ("max_live", "ts", "max_ts")],
     )
+
+    def viewed():
+        return {r.role: (r.live_turns, r.live_chars, r.max_ts) for r in view.state().collect()}
 
     def run(ckpt):
         q = start_cdc_stream(
@@ -458,31 +464,32 @@ def test_streaming_consumer_restart_idempotent(spark, tmp_path):
 
     run("ckpt")
     recompute = {
-        r.role: (r.live, r.chars)
+        r.role: (r.live, r.chars, r.max_ts)
         for r in table.refresh().read().groupBy("role").agg(
             F.sum(F.col("is_current").cast("long")).alias("live"),
             F.coalesce(
                 F.sum(F.when(F.col("is_current"), F.length("text").cast("long"))),
                 F.lit(0),
             ).alias("chars"),
+            F.max(F.when(F.col("is_current"), F.col("ts"))).alias("max_ts"),
         ).collect()
     }
-    got = {r.role: (r.live_turns, r.live_chars) for r in view.state().collect()}
+    got = viewed()
     assert got == recompute
-    assert got["user"] == (1, len("v2-longer"))
-    assert got["assistant"] == (1 - 1, 0)
+    assert got["user"] == (1, len("v2-longer"), t0 + dt.timedelta(seconds=5))
+    assert got["assistant"] == (1 - 1, 0, None)
     ck_after = view._load_ckpt()
 
     # restart on the same checkpoint (nothing re-delivered)
     run("ckpt")
     assert view._load_ckpt() == ck_after
-    assert {r.role: (r.live_turns, r.live_chars) for r in view.state().collect()} == got
+    assert viewed() == got
 
     # wiped checkpoint: full re-delivery, same epoch ids -> apply no-ops
     # -> consumer refresh sees no new committed batches -> state frozen
     run("ckpt_fresh")
     assert view._load_ckpt() == ck_after
-    assert {r.role: (r.live_turns, r.live_chars) for r in view.state().collect()} == got
+    assert viewed() == got
 
 
 def test_debezium_reader_quarantine_and_apply(spark, tmp_path):

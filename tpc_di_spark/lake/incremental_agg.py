@@ -11,8 +11,8 @@ changelog (`lake/changelog.py`) with the thing the changelog exists FOR.
 ``ConvStatsConsumer`` is the original fixed-spec consumer (the q49
 contract surface); since round 5 it is a thin instantiation of the
 DECLARATIVE engine in :mod:`tpc_di_spark.lake.incremental_view`, which
-generalizes the same changelog-range + state-join skeleton to arbitrary
-key columns and aggregate specs.
+generalizes the same changelog-range + state fold to arbitrary key
+columns and aggregate specs.
 
 Maintained stats per ``conv_id``:
 
@@ -30,10 +30,9 @@ Maintained stats per ``conv_id``:
 Scale shape: one refresh costs one file-skipped scan of the range's
 created/closed versions (``rows_created_since`` / ``rows_closed_since``
 — per-file ``batch_id`` stats bound the scan set to the touched
-batches) plus one key-partitioned join against the conv-cardinality
-state — O(changed + state), independent of table age or lineage depth.
-At 10^10 rows, bucket the state table by ``conv_id`` hash to make the
-merge join co-located.
+batches) unioned with the conv-cardinality state and folded by one
+``groupBy(conv_id)`` — O(changed + state), independent of table age or
+lineage depth.
 
 Checkpointing, crash safety, the rollback guard, the merge-on-read
 horizon and the compaction fallback are the shared consumer contract

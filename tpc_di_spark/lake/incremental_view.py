@@ -7,8 +7,11 @@ table's full lineage while reading only each refresh's changed rows.
 This is the operator a 100-TB pipeline user reaches for weekly (rollup
 marts, feature tables, per-tenant usage counters): a full recompute scans
 the whole fact table per refresh; this refresh costs one file-skipped
-changelog scan of the unconsumed batch range plus one key-partitioned
-join against the state — O(changed + state), independent of table age.
+changelog scan of the unconsumed batch range, unioned with the old state
+as one signed change set (DBSP-style: created versions weigh +, closed
+versions −) and folded by ONE ``groupBy(key)`` into the new state — two
+Spark jobs, the fold shuffle and the state write; O(changed + state),
+independent of table age.
 TPC-DI has no changelog consumer at all (its incremental batches are
 inputs only, `Incremental1/*.py`); the closest published analogues are
 Materialize/DBSP-style incremental view maintenance and Iceberg's
@@ -41,12 +44,14 @@ maintenance under updates/deletes possible without per-key row state):
   so they use RECOMPUTE-ON-RETRACTION: the refresh maintains them as
   monotone folds until a closed version's value ties-or-beats the
   candidate extreme, and then recomputes ONLY the affected groups from
-  the table's live file family (bucket/column-pruned scan of the dirty
-  groups' rows — zero extra cost on refreshes whose closes never touch
-  an extreme). Exactness requires the live family to BE the state at
-  the consumed batch; the one interleaving that breaks this (a CoW
-  batch committed above a pending merge-on-read horizon) is refused
-  with an explicit error rather than silently drifting.
+  the table's live file family (column-pruned scan of the dirty groups'
+  rows). The state write counts the dirty groups in an ``Observation``;
+  the repair runs only when that count is > 0, so refreshes whose closes
+  never touch an extreme pay nothing for it. Exactness requires the
+  live family to BE the state at the consumed batch; the one
+  interleaving that breaks this (a CoW batch committed above a pending
+  merge-on-read horizon) is refused with an explicit error rather than
+  silently drifting.
 
 Non-goals, by design: count-distinct needs a sketch (see
 operators/dedup.py for the hashing toolbox).
@@ -65,12 +70,15 @@ contract surface).
 
 from __future__ import annotations
 
+import operator
 import os
+from functools import reduce
 from typing import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
-from pyspark.sql.types import LongType, StructField, StructType
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from tpc_di_spark.lake.changelog import ChangelogConsumer
 from tpc_di_spark.lake.table import LakeTable
@@ -137,29 +145,32 @@ class IncrementalView(ChangelogConsumer):
         key_fields = [
             StructField(k, tbl[k].dataType, tbl[k].nullable) for k in self.key_cols
         ]
-        # Aggregate output types come from a zero-row projection of the
-        # table schema (the expression's natural Spark type).
-        from pyspark.sql.types import DoubleType
-
+        # Aggregate types come from a zero-row projection of the table
+        # schema: the expression's natural Spark type, and for the signed
+        # sums (sum_live, avg_live's hidden sum) the type of ``sum(expr)``.
         probe = self.table.spark.createDataFrame([], self.table.schema)
+
+        def type_of(col: Column):
+            return probe.select(col).schema[0].dataType
+
         agg_fields = []
         for kind, expr, name in self.aggs:
             if kind.startswith("count"):
                 agg_fields.append(StructField(name, LongType(), False))
-                continue
-            t = probe.select(F.expr(expr).alias(name)).schema[0].dataType
-            if kind == "avg_live":
-                sum_t = probe.select(F.sum(F.expr(expr)).alias("s")).schema[0].dataType
+            elif kind == "sum_live":
+                agg_fields.append(StructField(name, type_of(F.sum(F.expr(expr))), True))
+            elif kind == "avg_live":
                 agg_fields.append(StructField(name, DoubleType(), True))
-                agg_fields.append(StructField(f"_h_sum_{name}", sum_t, True))
+                agg_fields.append(
+                    StructField(f"_h_sum_{name}", type_of(F.sum(F.expr(expr))), True)
+                )
                 agg_fields.append(StructField(f"_h_n_{name}", LongType(), False))
             elif kind == "last_by_ts":
-                ts_t = probe.select(F.col("ts")).schema[0].dataType
-                agg_fields.append(StructField(name, t, True))
-                agg_fields.append(StructField(f"_h_ts_{name}", ts_t, True))
+                agg_fields.append(StructField(name, type_of(F.expr(expr)), True))
+                agg_fields.append(StructField(f"_h_ts_{name}", tbl["ts"].dataType, True))
                 agg_fields.append(StructField(f"_h_b_{name}", LongType(), True))
             else:  # extremes (created or live)
-                agg_fields.append(StructField(name, t, True))
+                agg_fields.append(StructField(name, type_of(F.expr(expr)), True))
         return StructType(
             key_fields + agg_fields + [StructField(_VC, LongType(), False)]
         )
@@ -176,21 +187,16 @@ class IncrementalView(ChangelogConsumer):
         schema = self._state_schema()
         if ck is None:
             return self.table.spark.createDataFrame([], schema)
-        path = os.path.join(self.state_dir, ck["state_rel"])
-        # LEGACY state dirs (written before the hidden membership column
-        # existed) lack _versions_created. Reading them through the new
-        # schema would NULL-fill it, and the membership filter would then
-        # silently drop every key the next refresh doesn't touch —
-        # permanent state loss. Detect via the files' real schema and
-        # backfill a positive membership marker (only positivity matters).
-        actual = self.table.spark.read.parquet(path)
-        if _VC in actual.columns:
-            return self.table.spark.read.schema(schema).parquet(path)
-        legacy = StructType([f for f in schema.fields if f.name != _VC])
+        # An explicit schema: no inference job. LEGACY state dirs (written
+        # before the hidden membership column existed) read it as NULL,
+        # and the membership filter would then silently drop every key the
+        # next refresh doesn't touch. Every newer state row has _VC > 0,
+        # so a NULL marks a legacy row: backfill a positive marker (only
+        # positivity matters).
         return (
-            self.table.spark.read.schema(legacy)
-            .parquet(path)
-            .withColumn(_VC, F.lit(1).cast("long"))
+            self.table.spark.read.schema(schema)
+            .parquet(os.path.join(self.state_dir, ck["state_rel"]))
+            .withColumn(_VC, F.coalesce(F.col(_VC), F.lit(1).cast("long")))
         )
 
     # -- refresh ------------------------------------------------------------
@@ -203,206 +209,120 @@ class IncrementalView(ChangelogConsumer):
             cond = cond & F.col(f"{a}.{k}").eqNullSafe(F.col(f"{b}.{k}"))
         return cond
 
-    def _null_safe_outer(
-        self, left: DataFrame, right: DataFrame, right_cols: list[str]
-    ) -> DataFrame:
-        """Full-outer join on the key columns with NULL-SAFE equality,
-        coalescing the key columns in the output. A plain equi-join never
-        matches NULL keys, so a view keyed on a nullable column (e.g.
-        ``role``) would accumulate a duplicate NULL-key row per refresh
-        instead of folding into one. Aggregation keys treat NULL as a
-        value (SQL GROUP BY semantics) — the merge join must too."""
-        l, r = left.alias("l"), right.alias("r")
-        keys = [
-            F.coalesce(F.col(f"l.{k}"), F.col(f"r.{k}")).alias(k)
-            for k in self.key_cols
-        ]
-        left_cols = [
-            F.col(f"l.{c}") for c in left.columns if c not in self.key_cols
-        ]
-        return l.join(r, self._keys_match("l", "r"), "full_outer").select(
-            *keys, *left_cols, *[F.col(f"r.{c}") for c in right_cols]
-        )
+    def _fold(self, created: DataFrame, closed: DataFrame) -> DataFrame:
+        """The new state: the old state and the range's created (+) and
+        closed (−) versions as one signed union, folded by ONE
+        ``groupBy(key)`` — GROUP BY folds NULL keys into one group, like
+        the view's own semantics. Each aggregate reads per-source *slot*
+        columns (a source without the slot contributes NULL, which SQL
+        aggregates skip); live extremes add ``_dirty_<name>`` flags."""
+        schema = self._state_schema()
+        typ = {f.name: f.dataType for f in schema.fields}
+        one = F.lit(1).cast("long")
+        sides: tuple[list, list, list] = ([], [], [])  # state, created, closed
+        aggs: list[Column] = []
 
-    def _delta_aggs(self, created: DataFrame, closed: DataFrame) -> DataFrame:
-        """One aggregation over each side of the changelog range, joined
-        into a per-key delta frame with ``_c_*`` / ``_d_*`` columns."""
-        c_aggs = [F.count(F.lit(1)).alias("_c_n")]
-        d_aggs, d_names = [F.count(F.lit(1)).alias("_d_n")], ["_d_n"]
-        for kind, expr, name in self.aggs:
-            if kind == "sum_live":
-                c_aggs.append(F.sum(F.expr(expr)).alias(f"_c_{name}"))
-                d_aggs.append(F.sum(F.expr(expr)).alias(f"_d_{name}"))
-                d_names.append(f"_d_{name}")
-            elif kind == "avg_live":
-                c_aggs.append(F.sum(F.expr(expr)).alias(f"_c_s_{name}"))
-                c_aggs.append(F.count(F.expr(expr)).alias(f"_c_k_{name}"))
-                d_aggs.append(F.sum(F.expr(expr)).alias(f"_d_s_{name}"))
-                d_aggs.append(F.count(F.expr(expr)).alias(f"_d_k_{name}"))
-                d_names.extend([f"_d_s_{name}", f"_d_k_{name}"])
-            elif kind == "last_by_ts":
-                # Lexicographic struct MAX = arg-max over (ts, batch_id)
-                # with value tie-break — one agg, deterministic.
-                pack = F.struct(
-                    F.col("ts").alias("o1"),
-                    F.col("batch_id").cast("long").alias("o2"),
-                    F.expr(expr).alias("v"),
-                )
-                c_aggs.append(F.max(pack).alias(f"_c_p_{name}"))
-            elif kind in ("max_created", "max_live"):
-                c_aggs.append(F.max(F.expr(expr)).alias(f"_c_{name}"))
-                if kind == "max_live":
-                    d_aggs.append(F.max(F.expr(expr)).alias(f"_d_{name}"))
-                    d_names.append(f"_d_{name}")
-            elif kind in ("min_created", "min_live"):
-                c_aggs.append(F.min(F.expr(expr)).alias(f"_c_{name}"))
-                if kind == "min_live":
-                    d_aggs.append(F.min(F.expr(expr)).alias(f"_d_{name}"))
-                    d_names.append(f"_d_{name}")
-        c = created.groupBy(*self.key_cols).agg(*c_aggs)
-        d = closed.groupBy(*self.key_cols).agg(*d_aggs)
-        return self._null_safe_outer(c, d, d_names)
+        def slot(fn, old=None, plus=None, minus=None) -> Column:
+            name = f"__slot{len(aggs)}"
+            for side, col in zip(sides, (old, plus, minus)):
+                if col is not None:
+                    side.append(col.alias(name))
+            aggs.append(fn(name).alias(name))
+            return F.col(name)
 
-    def _merged_state(self, delta: DataFrame, live_provider=None) -> DataFrame:
-        zero = F.lit(0).cast("long")
-        cols = [F.col(k) for k in self.key_cols]
-        cn = F.coalesce(F.col("_c_n"), zero)
-        dn = F.coalesce(F.col("_d_n"), zero)
-        dirty_specs: list[tuple[str, str, str]] = []  # (kind, expr, name)
+        out = {k: F.col(k) for k in self.key_cols}
+        dirty = []
         for kind, expr, name in self.aggs:
+            x = None if expr is None else F.expr(expr)
             old = F.col(name)
             if kind == "count_live":
-                new = F.coalesce(old, zero) + cn - dn
+                out[name] = slot(F.sum, old, one, -one)
             elif kind == "count_versions":
-                new = F.coalesce(old, zero) + cn
+                out[name] = slot(F.sum, old, one)
             elif kind == "count_closed":
-                new = F.coalesce(old, zero) + dn
+                # a created-only group must read 0, not an empty sum's NULL
+                out[name] = slot(F.sum, old, F.lit(0).cast("long"), one)
             elif kind == "sum_live":
-                # sum over an all-NULL (or absent) side is NULL — treat
-                # as "no change", but keep a never-seen expr NULL (a
-                # 0-started fold would manufacture a value for keys
-                # whose expr was always NULL).
-                change = F.coalesce(F.col(f"_c_{name}"), F.lit(0)) - F.coalesce(
-                    F.col(f"_d_{name}"), F.lit(0)
-                )
-                new = F.when(
-                    old.isNull() & F.col(f"_c_{name}").isNull()
-                    & F.col(f"_d_{name}").isNull(),
-                    F.lit(None),
-                ).otherwise(F.coalesce(old, F.lit(0)) + change)
+                # SQL sum skips NULLs: a group whose expr was never
+                # non-NULL stays NULL rather than a manufactured 0.
+                xt = x.cast(typ[name])
+                out[name] = slot(F.sum, old, xt, -xt)
             elif kind == "avg_live":
                 hs, hn = f"_h_sum_{name}", f"_h_n_{name}"
-                old_s, old_n = F.col(hs), F.col(hn)
-                cs, ds = F.col(f"_c_s_{name}"), F.col(f"_d_s_{name}")
-                change_s = F.coalesce(cs, F.lit(0)) - F.coalesce(ds, F.lit(0))
-                new_s = F.when(
-                    old_s.isNull() & cs.isNull() & ds.isNull(), F.lit(None)
-                ).otherwise(F.coalesce(old_s, F.lit(0)) + change_s)
-                new_n = (
-                    F.coalesce(old_n, zero)
-                    + F.coalesce(F.col(f"_c_k_{name}"), zero)
-                    - F.coalesce(F.col(f"_d_k_{name}"), zero)
-                )
-                cols.append(
-                    F.try_divide(new_s.cast("double"), new_n).alias(name)
-                )
-                cols.append(new_s.alias(hs))
-                cols.append(new_n.alias(hn))
-                continue
+                xt, nn = x.cast(typ[hs]), x.isNotNull().cast("long")
+                out[hs] = s = slot(F.sum, F.col(hs), xt, -xt)
+                out[hn] = n = slot(F.sum, F.col(hn), nn, -nn)
+                out[name] = F.try_divide(s.cast("double"), n)
             elif kind == "last_by_ts":
+                # Lexicographic struct MAX = arg-max over (ts, batch_id)
+                # with value tie-break. The state's pack takes part
+                # whenever it holds a version (_h_b set), a NULL ts too.
                 ht, hb = f"_h_ts_{name}", f"_h_b_{name}"
-                ch = F.col(f"_c_p_{name}")
-                old_pack = F.struct(
-                    F.col(ht).alias("o1"), F.col(hb).alias("o2"), old.alias("v")
+                p = slot(
+                    F.max,
+                    F.when(
+                        F.col(hb).isNotNull(),
+                        F.struct(F.col(ht).alias("o1"), F.col(hb).alias("o2"), old.alias("v")),
+                    ),
+                    F.struct(
+                        F.col("ts").alias("o1"),
+                        F.col("batch_id").cast("long").alias("o2"),
+                        x.cast(typ[name]).alias("v"),
+                    ),
                 )
-                take_new = ch.isNotNull() & (
-                    F.col(ht).isNull() | (ch > old_pack)
-                )
-                cols.append(
-                    F.when(take_new, ch.getField("v")).otherwise(old).alias(name)
-                )
-                cols.append(
-                    F.when(take_new, ch.getField("o1")).otherwise(F.col(ht)).alias(ht)
-                )
-                cols.append(
-                    F.when(take_new, ch.getField("o2")).otherwise(F.col(hb)).alias(hb)
-                )
-                continue
-            elif kind in ("max_created", "max_live"):
-                new = F.greatest(old, F.col(f"_c_{name}"))
-                if kind == "max_live":
-                    d = F.col(f"_d_{name}")
-                    cols.append(
-                        (d.isNotNull() & (new.isNull() | (d >= new)))
-                        .alias(f"_dirty_{name}")
-                    )
-                    dirty_specs.append((kind, expr, name))
-            else:  # min_created / min_live
-                new = F.least(old, F.col(f"_c_{name}"))
-                if kind == "min_live":
-                    d = F.col(f"_d_{name}")
-                    cols.append(
-                        (d.isNotNull() & (new.isNull() | (d <= new)))
-                        .alias(f"_dirty_{name}")
-                    )
-                    dirty_specs.append((kind, expr, name))
-            cols.append(new.alias(name))
-        cols.append((F.coalesce(F.col(_VC), zero) + cn).alias(_VC))
-        delta_cols = [c for c in delta.columns if c not in self.key_cols]
-        merged = (
-            self._null_safe_outer(self._state_full(), delta, delta_cols)
-            .select(*cols)
+                out[name], out[ht], out[hb] = p.getField("v"), p.getField("o1"), p.getField("o2")
+            else:  # created / live extremes
+                fn = F.max if kind.startswith("max") else F.min
+                out[name] = v = slot(fn, old, x)
+                if kind in _LIVE_EXTREMES:
+                    # a closed version that ties-or-beats the candidate
+                    # may have been the extreme: the group needs repair
+                    d = slot(fn, minus=x)
+                    beats = d >= v if kind == "max_live" else d <= v
+                    dirty.append((d.isNotNull() & (v.isNull() | beats)).alias(f"_dirty_{name}"))
+        out[_VC] = slot(F.sum, F.col(_VC), one)
+        state, plus, minus = sides
+        union = (
+            self._state_full().select(*self.key_cols, *state)
+            .unionByName(created.select(*self.key_cols, *plus), allowMissingColumns=True)
+            .unionByName(closed.select(*self.key_cols, *minus), allowMissingColumns=True)
+        )
+        return (
+            union.groupBy(*self.key_cols)
+            .agg(*aggs)
+            .select(*[out[f.name].cast(f.dataType).alias(f.name) for f in schema.fields], *dirty)
             # a key enters the view with its first created version
             # (delete events for never-seen keys are no-ops)
             .filter(F.col(_VC) > 0)
         )
-        if not dirty_specs:
-            return merged
-        return self._recompute_retracted(merged, dirty_specs, live_provider)
 
     def _recompute_retracted(
-        self, merged: DataFrame, dirty_specs, live_provider
+        self, fold: DataFrame, extremes, any_dirty: Column
     ) -> DataFrame:
         """max_live/min_live retraction repair: groups whose closed-side
-        extreme tied-or-beat the candidate get their TRUE extreme
-        recomputed from the live file family — only those groups' rows
-        are aggregated (a column-pruned, group-filtered scan); groups
-        untouched by a retraction never pay it."""
-        any_dirty = None
-        for _k, _e, name in dirty_specs:
-            d = F.col(f"_dirty_{name}")
-            any_dirty = d if any_dirty is None else (any_dirty | d)
-        live = live_provider()
-        dirty_keys = merged.filter(any_dirty).select(*self.key_cols).distinct()
+        extreme tied-or-beat the candidate (``any_dirty``) get their TRUE
+        extreme recomputed from the live file family — only those groups'
+        rows are aggregated (a column-pruned, group-filtered scan)."""
+        live = self.table.read(family="current").filter(F.col("is_current"))
+        dirty_keys = fold.filter(any_dirty).select(*self.key_cols).distinct()
         # Null-safe semi join: restrict the live scan to dirty groups.
         l, r = live.alias("l"), dirty_keys.alias("r")
         affected = l.join(r, self._keys_match("l", "r"), "left_semi")
-        rec_aggs = [
-            (F.max if kind == "max_live" else F.min)(F.expr(expr)).alias(
-                f"_r_{name}"
-            )
-            for kind, expr, name in dirty_specs
-        ]
         rec = affected.groupBy(
             *[F.col(f"l.{k}").alias(k) for k in self.key_cols]
-        ).agg(*rec_aggs)
-
-        m, rr = merged.alias("m"), rec.alias("rr")
-        out_cols = []
-        for c in merged.columns:
-            if c.startswith("_dirty_"):
-                continue
-            name_match = next(
-                (n for _k, _e, n in dirty_specs if n == c), None
-            )
-            if name_match is not None:
-                out_cols.append(
-                    F.when(
-                        F.col(f"m._dirty_{c}"), F.col(f"rr._r_{c}")
-                    ).otherwise(F.col(f"m.{c}")).alias(c)
-                )
-            else:
-                out_cols.append(F.col(f"m.{c}").alias(c))
+        ).agg(*[
+            (F.max if kind == "max_live" else F.min)(F.expr(expr)).alias(f"_r_{name}")
+            for kind, expr, name in extremes
+        ])
+        names = {n for _k, _e, n in extremes}
+        m, rr = fold.alias("m"), rec.alias("rr")
+        out_cols = [
+            F.when(F.col(f"m._dirty_{c}"), F.col(f"rr._r_{c}")).otherwise(F.col(f"m.{c}")).alias(c)
+            if c in names
+            else F.col(f"m.{c}").alias(c)
+            for c in fold.columns
+            if not c.startswith("_dirty_")
+        ]
         return m.join(rr, self._keys_match("m", "rr"), "left").select(*out_cols)
 
     def refresh(self) -> DataFrame:
@@ -413,8 +333,8 @@ class IncrementalView(ChangelogConsumer):
         if not rng.pending:
             return self.state()
 
-        live_provider = None
-        if any(k in _LIVE_EXTREMES for k, _e, _n in self.aggs):
+        extremes = [a for a in self.aggs if a[0] in _LIVE_EXTREMES]
+        if extremes:
             # Recompute-on-retraction reads the LIVE file family, which
             # equals the state at `upto` unless a copy-on-write batch
             # committed ABOVE a pending merge-on-read horizon (the one
@@ -435,19 +355,31 @@ class IncrementalView(ChangelogConsumer):
                     f"horizon {rng.upto} (pending MoR deltas "
                     f"{list(rng.pending_mor)}). Compact the deltas, then refresh."
                 )
-            live_provider = lambda: (  # noqa: E731
-                self.table.read(family="current").filter(F.col("is_current"))
-            )
 
-        merged = self._merged_state(
-            self._delta_aggs(rng.created(), rng.closed()), live_provider
-        )
+        fold = self._fold(rng.created(), rng.closed())
         state_rel = f"state-b{rng.upto:06d}"
-        # One state file, partitioned by the view key: enough at test scale;
-        # at 10^10 rows ~state_bytes/128MB files co-locate the refresh joins.
-        merged.repartition(1, *self.key_cols).write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, state_rel)
-        )
+        path = os.path.join(self.state_dir, state_rel)
+        if not extremes:
+            fold.write.mode("overwrite").parquet(path)
+        else:
+            # The write observes how many groups need the retraction
+            # repair; only then does the repair run, overwriting the same
+            # not-yet-checkpointed dir (its plan reads the previous state,
+            # never this one).
+            dirty = [f"_dirty_{n}" for _k, _e, n in extremes]
+            any_dirty = reduce(operator.or_, map(F.col, dirty))
+            obs = Observation()
+            observed = fold.observe(obs, F.count_if(any_dirty).alias("n"))
+            observed.drop(*dirty).write.mode("overwrite").parquet(path)
+            try:
+                n_dirty = obs.get["n"]
+            except Py4JJavaError:
+                # No metrics: AQE replaced the observed subtree by an
+                # empty relation. Repair anyway (CdcOrchestrator._account).
+                n_dirty = None
+            if n_dirty != 0:
+                repaired = self._recompute_retracted(fold, extremes, any_dirty)
+                repaired.write.mode("overwrite").parquet(path)
         self._save_ckpt(rng.checkpoint(state_rel=state_rel), first=rng.ck is None)
         self._prune_old_states(
             keep=(state_rel, rng.ck["state_rel"] if rng.ck else None)
