@@ -1898,8 +1898,8 @@ HAVING SUM(CASE WHEN cdc_flag <> 'D' THEN 1 ELSE 0 END) > 0
 # aggregate spec and maintained across the FULL engine surface in one
 # query — batch 1 copy-on-write, batch 2 merge-on-read (the view holds
 # below the pending delta, catches up at compaction), batch 3 CoW, then
-# a full table compaction that erases closing tags (forcing the
-# per-batch time-travel path). The oracle recomputes the same rollup
+# a full table compaction that erases closing tags (the closes are read
+# from the committing snapshot by time travel). The oracle recomputes the same rollup
 # from scratch over the event stream: any drift in the view's
 # invertible-sum maintenance (update nets new-old, delete subtracts) or
 # watermark monotonicity goes hash-red.
@@ -1943,7 +1943,7 @@ def q50_incremental_role_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     view.refresh()  # catches up through the materialized batch 2
     orch.apply_batch(batch(3), batch_id=3)
     compact(table, max_files_per_bucket=0)  # erases closing tags
-    view.refresh()  # per-batch time-travel fallback path
+    view.refresh()  # closes read from the committing snapshot
     return view.state()
 
 
@@ -2920,8 +2920,8 @@ Q57_SQL = _q57_sql()
 # out the extreme rewinds it — the case monotone max_created cannot
 # express). Same engine-integration replay as q50: CoW batch → refresh,
 # MoR batch → refresh holds below the horizon, compaction → catch-up,
-# CoW batch → full-table compaction erases closing tags → per-batch
-# time-travel fallback refresh. The oracle recomputes every aggregate
+# CoW batch → full-table compaction erases closing tags → refresh reads
+# the closes from the committing snapshot. The oracle recomputes every aggregate
 # from the full lineage in DuckDB.
 # ---------------------------------------------------------------------------
 
@@ -2963,7 +2963,7 @@ def q58_incremental_view_extended(spark: SparkSession, sf_dir: str) -> DataFrame
     view.refresh()  # catches up through the materialized batch 2
     orch.apply_batch(batch(3), batch_id=3)
     compact(table, max_files_per_bucket=0)  # erases closing tags
-    view.refresh()  # per-batch time-travel fallback + retraction repair
+    view.refresh()  # committing-snapshot closes + retraction repair
     return view.state()
 
 

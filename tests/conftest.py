@@ -33,3 +33,15 @@ def refresh_jobs(spark, consumer, group: str) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def bucket_holding_closes(table, batch_id: int) -> int:
+    """A bucket whose history files hold some of ``batch_id``'s closes —
+    the target of a one-bucket compaction (what threshold compaction
+    does), which leaves the batch's closing tags in the other buckets."""
+    tag = f"batch-{batch_id:06d}"
+    return next(
+        int(b)
+        for b, fl in sorted(table.snapshot.hist_files.items())
+        if any(tag in rel for rel in fl)
+    )

@@ -134,6 +134,21 @@ def test_rows_closed_in_survives_compaction(spark, tmp_path):
     assert after == before == {("a", 0): "a0v2", ("a", 1): "a1v1"}
 
 
+def test_steady_state_close_reads_skip_history(spark, tmp_path, monkeypatch):
+    """With no rewrite-tagged history file, every closing tag is intact:
+    the close set is read from the current snapshot alone, without a
+    ``history()`` walk (the per-refresh metadata cost of a consumer)."""
+    from tpc_di_spark.lake.table import LakeTable
+
+    table = _replayed(spark, tmp_path)
+    walks = []
+    monkeypatch.setattr(LakeTable, "history", lambda self: walks.append(1) or [])
+    closed = {(r.conv_id, r.turn_idx) for r in rows_closed_in(table, [2, 3]).collect()}
+    assert closed == {("a", 0), ("a", 1)}
+    assert changed_keys_since(table, after_batch_id=1).count() == 3
+    assert not walks
+
+
 def test_range_reads_equal_per_batch_union(spark, tmp_path):
     """rows_created_since / rows_closed_since (one-scan range forms) must
     equal the union of the per-batch reads over the same range."""
@@ -156,12 +171,11 @@ def test_range_reads_equal_per_batch_union(spark, tmp_path):
     assert closed_range == closed_union and closed_range
 
 
-def test_changed_keys_since_overapproximates_after_compaction(spark, tmp_path):
-    """Retention guard (ADVICE r03): compaction rewrites history files
-    under a tag with no closing-batch id; a checkpoint that predates the
-    compaction must still see delete-only touches. Unknown-tag history
-    files are included (safe over-approximation) instead of silently
-    dropped."""
+def test_changed_keys_since_is_exact_after_compaction(spark, tmp_path):
+    """Retention guard: compaction rewrites history files under a tag
+    with no closing-batch id; a checkpoint that predates the compaction
+    must still see delete-only touches — and only the keys truly
+    touched, read from the committing snapshots."""
     from tpc_di_spark.lake.maintenance import compact
 
     table = _replayed(spark, tmp_path)
@@ -173,14 +187,13 @@ def test_changed_keys_since_overapproximates_after_compaction(spark, tmp_path):
     assert exact == {("a", 0), ("a", 1)}
 
     compact(table, max_files_per_bucket=0)  # erases batch-3 hist tags
-    approx = {
+    after = {
         (r.conv_id, r.turn_idx)
         for r in changed_keys_since(table, after_batch_id=2).collect()
     }
     # (a,1)'s delete left no created-row trace (its version carries
-    # batch_id=1) — only the closed-side detection can find it. The
-    # over-approximation may add keys but must never lose one.
-    assert exact <= approx, "a deleted key went missing after compaction"
+    # batch_id=1) — only the closed side can find it.
+    assert exact == after, "compaction changed the touched-key set"
 
 
 def test_changelog_consistent_after_resume(spark, tmp_path):

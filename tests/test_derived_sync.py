@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from tests.conftest import refresh_jobs
+from tests.conftest import bucket_holding_closes, refresh_jobs
 from tpc_di_spark.cdc import CdcOrchestrator, current_state
 from tpc_di_spark.cdc.orchestrator import bootstrap_table
 from tpc_di_spark.lake.derived import DerivedTableSync
@@ -158,6 +158,27 @@ def test_compaction_between_syncs_uses_fallback(spark, tmp_path):
     rec = sync.refresh()
     assert rec["fallback"] is True
     assert _rows(current_state(child)) == _rows(_expected(parent))
+
+
+def test_partial_compaction_between_syncs_uses_fallback(spark, tmp_path):
+    """A compaction of ONE bucket re-tags only that bucket's closes; the
+    batch's tags left in the other buckets must not be taken for its
+    whole close set, or the child keeps rows the parent deleted."""
+    from tpc_di_spark.lake.maintenance import compact
+
+    parent, child, po, sync = _mk(spark, tmp_path)
+    keys = [f"k{i:02d}" for i in range(16)]
+    po.apply_batch(
+        _batch(spark, [("I", i, k, 0, "assistant", "x", _h(0)) for i, k in enumerate(keys)]), 1
+    )
+    sync.refresh()
+    po.apply_batch(
+        _batch(spark, [("D", 100 + i, k, 0, None, None, _h(1)) for i, k in enumerate(keys)]), 2
+    )
+    compact(parent, buckets=[bucket_holding_closes(parent, 2)])
+    rec = sync.refresh()
+    assert rec["fallback"] is True
+    assert _rows(current_state(child)) == _rows(_expected(parent)) == []
 
 
 def test_identity_projection_full_replica(spark, tmp_path):

@@ -100,8 +100,8 @@ def test_exactly_once_and_noop_refresh(spark, tmp_path):
 
 def test_exact_across_compaction(spark, tmp_path):
     """A compaction between checkpoint and refresh erases closing tags;
-    the consumer must detect it and stay exact via the per-batch
-    time-travel fallback."""
+    the consumer must detect it and stay exact by reading the closes
+    from each batch's committing snapshot (time travel)."""
     from tpc_di_spark.lake.maintenance import compact
 
     table, orch = _make(spark, tmp_path)
@@ -185,10 +185,10 @@ def test_mor_batches_held_until_compaction(spark, tmp_path):
 
 def test_bootstrap_after_compaction(spark, tmp_path):
     """ADVICE r04 (medium): a consumer whose FIRST refresh runs against an
-    already-compacted table must take the per-batch time-travel path —
-    the range scan from batch 0 would skip compaction-rewritten history
-    files (their closing tags are erased) and persist wrong totals into
-    the checkpoint forever."""
+    already-compacted table must read the closes from the committing
+    snapshots — the current snapshot's compaction-rewritten history
+    files have lost their closing tags, and wrong totals would persist
+    into the checkpoint forever."""
     from tpc_di_spark.lake.maintenance import compact
 
     table, orch = _make(spark, tmp_path)
@@ -202,12 +202,12 @@ def test_bootstrap_after_compaction(spark, tmp_path):
 
 
 def test_expired_checkpoint_snapshot_forces_fallback(spark, tmp_path):
-    """ADVICE r04 (low): when expire_snapshots pruned the checkpoint's
-    snapshot, needs_per_batch_fallback can no longer PROVE no compaction
-    happened — it must warn and take the fallback instead of assuming."""
-    import warnings
+    """When expire_snapshots pruned the snapshot that committed a pending
+    batch AND a compaction followed that commit, the batch's close set
+    cannot be proven: the refresh must refuse with the unrecoverable
+    error instead of folding a guessed close set into its state."""
+    import pytest
 
-    from tpc_di_spark.lake.changelog import needs_per_batch_fallback
     from tpc_di_spark.lake.maintenance import compact, expire_snapshots
 
     table, orch = _make(spark, tmp_path)
@@ -222,7 +222,6 @@ def test_expired_checkpoint_snapshot_forces_fallback(spark, tmp_path):
     expire_snapshots(table, keep_last=1)
     reachable = {h["snapshot_id"] for h in table.history()}
     assert consumer._load_ckpt()["snapshot_id"] not in reachable
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert needs_per_batch_fallback(table, consumer._load_ckpt())
-    assert any("expired" in str(x.message) for x in w)
+    with pytest.raises(ValueError, match="unrecoverable"):
+        consumer.refresh()
+    assert consumer._load_ckpt()["batch_id"] == 1, "the checkpoint must not move"

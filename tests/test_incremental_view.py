@@ -7,7 +7,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 import pytest
 
-from tests.conftest import refresh_jobs
+from tests.conftest import bucket_holding_closes, refresh_jobs
 from tpc_di_spark.cdc import CdcOrchestrator
 from tpc_di_spark.cdc.orchestrator import bootstrap_table
 from tpc_di_spark.lake.incremental_view import IncrementalView
@@ -145,6 +145,31 @@ def test_exact_across_mor_and_compaction(spark, tmp_path):
     compact(table, max_files_per_bucket=0)  # erase closing tags too
     got = _viewed(view)
     assert got == _full_recompute(table)
+
+
+def test_exact_after_partial_compaction(spark, tmp_path):
+    """A one-bucket compaction re-tags only that bucket's closes: the
+    refresh must read the batch's whole close set from its committing
+    snapshot, not the tags that survived in the other buckets."""
+    from tpc_di_spark.lake.maintenance import compact
+
+    table, orch = _make(spark, tmp_path)
+    view = IncrementalView(table, str(tmp_path / "v"), ["role"], ROLE_SPEC)
+    keys = [f"k{i:02d}" for i in range(16)]
+    kept = ("I", 99, "live", 0, "user", "y", T0)  # keeps live_chars non-NULL
+    orch.apply_batch(
+        _batch(spark, [kept] + [("I", i, k, 0, "user", "x", T0) for i, k in enumerate(keys)]), 1
+    )
+    _viewed(view)
+    later = T0 + dt.timedelta(hours=1)
+    orch.apply_batch(
+        _batch(spark, [("D", 100 + i, k, 0, None, None, later) for i, k in enumerate(keys)]), 2
+    )
+    compact(table, buckets=[bucket_holding_closes(table, 2)])
+    got = _viewed(view)
+    assert got == _full_recompute(table)
+    live, _, _, closed, _ = got["user"]
+    assert (live, closed) == (1, 16)
 
 
 def test_noop_refresh_and_crash_idempotence(spark, tmp_path):

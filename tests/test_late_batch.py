@@ -14,7 +14,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 import pytest
 
-from tests.conftest import assert_pdf_equal
+from tests.conftest import assert_pdf_equal, bucket_holding_closes
 from tpc_di_spark.cdc import CdcOrchestrator, current_state
 from tpc_di_spark.cdc.apply import align_events, lww_dedup, merge_batch_rows
 from tpc_di_spark.cdc.generator import historical_batch, incremental_batch
@@ -252,9 +252,10 @@ def test_null_key_policy(spark, tmp_path):
 
 
 def test_late_batch_exact_after_compaction(spark, tmp_path):
-    """Compaction erases closing tags, making changed_keys_since
-    over-approximate — which for late repair would DROP legitimate
-    events. The exact per-batch supersession path must keep the serial
+    """Compaction re-tags the history files it rewrites: over-
+    approximating the supersession set would DROP legitimate events,
+    trusting the tags a one-bucket compaction left in the other buckets
+    would resurrect newer deletes. Both must keep the serial
     equivalence; once the committing snapshots are expired the repair
     must refuse loudly instead of silently resurrecting deletes."""
     from tpc_di_spark.lake.maintenance import compact, expire_snapshots
@@ -266,17 +267,21 @@ def test_late_batch_exact_after_compaction(spark, tmp_path):
     for i, b in enumerate(batches, start=1):
         orch_s.apply_batch(b, i)
 
-    ooo = bootstrap_table(spark, str(tmp_path / "ooo"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    orch_o = CdcOrchestrator(ooo)
-    orch_o.apply_batch(batches[0], 1)
-    orch_o.apply_batch(batches[1], 2)
-    orch_o.apply_batch(batches[3], 4)  # batch 3 missing
-    compact(ooo, max_files_per_bucket=0)  # erases closing tags
-    rec = orch_o.apply_late_batch(batches[2], 3)
-    assert rec["late_apply"] is True
-    assert_pdf_equal(
-        current_state(serial).toPandas(), current_state(ooo).toPandas(), KEY
-    )
+    for name, one_bucket in (("full", False), ("one_bucket", True)):
+        ooo = bootstrap_table(spark, str(tmp_path / f"ooo_{name}"), TRANSCRIPT_SCHEMA, num_buckets=4)
+        orch_o = CdcOrchestrator(ooo)
+        orch_o.apply_batch(batches[0], 1)
+        orch_o.apply_batch(batches[1], 2)
+        orch_o.apply_batch(batches[3], 4)  # batch 3 missing
+        if one_bucket:
+            compact(ooo, buckets=[bucket_holding_closes(ooo, 4)])
+        else:
+            compact(ooo, max_files_per_bucket=0)  # re-tags every history file
+        rec = orch_o.apply_late_batch(batches[2], 3)
+        assert rec["late_apply"] is True
+        assert_pdf_equal(
+            current_state(serial).toPandas(), current_state(ooo).toPandas(), KEY
+        )
 
     # Expired retention: the exact close set is unrecoverable -> refuse.
     ooo2 = bootstrap_table(spark, str(tmp_path / "ooo2"), TRANSCRIPT_SCHEMA, num_buckets=4)

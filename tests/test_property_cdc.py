@@ -268,15 +268,21 @@ def test_any_event_sequence_matches_oracle_through_wap(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-@given(events=events_st, refresh_after=st.lists(st.booleans(), min_size=1, max_size=3))
+@given(
+    events=events_st,
+    refresh_after=st.lists(st.booleans(), min_size=1, max_size=3),
+    compact_buckets=st.lists(st.sets(st.integers(0, 3)), min_size=3, max_size=3),
+)
 def test_derived_sync_equals_filter_projection(
-    spark, tmp_path_factory, counter, events, refresh_after
+    spark, tmp_path_factory, counter, events, refresh_after, compact_buckets
 ):
-    """For ANY event sequence and any refresh schedule (skipped refreshes
-    make multi-batch ranges), an identity replica and a filtered,
-    projected replica equal σ/π of the parent's live state after every
-    refresh — NULL roles make the filter NULL, updates cross it both
-    ways, deletes of unknown keys leave tombstones the fold must skip."""
+    """For ANY event sequence, any refresh schedule (skipped refreshes
+    make multi-batch ranges) and any bucket subset compacted before each
+    refresh (a partial rewrite re-tags only some of a batch's closes), an
+    identity replica and a filtered, projected replica equal σ/π of the
+    parent's live state after every refresh — NULL roles make the filter
+    NULL, updates cross it both ways, deletes of unknown keys leave
+    tombstones the fold must skip."""
     import pyspark.sql.functions as F
     from pyspark.sql.types import (
         IntegerType,
@@ -288,6 +294,7 @@ def test_derived_sync_equals_filter_projection(
     )
 
     from tpc_di_spark.lake.derived import DerivedTableSync
+    from tpc_di_spark.lake.maintenance import compact
     from tpc_di_spark.schemas import LINEAGE_FIELDS
 
     rows = [
@@ -337,6 +344,8 @@ def test_derived_sync_equals_filter_projection(
         orch.apply_batch(spark.createDataFrame(chunk, schema), bid)
         if not (do_refresh or bid == len(chunks)):
             continue
+        if compact_buckets[bid - 1]:
+            compact(parent, buckets=sorted(compact_buckets[bid - 1]))
         live = current_state(parent)
         for sync, flt, proj in syncs:
             rec = sync.refresh()

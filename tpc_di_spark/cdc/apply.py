@@ -24,10 +24,10 @@ Semantics re-expressed from the reference:
 - **Delete tombstones** — a 'D' whose key has NO current row still
   leaves a zero-lifetime history row marked ``batch_id = -batch``
   (payload NULL). Every delete is thereby ordered against later
-  arrivals: ``changed_keys_since`` sees it (snapshot-handover safety,
-  ``CdcOrchestrator.apply_snapshot_batch``), while ``rows_closed_in`` /
-  ``rows_closed_since`` exclude tombstones by default (they are not
-  before-images — no version was expired).
+  arrivals: ``changed_keys_since`` sees it (snapshot-handover and
+  late-batch safety, ``CdcOrchestrator.apply_snapshot_batch`` /
+  ``apply_late_batch``), while ``rows_closed_in`` excludes tombstones
+  by default (they are not before-images — no version was expired).
 """
 
 from __future__ import annotations

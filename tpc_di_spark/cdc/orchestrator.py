@@ -394,10 +394,11 @@ class CdcOrchestrator:
         if refuse_pending:
             from tpc_di_spark.cdc.mor import pending_delta_batches
 
-            # Snapshot chunks and late batches read changed_keys_since,
-            # which reads DATA files: keys touched only in uncompacted MoR
-            # deltas are invisible to it, so applying now could resurrect
-            # a delta-deleted key.
+            # Snapshot chunks and late batches read changed_keys_since —
+            # the created/closed sets of the committed batches above their
+            # watermark — which reads DATA files: keys touched only in
+            # uncompacted MoR deltas are invisible to it, so applying now
+            # could resurrect a delta-deleted key.
             if pending_delta_batches(self.table):
                 raise ValueError(
                     "pending MoR delta batches exist — compact them first: "
@@ -657,7 +658,11 @@ class CdcOrchestrator:
           so tail deletes are honored, INCLUDING deletes that matched no
           row yet: those leave ``batch_id = -batch`` tombstones, see
           ``cdc/apply.py``) are dropped: the DBLog chunk-vs-window dedup
-          rule, resolved consumer-side;
+          rule, resolved consumer-side. The set is exact; when a
+          compaction/rebucket followed a tail batch whose committing
+          snapshot has since expired, its close set is unrecoverable and
+          the chunk is refused (``ValueError``) rather than planned
+          against a guessed set;
         - keys already live in the table (pre-existing rows, overlapping
           or re-delivered chunks) are dropped: a point-in-time read
           never creates a new SCD2 version;
@@ -728,7 +733,10 @@ class CdcOrchestrator:
 
         - events whose key was changed by ANY batch with id > this one
           (``changed_keys_since(table, batch_id)`` — created or closed,
-          tombstones included, so newer deletes are honored) are
+          tombstones included, so newer deletes are honored; exact, and
+          it refuses when a newer batch's close set is past retention:
+          an over-approximation would drop legitimate events, an
+          under-approximation resurrect newer deletes) are
           **superseded**: dropped from the merge, counted, and optionally
           written to ``quarantine_dir/batch-NNNNNN`` for audit;
         - the remainder merges through the normal exactly-once apply
@@ -743,9 +751,10 @@ class CdcOrchestrator:
         serial replay row-for-row. Cross-batch ``ts`` ties inside one key
         resolve to the higher batch id, same as serial replay.
 
-        Cost: one file-skipped scan of the keys changed since this batch
-        id (O(changed), the q47 changelog path) + one O(batch) broadcast-
-        or-shuffle anti-join, on top of the normal merge. Late repair is
+        Cost: one file-skipped created-side scan and one tag-selected
+        closed-side scan of the batches since this id (O(changed), the
+        q47 changelog path) + one O(batch) broadcast-or-shuffle
+        anti-join, on top of the normal merge. Late repair is
         an exception path, not steady state. Same MoR-delta guard as the
         snapshot handover: pending deltas hide touched keys from
         ``changed_keys_since``, so compaction must run first.
@@ -755,9 +764,9 @@ class CdcOrchestrator:
         if aligned is None:
             return _skipped(batch_id)
         key = list(self.table.key_cols)
-        from tpc_di_spark.lake.changelog import changed_keys_since_exact
+        from tpc_di_spark.lake.changelog import changed_keys_since
 
-        touched = changed_keys_since_exact(self.table, batch_id)
+        touched = changed_keys_since(self.table, batch_id)
         marked = aligned.join(
             touched.withColumn("_superseded", F.lit(True)), on=key, how="left"
         )

@@ -1,30 +1,35 @@
 """Incremental changelog reads — the "binlog OUT" side of the engine.
 
 A CDC engine is not just a sink: downstream consumers (feature
-pipelines, index builders, replica syncs) need "what changed in batch
-B / since batch B" without re-scanning the table. This module provides
-Iceberg-style incremental reads over the LakeTable snapshot log:
+pipelines, index builders, replica syncs) need "what changed in these
+batches" without re-scanning the table. This module answers it with
+one reader per side, for any set of batch ids, over the LakeTable
+snapshot log (Iceberg-style incremental reads):
 
-- ``rows_created_in(table, batch_id)`` — every row VERSION the batch
+- ``rows_created_in(table, batch_ids)`` — every row VERSION the batches
   created (still-current rows and versions later closed alike: the
-  ``batch_id`` lineage column stamps the creating batch). File-level
-  data skipping uses the per-file ``batch_id`` [min, max] ranges the
-  orchestrator records at write time (``Snapshot.file_stats``): only
-  files whose range covers the batch are scanned, and the residual
-  row filter also pushes down to parquet row-group stats. History
-  files are append-only, so for an old batch the scan set is "that
-  batch's history appends + the live current family" — never the full
-  lineage.
-- ``rows_closed_in(table, batch_id)`` — the versions the batch
-  EXPIRED (the delete/update tombstone stream). Closed versions land
-  in history files written by the closing batch's commit tag, so this
-  is a pure path-prefix file selection: zero scan waste.
+  ``batch_id`` lineage column stamps the creating batch). One scan with
+  ``batch_id IN ids``; file-level data skipping uses the per-file
+  ``batch_id`` [min, max] ranges the orchestrator records at write time
+  (``Snapshot.file_stats``), and the row filter also pushes down to
+  parquet row-group stats. History files are append-only, so for old
+  batches the scan set is "their history appends + the live current
+  family" — never the full lineage.
+- ``rows_closed_in(table, batch_ids)`` — the versions the batches
+  EXPIRED (the delete/update tombstone stream). A closing commit writes
+  its before-images under its own path tag (``batch-NNNNNN/``, or
+  ``compact-delta-NNNNNN/`` for a materialized merge-on-read batch), so
+  this is a pure path-tag file selection with one rule for where the
+  tags are read (README "Downstream fan-out", *Exact close sets*): from
+  the read snapshot while no compaction/rebucket followed the batch's
+  commit — the rewrite re-tags the history files it touches — else from
+  the batch's committing snapshot (time travel), and an error when
+  neither can be proven (the changelog retention window has passed).
 - ``changed_keys_since(table, batch_id)`` — distinct business keys
-  touched after a checkpoint batch: the handshake a downstream
-  incremental consumer needs to re-pull just the affected
-  conversations.
+  created or closed by every committed batch above a checkpoint: the
+  handshake of snapshot handover and late-batch repair.
 - ``ChangelogConsumer`` / ``ChangelogRange`` — the one checkpoint →
-  rollback guard → range lifecycle behind every consumer
+  rollback guard → pending-set lifecycle behind every consumer
   (``IncrementalView``, ``DerivedTableSync``, ``IvfIndexSync``).
 
 Reference parity note: TPC-DI has no changelog consumer — its
@@ -39,8 +44,9 @@ from __future__ import annotations
 import json
 import os
 import re
+from bisect import bisect_left
+from collections.abc import Iterable
 from dataclasses import dataclass
-from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -48,198 +54,55 @@ from pyspark.sql import DataFrame
 from tpc_di_spark.lake.table import LakeTable, Snapshot
 
 
-def _all_rels(snap: Snapshot) -> list[str]:
+def _ids(batch_ids: int | Iterable[int]) -> set[int]:
+    return {batch_ids} if isinstance(batch_ids, int) else set(batch_ids)
+
+
+def _ids_since(
+    table: LakeTable, snapshot: Snapshot | None, after: int, upto: int | None = None
+) -> set[int]:
+    """The committed batch ids in ``(after, upto]``."""
+    snap = snapshot or table.snapshot
+    return {b for b in snap.committed_batches if after < b and (upto is None or b <= upto)}
+
+
+def files_for_batch(
+    table: LakeTable, batch_ids: int | Iterable[int], snapshot: Snapshot | None = None
+) -> list[str]:
+    """Table-relative paths whose batch_id range may contain one of
+    ``batch_ids`` (the data-skipping candidate set; files without stats
+    are kept)."""
+    snap = snapshot or table.snapshot
+    ids = sorted(_ids(batch_ids))
     return [
         rel
         for fmap in (snap.files, snap.hist_files)
         for fl in fmap.values()
         for rel in fl
+        if (mm := snap.file_stats.get(rel)) is None
+        or ((i := bisect_left(ids, mm[0])) < len(ids) and ids[i] <= mm[1])
     ]
-
-
-def files_for_batch(table: LakeTable, batch_id: int, snapshot: Snapshot | None = None) -> list[str]:
-    """Table-relative paths whose batch_id range may contain ``batch_id``
-    (the data-skipping candidate set; files without stats are kept)."""
-    snap = snapshot or table.snapshot
-    out = []
-    for rel in _all_rels(snap):
-        mm = snap.file_stats.get(rel)
-        if mm is None or (mm[0] <= batch_id <= mm[1]):
-            out.append(rel)
-    return out
 
 
 def rows_created_in(
-    table: LakeTable, batch_id: int, snapshot: Snapshot | None = None
+    table: LakeTable, batch_ids: int | Iterable[int], snapshot: Snapshot | None = None
 ) -> DataFrame:
-    """All row versions created by ``batch_id`` (insert/update images)."""
+    """All row versions created by ``batch_ids`` (insert/update images)."""
     snap = snapshot or table.snapshot
-    rels = files_for_batch(table, batch_id, snap)
-    if not rels:
-        return table.spark.createDataFrame([], snap.schema)
-    paths = [os.path.join(table.path, rel) for rel in rels]
-    return table.read_files(paths, snapshot=snap).filter(
-        F.col("batch_id") == batch_id
-    )
-
-
-def hist_files_of_commit_tag(
-    table: LakeTable, batch_id: int, snapshot: Snapshot | None = None
-) -> list[str]:
-    """History files APPENDED by ``batch_id``'s commit (CoW tag
-    ``batch-XXXXXX/`` or MoR-compaction tag ``compact-delta-XXXXXX/``) —
-    exactly the versions that batch closed, by construction of the
-    append-only history family."""
-    snap = snapshot or table.snapshot
-    prefixes = (
-        os.path.join("data", f"batch-{batch_id:06d}") + os.sep,
-        os.path.join("data", f"compact-delta-{batch_id:06d}") + os.sep,
-    )
-    return [
-        rel
-        for fl in snap.hist_files.values()
-        for rel in fl
-        if rel.startswith(prefixes)
-    ]
-
-
-def rows_closed_in(
-    table: LakeTable,
-    batch_id: int,
-    snapshot: Snapshot | None = None,
-    include_tombstones: bool = False,
-    strict: bool = False,
-) -> DataFrame:
-    """The versions ``batch_id`` expired (before-images of updates and
-    deletes): the history files its commit appended. Pure file
-    selection — no scan of anything else.
-
-    Delete TOMBSTONES (a 'D' that matched no current row; ``batch_id =
-    -batch`` markers, see ``cdc/apply.py``) are excluded by default:
-    no version was expired, so they are not before-images — a consumer
-    counting closes against creates would otherwise go negative. Pass
-    ``include_tombstones=True`` to see them (e.g. replica-sync
-    consumers that mirror every delete event).
-
-    A later compaction may rewrite those history files under its own
-    tag; in that case this falls back to the SNAPSHOT that committed the
-    batch (time travel — the original files stay on disk, referenced by
-    that snapshot, until ``expire_snapshots`` drops it). The changelog
-    retention window therefore equals the snapshot retention window,
-    exactly Iceberg's incremental-read rule."""
-    snap = snapshot or table.snapshot
-    rels = hist_files_of_commit_tag(table, batch_id, snap)
-    resolved = bool(rels) or batch_id not in snap.committed_batches
-    if not rels and batch_id in snap.committed_batches:
-        # Newest-first, stopping at the first snapshot that actually
-        # APPENDED this batch's closes. For a CoW batch that is the
-        # ``summary.batch_id``-stamped apply snapshot; for a merge-on-read
-        # batch the batch_id-stamped snapshot is the DELTA APPEND (no
-        # closes yet — matching it alone silently dropped every MoR
-        # batch's closes once a later full compaction rewrote the range
-        # tags): the closes land in the later ``compact-delta`` snapshot,
-        # stamped with ``summary.delta_batch``.
-        for h in reversed(table.history()):
-            s = h["summary"]
-            if s.get("batch_id") == batch_id or (
-                s.get("operation") == "compact-delta"
-                and s.get("delta_batch") == batch_id
-            ):
-                # Found the committing snapshot: its (possibly empty)
-                # hist delta is the EXACT close set for this batch.
-                resolved = True
-                committing = table.read_snapshot(h["snapshot_id"])
-                rels = hist_files_of_commit_tag(table, batch_id, committing)
-                if rels:
-                    break
-    if strict and not resolved:
-        # The committing snapshot was expired AND a rewrite erased the
-        # tags: an empty answer here would be indistinguishable from
-        # "closed nothing" — callers whose correctness depends on the
-        # close set (late-batch supersession: a missed close would
-        # resurrect a newer delete) must fail instead.
-        raise ValueError(
-            f"batch {batch_id}'s close set is unrecoverable: its closing "
-            "tags were rewritten by compaction and its committing snapshot "
-            "was expired (the changelog retention window has passed)"
-        )
-    if not rels:
-        return table.spark.createDataFrame([], snap.schema)
-    paths = [os.path.join(table.path, rel) for rel in rels]
-    out = table.read_files(paths, snapshot=snap)
-    if not include_tombstones:
-        out = out.filter(F.col("batch_id") >= 0)
-    return out
-
-
-def rows_created_since(
-    table: LakeTable,
-    after_batch_id: int,
-    snapshot: Snapshot | None = None,
-    upto_batch_id: int | None = None,
-) -> DataFrame:
-    """All row versions created by batches AFTER ``after_batch_id`` (and,
-    when ``upto_batch_id`` is given, at or below it) — the one-scan range
-    form of :func:`rows_created_in` (file-skipped via the per-file
-    batch_id stats; versions later closed are included, read from their
-    history files)."""
-    snap = snapshot or table.snapshot
-    rels = [
-        rel
-        for rel in _all_rels(snap)
-        if (mm := snap.file_stats.get(rel)) is None
-        or (mm[1] > after_batch_id and (upto_batch_id is None or mm[0] <= upto_batch_id))
-    ]
-    if not rels:
-        return table.spark.createDataFrame([], snap.schema)
-    paths = [os.path.join(table.path, rel) for rel in rels]
-    out = table.read_files(paths, snapshot=snap).filter(
-        F.col("batch_id") > after_batch_id
-    )
-    if upto_batch_id is not None:
-        out = out.filter(F.col("batch_id") <= upto_batch_id)
-    return out
-
-
-def rows_closed_since(
-    table: LakeTable,
-    after_batch_id: int,
-    snapshot: Snapshot | None = None,
-    upto_batch_id: int | None = None,
-    include_tombstones: bool = False,
-) -> DataFrame:
-    """The versions EXPIRED by batches after ``after_batch_id`` — the
-    one-scan range form of :func:`rows_closed_in`, by closing-commit path
-    tag. PRECONDITION: no compaction/rebucket has rewritten history files
-    since ``after_batch_id`` was committed (rewrites erase the closing
-    tags); callers that cannot guarantee it must loop
-    :func:`rows_closed_in` per batch, which recovers exactness through
-    the committing snapshot (see :meth:`ChangelogRange.closed`). Delete
-    tombstones are excluded by default, as in :func:`rows_closed_in`."""
-    snap = snapshot or table.snapshot
-    rels = [
-        rel
-        for fl in snap.hist_files.values()
-        for rel in fl
-        if (b := _closing_batch_of(rel)) is not None
-        and b > after_batch_id
-        and (upto_batch_id is None or b <= upto_batch_id)
-    ]
-    if not rels:
-        return table.spark.createDataFrame([], snap.schema)
-    paths = [os.path.join(table.path, rel) for rel in rels]
-    out = table.read_files(paths, snapshot=snap)
-    if not include_tombstones:
-        out = out.filter(F.col("batch_id") >= 0)
-    return out
+    ids = _ids(batch_ids)
+    paths = [os.path.join(table.path, rel) for rel in files_for_batch(table, ids, snap)]
+    return table.read_files(paths, snapshot=snap).filter(F.col("batch_id").isin(sorted(ids)))
 
 
 # \d+ not \d{6}: tags are %06d-formatted, i.e. ZERO-PADDED TO AT LEAST
 # six digits — batch ids >= 10^6 (the streaming tail's base_batch_id
 # epochs) produce 7+ digit tags, and a fixed-width match silently
 # classified their history files as "closing batch unknown", dropping
-# them from every range read.
+# them from every close read.
 _TAG_RE = re.compile(r"data/(?:batch|compact-delta)-(\d+)/")
+# compaction (``compact-<snapshot id>-<ts>``) and rebucket tags; a
+# ``compact-delta-NNNNNN`` tag is a closing tag, not a rewrite.
+_REWRITE_RE = re.compile(r"data/(?:compact-\d+-|rebucket-)")
 
 
 def _closing_batch_of(rel: str) -> int | None:
@@ -247,110 +110,143 @@ def _closing_batch_of(rel: str) -> int | None:
     return int(m.group(1)) if m else None
 
 
+def hist_files_of_commit_tag(
+    table: LakeTable, batch_ids: int | Iterable[int], snapshot: Snapshot | None = None
+) -> list[str]:
+    """History files APPENDED by the commits of ``batch_ids`` (CoW tag
+    ``batch-NNNNNN/`` or MoR-compaction tag ``compact-delta-NNNNNN/``) —
+    exactly the versions those batches closed, by construction of the
+    append-only history family, while no rewrite has re-tagged them."""
+    snap = snapshot or table.snapshot
+    ids = _ids(batch_ids)
+    return [
+        rel for fl in snap.hist_files.values() for rel in fl if _closing_batch_of(rel) in ids
+    ]
+
+
+def _rewrite_followed(table: LakeTable, ids: set[int], snap: Snapshot) -> dict[int, int]:
+    """The close-set rule: for each committed id in ``ids`` whose commit a
+    compaction or rebucket followed, the id of its NEWEST committing
+    snapshot — the ``summary.batch_id``-stamped apply, or for a
+    merge-on-read batch the ``compact-delta`` snapshot stamped with
+    ``summary.delta_batch`` (the delta append itself closes nothing).
+
+    Two proofs that no rewrite followed a commit: STRUCTURAL — no history
+    file of the read snapshot sits under a rewrite tag, so every closing
+    tag is intact (the steady state: no ``history()`` walk) — and
+    HISTORICAL — the committing snapshot is still in ``history()`` with
+    no rewrite after it. An id with neither proof raises: an empty
+    answer would be indistinguishable from "closed nothing", and a
+    missed close resurrects a deleted row downstream."""
+    ids = ids & set(snap.committed_batches)
+    if not ids or not any(
+        _REWRITE_RE.search(rel.replace(os.sep, "/"))
+        for fl in snap.hist_files.values()
+        for rel in fl
+    ):
+        return {}
+    followed: dict[int, int] = {}
+    seen: set[int] = set()
+    rewrite = False
+    for h in reversed(table.history()):
+        if h["snapshot_id"] > snap.snapshot_id:
+            continue
+        s = h["summary"]
+        op = s.get("operation")
+        rewrite = rewrite or op in ("compact", "rebucket")
+        b = s.get("delta_batch") if op == "compact-delta" else s.get("batch_id")
+        if b in ids and b not in seen:
+            seen.add(b)
+            if rewrite:
+                followed[b] = h["snapshot_id"]
+            if seen == ids:
+                return followed
+    lost = sorted(ids - seen)
+    raise ValueError(
+        f"the close set of batches {lost} is unrecoverable: a compaction or "
+        "rebucket may have rewritten their closing tags and their committing "
+        "snapshots were expired (the changelog retention window has passed)"
+    )
+
+
+def _close_files(table: LakeTable, ids: set[int], snap: Snapshot) -> list[str]:
+    """The files holding the versions ``ids`` closed: each id's closing
+    tags in the read snapshot, or in its committing snapshot when a
+    rewrite followed it (:func:`_rewrite_followed`)."""
+    followed = _rewrite_followed(table, ids, snap)
+    rels = hist_files_of_commit_tag(table, ids - followed.keys(), snap)
+    for b, sid in followed.items():
+        rels += hist_files_of_commit_tag(table, b, table.read_snapshot(sid))
+    return rels
+
+
+def rows_closed_in(
+    table: LakeTable,
+    batch_ids: int | Iterable[int],
+    snapshot: Snapshot | None = None,
+    include_tombstones: bool = False,
+) -> DataFrame:
+    """The versions ``batch_ids`` expired (before-images of updates and
+    deletes): the history files their commits appended, read from the
+    snapshot the close-set rule picks per batch. Pure file selection —
+    no scan of anything else. The changelog retention window therefore
+    equals the snapshot retention window once the table was compacted
+    or rebucketed, exactly Iceberg's incremental-read rule.
+
+    Delete TOMBSTONES (a 'D' that matched no current row; ``batch_id =
+    -batch`` markers, see ``cdc/apply.py``) are excluded by default:
+    no version was expired, so they are not before-images — a consumer
+    counting closes against creates would otherwise go negative. Pass
+    ``include_tombstones=True`` to see them (e.g. replica-sync
+    consumers that mirror every delete event)."""
+    snap = snapshot or table.snapshot
+    rels = _close_files(table, _ids(batch_ids), snap)
+    out = table.read_files([os.path.join(table.path, rel) for rel in rels], snapshot=snap)
+    return out if include_tombstones else out.filter(F.col("batch_id") >= 0)
+
+
+def rows_created_since(
+    table: LakeTable, after_batch_id: int, snapshot: Snapshot | None = None,
+    upto_batch_id: int | None = None,
+) -> DataFrame:
+    """:func:`rows_created_in` over the committed ids in ``(after, upto]``."""
+    ids = _ids_since(table, snapshot, after_batch_id, upto_batch_id)
+    return rows_created_in(table, ids, snapshot)
+
+
+def rows_closed_since(
+    table: LakeTable, after_batch_id: int, snapshot: Snapshot | None = None,
+    upto_batch_id: int | None = None, include_tombstones: bool = False,
+) -> DataFrame:
+    """:func:`rows_closed_in` over the committed ids in ``(after, upto]``."""
+    ids = _ids_since(table, snapshot, after_batch_id, upto_batch_id)
+    return rows_closed_in(table, ids, snapshot, include_tombstones)
+
+
 def changed_keys_since(
     table: LakeTable, after_batch_id: int, snapshot: Snapshot | None = None
 ) -> DataFrame:
-    """Distinct business keys touched after the checkpoint batch.
+    """EXACT set of distinct business keys touched by the committed
+    batches after the checkpoint batch — the supersession set of
+    late-batch repair (``CdcOrchestrator.apply_late_batch``) and the
+    drop set of snapshot handover (``apply_snapshot_batch``).
 
-    A key is "touched" when a version was CREATED after the checkpoint
-    (insert/update — ``batch_id > after``, file-skipped via the max side
-    of the stats) OR a version was CLOSED after it (a pure delete creates
-    no new version, so the closed row still carries its original
-    batch_id; those are found by the history files' closing-batch commit
-    tags — pure file selection). Delete TOMBSTONES ride the closed side
+    A key is "touched" when one of those batches CREATED a version
+    (insert/update) or CLOSED one: a pure delete creates no new version,
+    so the closed row still carries its original batch_id and only the
+    closed side finds it. Delete TOMBSTONES ride the closed side
     deliberately: a delete that matched nothing still touched its key,
-    and a snapshot-handover consumer must see it or it will resurrect
-    the row (``CdcOrchestrator.apply_snapshot_batch``).
-
-    RETENTION GUARD: a compaction/rebucket that has already rewritten a
-    closing batch's history files erases its ``batch-``/``compact-delta-``
-    path tag (the rewrite carries a ``compact-``/``rebucket-`` tag with no
-    closing batch id). Those files are treated as "closing batch UNKNOWN"
-    and included in the scan set — a safe over-approximation (a consumer
-    re-pulls some unchanged keys; it never misses a deleted one). The
-    exact answer still requires checkpointing at least as often as
-    compaction — the same retention contract as Iceberg incremental
-    reads; ``rows_closed_in`` can recover per-batch exactness via the
-    committing snapshot."""
+    and a handover or late batch must see it or it will resurrect the
+    row. Exact across compaction within snapshot retention; past it the
+    close-set rule raises instead of over- or under-approximating."""
     snap = snapshot or table.snapshot
-    created_rels = [
-        rel
-        for rel in _all_rels(snap)
-        if (mm := snap.file_stats.get(rel)) is None or mm[1] > after_batch_id
-    ]
-    closed_rels = [
-        rel
-        for fl in snap.hist_files.values()
-        for rel in fl
-        if (b := _closing_batch_of(rel)) is None or b > after_batch_id
-    ]
-
-    def keys_of(paths: list[str], flt=None) -> DataFrame | None:
-        if not paths:
-            return None
-        df = table.read_files(
-            [os.path.join(table.path, rel) for rel in paths], snapshot=snap
-        )
-        if flt is not None:
-            df = df.filter(flt)
-        return df.select(*snap.key_cols)
-
-    created = keys_of(created_rels, F.col("batch_id") > after_batch_id)
-    closed = keys_of(closed_rels)
-    if created is None and closed is None:
-        from pyspark.sql.types import StructType
-
-        key_schema = StructType(
-            [f for f in snap.schema.fields if f.name in snap.key_cols]
-        )
-        return table.spark.createDataFrame([], key_schema)
-    out = created if closed is None else (closed if created is None else created.unionByName(closed))
-    return out.distinct()
-
-
-def changed_keys_since_exact(table: LakeTable, after_batch_id: int) -> DataFrame:
-    """EXACT set of keys changed by batches with id > ``after_batch_id``
-    (the late-batch supersession set, ``CdcOrchestrator.apply_late_batch``).
-
-    :func:`changed_keys_since` is the fast path, but it OVER-approximates
-    once a compaction/rebucket erased closing tags ("closing batch
-    unknown" files are included) — safe for consumers that merely
-    re-pull extra keys, WRONG where membership DROPS events
-    (over-approximation = data loss). When such a rewrite exists, the
-    set is rebuilt per batch instead: created keys from row-level
-    batch_id (exact across compaction) plus closed keys from each batch's
-    committing snapshot (time travel; ``strict=True`` raises when
-    retention has expired it — a missed close would resurrect a newer
-    delete, so "repair window passed" must be an error, not a silent
-    wrong answer)."""
-    key = list(table.key_cols)
-    # Gate the fast path STRUCTURALLY, not via retained snapshot
-    # history: a compaction erases closing tags from the files it
-    # rewrites, and once expire_snapshots drops the compaction
-    # snapshot the history-based trigger goes blind — the fast path
-    # would then include unknown-closing-tag files wholesale and
-    # wrongly supersede (silently drop) legitimate late events. Any
-    # history file whose rel carries no closing-batch tag forces the
-    # exact per-batch reconstruction, regardless of what history
-    # still shows.
-    tags_intact = all(
-        _closing_batch_of(rel) is not None
-        for fl in table.snapshot.hist_files.values()
-        for rel in fl
+    ids = _ids_since(table, snap, after_batch_id)
+    key = snap.key_cols
+    return (
+        rows_created_in(table, ids, snap).select(*key)
+        .unionByName(rows_closed_in(table, ids, snap, include_tombstones=True).select(*key))
+        .distinct()
     )
-    if tags_intact:
-        return changed_keys_since(table, after_batch_id).select(*key)
-    touched = None
-    for b in sorted(table.snapshot.committed_batches):
-        if b <= after_batch_id:
-            continue
-        part = rows_created_in(table, b).select(*key).unionByName(
-            rows_closed_in(table, b, include_tombstones=True, strict=True).select(*key)
-        )
-        touched = part if touched is None else touched.unionByName(part)
-    if touched is None:  # nothing committed after the checkpoint
-        return table.read(family="current").select(*key).limit(0)
-    return touched.distinct()
 
 
 # -- the consumer core --------------------------------------------------------
@@ -411,35 +307,12 @@ def check_rollback_invalidations(
     return len(invs)
 
 
-def needs_per_batch_fallback(table: LakeTable, ck: dict | None) -> bool:
-    """Per-batch time-travel path trigger, three conditions: compaction
-    since checkpoint, bootstrap over an already-compacted table, or an
-    expired checkpoint snapshot (ADVICE r04). Compaction/rebucket rewrites
-    history files and erases their closing-batch tags, so the one-scan
-    :func:`rows_closed_since` would under-count."""
-    hist = table.history()
-    since = ck["snapshot_id"] if ck else -1
-    if ck is not None and not any(h["snapshot_id"] <= since for h in hist):
-        import warnings
-
-        warnings.warn(
-            f"consumer checkpoint snapshot {since} was expired from "
-            f"{table.path}; forcing the per-batch time-travel "
-            "refresh path (exact only within snapshot retention)",
-            stacklevel=3,
-        )
-        return True
-    return any(
-        h["snapshot_id"] > since
-        and h["summary"].get("operation") in ("compact", "rebucket")
-        for h in hist
-    )
-
-
 @dataclass(frozen=True)
 class ChangelogRange:
     """One refresh's unconsumed committed batches, ``pending`` (empty when
-    the consumer is up to date), and how to read their changelog."""
+    the consumer is up to date), and their exact changelog. ``pending``
+    may be non-contiguous with the consumed set (a late batch below the
+    watermark, ``apply_late_batch``): every read names exactly its ids."""
 
     table: LakeTable
     snap: Snapshot
@@ -448,7 +321,6 @@ class ChangelogRange:
     pending: tuple[int, ...]
     pending_mor: tuple[int, ...]
     rollback_epoch: int
-    fallback: bool
 
     @property
     def last(self) -> int:
@@ -459,33 +331,19 @@ class ChangelogRange:
         return self.pending[-1]
 
     @property
-    def contiguous(self) -> bool:
-        # A LATE id below the watermark (apply_late_batch) makes the
-        # pending set non-contiguous with the consumed one: the fast
-        # (last, upto] range reads would re-consume already-folded
-        # batches (double-counting deltas), so fall to exact per-batch
-        # reads of exactly the pending ids.
-        return not self.consumed or self.pending[0] > self.last
-
-    def _per_batch(self, read) -> DataFrame:
-        return reduce(
-            DataFrame.unionByName, [read(self.table, b, self.snap) for b in self.pending]
-        )
+    def fallback(self) -> bool:
+        """Whether some pending batch's closes are read from its committing
+        snapshot (a compaction or rebucket followed its commit)."""
+        return bool(_rewrite_followed(self.table, set(self.pending), self.snap))
 
     def created(self) -> DataFrame:
         """Every row version the pending batches created."""
-        if self.contiguous:
-            return rows_created_since(self.table, self.last, self.snap, upto_batch_id=self.upto)
-        return self._per_batch(rows_created_in)
+        return rows_created_in(self.table, self.pending, self.snap)
 
     def closed(self) -> DataFrame:
-        """Every version the pending batches closed. Exact: after a
-        compaction the per-batch reads time-travel to each committing
-        snapshot — an over-approximated close would retract a live,
-        untouched row."""
-        if self.fallback or not self.contiguous:
-            return self._per_batch(rows_closed_in)
-        return rows_closed_since(self.table, self.last, self.snap, upto_batch_id=self.upto)
+        """Every version the pending batches closed — exact: an
+        over-approximated close would retract a live, untouched row."""
+        return rows_closed_in(self.table, self.pending, self.snap)
 
     def checkpoint(self, **extras) -> dict:
         """The checkpoint body after folding this range, plus the
@@ -555,5 +413,4 @@ class ChangelogConsumer:
             pending=tuple(pending),
             pending_mor=tuple(pending_mor),
             rollback_epoch=epoch,
-            fallback=bool(pending) and needs_per_batch_fallback(self.source, ck),
         )

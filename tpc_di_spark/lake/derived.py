@@ -33,9 +33,9 @@ Per refresh, for the unconsumed committed batch range ``(last, upto]``:
    no-op, and the checkpoint flips after. Batch ids inherit the parent's
    ``upto`` (strictly monotone across refreshes).
 
-Everything is DataFrame ops — a refresh costs one file-skipped range
-scan, one fold shuffle and one key-partitioned child apply: O(changed
-rows), independent of either table's size. The range, checkpoint and
+Everything is DataFrame ops — a refresh costs one file-skipped scan of
+the pending batches' changelog, one fold shuffle and one key-partitioned
+child apply: O(changed rows), independent of either table's size. The range, checkpoint and
 guards are the shared consumer contract
 (:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
 "Downstream fan-out").
@@ -147,8 +147,8 @@ class DerivedTableSync(ChangelogConsumer):
             return {"skipped": "up-to-date", "batch_id": rng.last}
         upto = rng.upto
         # Late-repair ids below the watermark (apply_late_batch) make the
-        # range non-contiguous and it reads exactly the pending ids per
-        # batch. Key safety: a late parent batch only creates/closes rows
+        # pending set non-contiguous; the changelog reads name exactly its
+        # ids. Key safety: a late parent batch only creates/closes rows
         # for keys NO higher batch touched (its supersession rule), so the
         # child events from a late refresh never collide with child rows
         # written by higher-numbered refreshes — the normal child apply

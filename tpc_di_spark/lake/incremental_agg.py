@@ -27,15 +27,15 @@ Maintained stats per ``conv_id``:
 - ``last_event_ts``    — max event ts over created versions: a monotone
   "latest activity" watermark (a delete does not rewind it).
 
-Scale shape: one refresh costs one file-skipped scan of the range's
-created/closed versions (``rows_created_since`` / ``rows_closed_since``
-— per-file ``batch_id`` stats bound the scan set to the touched
-batches) unioned with the conv-cardinality state and folded by one
-``groupBy(conv_id)`` — O(changed + state), independent of table age or
-lineage depth.
+Scale shape: one refresh costs one file-skipped scan of the pending
+batches' created/closed versions (``rows_created_in`` /
+``rows_closed_in`` — per-file ``batch_id`` stats and closing-commit
+path tags bound the scan set to the touched batches) unioned with the
+conv-cardinality state and folded by one ``groupBy(conv_id)`` —
+O(changed + state), independent of table age or lineage depth.
 
 Checkpointing, crash safety, the rollback guard, the merge-on-read
-horizon and the compaction fallback are the shared consumer contract
+horizon and the exact close sets are the shared consumer contract
 (:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
 "Downstream fan-out").
 """

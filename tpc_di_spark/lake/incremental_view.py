@@ -61,7 +61,7 @@ its last live row dies (its monotone counters still carry information);
 filter ``count_live > 0`` at read time for live-only marts.
 
 Checkpointing, the rollback guard, the merge-on-read horizon and the
-compaction fallback are the shared consumer contract
+exact close sets are the shared consumer contract
 (:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
 "Downstream fan-out"); this module adds the aggregate fold
 (``ConvStatsConsumer`` is the fixed-spec original, kept as the q49
