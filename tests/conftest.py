@@ -45,3 +45,45 @@ def bucket_holding_closes(table, batch_id: int) -> int:
         for b, fl in sorted(table.snapshot.hist_files.items())
         if any(tag in rel for rel in fl)
     )
+
+
+def _generate_nodes(node, compiled=False):
+    """Yield, per ``Generate`` node of a physical plan, whether it runs
+    inside whole-stage codegen: below a ``WholeStageCodegen`` node and
+    not cut off from it by an ``InputAdapter`` (a stage boundary)."""
+    name = node.nodeName()
+    if name.startswith("WholeStageCodegen"):
+        compiled = True
+    elif name == "InputAdapter":
+        compiled = False
+    elif name == "Generate":
+        yield compiled
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _generate_nodes(kids.apply(i), compiled)
+
+
+def assert_compiled_plan(df) -> int:
+    """Assert that ``df``'s physical plan has no higher-order function
+    (they have no code generation) and that every ``Generate`` runs
+    inside whole-stage codegen. Plans with AQE off (its initial plan
+    defers stage codegen) and with no expression string truncated.
+    Returns the number of ``Generate`` nodes checked."""
+    spark = df.sparkSession
+    confs = {"spark.sql.adaptive.enabled": "false", "spark.sql.debug.maxToStringFields": "100000"}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+        text = plan.toString()
+        generates = list(_generate_nodes(plan))
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "lambdafunction" not in text.lower(), text
+    assert all(generates), text
+    return len(generates)

@@ -108,8 +108,61 @@ def test_sum_inversion_under_update_and_delete(spark, tmp_path):
     orch.apply_batch(_batch(spark, BATCHES[2]), 2)
     got = {r.conv_id: (r.n, r.chars) for r in view.refresh().collect()}
     assert got["a"] == (2, len("hello hello hello") + len("hi there friend"))
-    assert got["b"] == (0, 0), "delete must invert the closed version's sum"
+    # the delete inverts the closed version's sum, and a group with no
+    # live value reads SQL SUM's NULL
+    assert got["b"] == (0, None)
     assert got["c"] == (1, 2)
+
+
+# batch 2 for the emptied-group tests: every live "user" row dies, and a
+# new role arrives
+EMPTY_USER = [
+    ("D", 10, "a", 0, None, None, T0 + dt.timedelta(hours=1)),
+    ("D", 11, "b", 0, None, None, T0 + dt.timedelta(hours=1)),
+    ("I", 12, "d", 0, "tool", "t", T0 + dt.timedelta(hours=1)),
+]
+
+
+def test_sum_of_emptied_group_is_null(spark, tmp_path):
+    """Deleting every live row of a group leaves SUM over no rows: NULL,
+    as the full recompute reads, not the 0 the signed sum nets to."""
+    table, orch = _make(spark, tmp_path)
+    view = IncrementalView(table, str(tmp_path / "v"), ["role"], ROLE_SPEC)
+    orch.apply_batch(_batch(spark, BATCHES[1]), 1)
+    _viewed(view)
+    orch.apply_batch(_batch(spark, EMPTY_USER), 2)
+    got = _viewed(view)
+    assert got == _full_recompute(table)
+    assert got["user"][:2] == (0, None)
+    # the group comes back to life from its NULL sum
+    orch.apply_batch(_batch(spark, [("I", 13, "e", 0, "user", "abc", T0)]), 3)
+    got = _viewed(view)
+    assert got == _full_recompute(table)
+    assert got["user"][:2] == (1, 3)
+
+
+def test_legacy_state_dir_without_sum_count_column(spark, tmp_path):
+    """A state dir written before sum_live kept its hidden live count
+    refreshes and reads as before: its groups keep the plain signed sum
+    (an emptied one reads 0), while groups new to the view get SQL
+    semantics."""
+    import json
+    import os
+
+    table, orch = _make(spark, tmp_path)
+    view = IncrementalView(table, str(tmp_path / "v"), ["role"], ROLE_SPEC)
+    orch.apply_batch(_batch(spark, BATCHES[1]), 1)
+    view.refresh()
+    ck = view._load_ckpt()
+    old = spark.read.parquet(os.path.join(view.state_dir, ck["state_rel"]))
+    old.drop("_h_n_live_chars").write.parquet(os.path.join(view.state_dir, "state-legacy"))
+    view.fs.replace_text(view._ckpt_path(), json.dumps({**ck, "state_rel": "state-legacy"}))
+    orch.apply_batch(_batch(spark, EMPTY_USER), 2)
+    got, want = _viewed(view), _full_recompute(table)
+    assert got.keys() == want.keys() == {"user", "assistant", "tool"}
+    assert got["user"] == (0, 0) + want["user"][2:]
+    assert got["assistant"] == want["assistant"]
+    assert got["tool"] == want["tool"]
 
 
 def test_watermarks_do_not_rewind_on_delete(spark, tmp_path):

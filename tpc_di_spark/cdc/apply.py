@@ -196,14 +196,17 @@ def merge_batch_rows(
     )
 
     # Emit the rows in ONE pass over the join: a multi-branch union would
-    # make Spark execute the (dominant) join twice. array -> filter-null ->
-    # explode keeps the whole merge a single joined scan. History rows are
+    # make Spark execute the (dominant) join twice. History rows are
     # Row-1-only emissions (unmatched target side), so the output is
     # history ∪ kept ∪ closed ∪ new-current ∪ tombstones from one
-    # operator tree.
-    merged = j.select(
-        F.explode(
-            F.array_compact(
+    # operator tree. Explode all three slots, THEN drop the NULL ones:
+    # never array_compact or filter(lambda) on the array — higher-order
+    # functions have no code generation, so the Generate would fall out
+    # of whole-stage codegen and the expression interpreter would build
+    # every joined row's structs (tests/test_codegen_guard.py).
+    merged = (
+        j.select(
+            F.explode(
                 F.array(
                     F.when(t_present, kept_or_closed),
                     F.when(s_present & (F.col("s.cdc_flag") != F.lit("D")), new_current),
@@ -212,9 +215,11 @@ def merge_batch_rows(
                         tombstone,
                     ),
                 )
-            )
-        ).alias("_r")
-    ).select("_r.*")
+            ).alias("_r")
+        )
+        .where(F.col("_r").isNotNull())
+        .select("_r.*")
+    )
 
     out_cols = [f.name for f in table.schema.fields]
     return merged.select(*out_cols)

@@ -47,10 +47,11 @@ def format_phone(ctry, area, local, ext) -> Column:
 def nameplate_tags(predicates_and_tags: Sequence[tuple[Column, str]]) -> Column:
     """Ordered marketing-nameplate derivation — SURVEY P6
     (`Historical/prospect.py:184-216`): evaluate threshold predicates in
-    order, join matching tags with '+', NULL when none match."""
+    order, join matching tags with '+', NULL when none match.
+    ``concat_ws`` skips NULL parts and compiles; an ``array_compact``
+    form would be a higher-order function without code generation."""
     parts = [F.when(pred, F.lit(tag)) for pred, tag in predicates_and_tags]
-    joined = F.array_join(F.array_compact(F.array(*parts)), "+")
-    return F.nullif(joined, F.lit(""))
+    return F.nullif(F.concat_ws("+", *parts), F.lit(""))
 
 
 def decode_flag(c, truthy: str = "1") -> Column:

@@ -22,9 +22,11 @@ semantics require it — INVERTIBLE, the property that makes exact
 maintenance under updates/deletes possible without per-key row state):
 
 - ``count_live``            — live row count: Σ created − Σ closed.
-- ``sum_live(expr)``        — Σ expr over live rows: add created
-  versions' values, subtract closed versions' values (an update nets to
-  new − old because the old version closes in the same batch).
+- ``sum_live(expr)``        — SQL SUM of expr over live rows: add
+  created versions' values, subtract closed versions' values (an update
+  nets to new − old because the old version closes in the same batch).
+  A hidden live non-NULL count makes a group with no live non-NULL
+  value read NULL, not the 0 the signed sum nets to.
 - ``count_versions``        — monotone created-version counter.
 - ``count_closed``          — monotone closed-version counter.
 - ``max_created(expr)`` / ``min_created(expr)`` — monotone extremes over
@@ -100,6 +102,12 @@ _KINDS = (
 _LIVE_EXTREMES = ("max_live", "min_live")
 
 
+def _sum_unless_null(c: str) -> Column:
+    """SUM that is NULL when any input is NULL (a legacy state row's
+    missing count stays unknown instead of restarting from 0)."""
+    return F.when(F.count(F.lit(1)) == F.count(c), F.sum(c))
+
+
 class IncrementalView(ChangelogConsumer):
     """An incrementally-maintained aggregate view over a transcript
     :class:`LakeTable`.
@@ -159,6 +167,8 @@ class IncrementalView(ChangelogConsumer):
                 agg_fields.append(StructField(name, LongType(), False))
             elif kind == "sum_live":
                 agg_fields.append(StructField(name, type_of(F.sum(F.expr(expr))), True))
+                # NULL in a state dir written before the column existed
+                agg_fields.append(StructField(f"_h_n_{name}", LongType(), True))
             elif kind == "avg_live":
                 agg_fields.append(StructField(name, DoubleType(), True))
                 agg_fields.append(
@@ -243,10 +253,16 @@ class IncrementalView(ChangelogConsumer):
                 # a created-only group must read 0, not an empty sum's NULL
                 out[name] = slot(F.sum, old, F.lit(0).cast("long"), one)
             elif kind == "sum_live":
-                # SQL sum skips NULLs: a group whose expr was never
-                # non-NULL stays NULL rather than a manufactured 0.
-                xt = x.cast(typ[name])
-                out[name] = slot(F.sum, old, xt, -xt)
+                # SQL SUM over no non-NULL live value is NULL, not the 0
+                # that Σ created − Σ closed nets to: keep the live
+                # non-NULL count beside the sum, as avg_live does. A
+                # legacy state row has no count (NULL), and its group
+                # keeps the old Σ-only reading.
+                hn = f"_h_n_{name}"
+                xt, nn = x.cast(typ[name]), x.isNotNull().cast("long")
+                s = slot(F.sum, old, xt, -xt)
+                out[hn] = n = slot(_sum_unless_null, F.col(hn), nn, -nn)
+                out[name] = F.when(~n.eqNullSafe(0), s)
             elif kind == "avg_live":
                 hs, hn = f"_h_sum_{name}", f"_h_n_{name}"
                 xt, nn = x.cast(typ[hs]), x.isNotNull().cast("long")
