@@ -1,3 +1,5 @@
+import contextlib
+
 import pandas as pd
 import pytest
 
@@ -63,27 +65,66 @@ def _generate_nodes(node, compiled=False):
         yield from _generate_nodes(kids.apply(i), compiled)
 
 
-def assert_compiled_plan(df) -> int:
-    """Assert that ``df``'s physical plan has no higher-order function
-    (they have no code generation) and that every ``Generate`` runs
-    inside whole-stage codegen. Plans with AQE off (its initial plan
-    defers stage codegen) and with no expression string truncated.
-    Returns the number of ``Generate`` nodes checked."""
-    spark = df.sparkSession
-    confs = {"spark.sql.adaptive.enabled": "false", "spark.sql.debug.maxToStringFields": "100000"}
+@contextlib.contextmanager
+def spark_conf(spark, confs: dict):
+    """Set session confs for the block, then restore (or unset) each."""
     saved = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        plan = df.select("*")._jdf.queryExecution().executedPlan()
-        text = plan.toString()
-        generates = list(_generate_nodes(plan))
+        yield
     finally:
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# AQE's initial plan defers stage codegen; no expression string truncated.
+_PLAN_CONFS = {"spark.sql.adaptive.enabled": "false", "spark.sql.debug.maxToStringFields": "100000"}
+
+
+def assert_compiled_plan(df) -> int:
+    """Assert that ``df``'s physical plan has no higher-order function
+    (they have no code generation) and that every ``Generate`` runs
+    inside whole-stage codegen. Plans with AQE off (its initial plan
+    defers stage codegen) and with no expression string truncated.
+    Returns the number of ``Generate`` nodes checked."""
+    with spark_conf(df.sparkSession, _PLAN_CONFS):
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+        text = plan.toString()
+        generates = list(_generate_nodes(plan))
     assert "lambdafunction" not in text.lower(), text
     assert all(generates), text
     return len(generates)
+
+
+def _stage_holds(node, op: str) -> bool:
+    """Whether ``op`` runs in the codegen stage ``node`` belongs to: in
+    its subtree without crossing an ``InputAdapter`` (a stage boundary)."""
+    if node.nodeName() == op:
+        return True
+    if node.nodeName() == "InputAdapter":
+        return False
+    kids = node.children()
+    return any(_stage_holds(kids.apply(i), op) for i in range(kids.size()))
+
+
+def _codegen_stages(node):
+    if node.nodeName().startswith("WholeStageCodegen"):
+        yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _codegen_stages(kids.apply(i))
+
+
+def stage_source(df, op: str) -> str:
+    """Generated Java source of the whole-stage codegen stage of ``df``
+    that holds the physical operator ``op`` (AQE off). Spark caches
+    compiled classes by this source, so two plans with equal source
+    compile the stage once."""
+    with spark_conf(df.sparkSession, _PLAN_CONFS):
+        plan = df._jdf.queryExecution().executedPlan()
+        (stage,) = [w for w in _codegen_stages(plan) if _stage_holds(w.child(), op)]
+        return stage.doCodeGen()._2().body()

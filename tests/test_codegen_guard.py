@@ -8,7 +8,7 @@ import datetime as dt
 
 import pyspark.sql.functions as F
 
-from tests.conftest import assert_compiled_plan
+from tests.conftest import assert_compiled_plan, stage_source
 from tpc_di_spark.cdc import CdcOrchestrator
 from tpc_di_spark.cdc.apply import align_events, insert_only_rows, lww_dedup, merge_batch_rows
 from tpc_di_spark.cdc.orchestrator import bootstrap_table
@@ -54,6 +54,17 @@ def test_merge_emission_compiles(spark, tmp_path):
         ("c", 2, True),                   # inserted
         ("zz", -2, False),                # tombstone
     }
+
+
+def test_merge_join_stage_is_batch_invariant(spark, tmp_path):
+    """The batch id reaches the merge as an events-side column, not as a
+    literal inlined into the join stage: batches 2 and 3 generate the same
+    join-stage source, so Spark compiles that class once, not per batch."""
+    t = _table(spark, tmp_path)
+    tgt, _ = t.read_bucketed(family="current")
+    ev = _deduped(spark, t)
+    src = [stage_source(merge_batch_rows(tgt, ev, b, t), "ShuffledHashJoin") for b in (2, 3)]
+    assert src[0] == src[1]
 
 
 def test_insert_only_rows_compile(spark, tmp_path):

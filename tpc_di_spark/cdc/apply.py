@@ -143,7 +143,19 @@ def merge_batch_rows(
     # free. Distribution requirements are identical, so the merge stays
     # Exchange-free (bucketed scan + bucket_partitioned events); the
     # hint only swaps the physical operator.
-    s = events.withColumn("_s_present", F.lit(True)).hint("shuffle_hash").alias("s")
+    # The batch id rides the events side as a column, `_s_bid`, and the
+    # new-current and tombstone rows take it from there. As a literal it
+    # would be inlined into the join stage's generated source, so every
+    # batch would compile that ~35 KB class again; Spark does not
+    # propagate a constant across a full-outer join, so the join stage is
+    # the same for every batch and only the events-side projection
+    # differs (tests/test_codegen_guard.py).
+    s = (
+        events.withColumn("_s_present", F.lit(True))
+        .withColumn("_s_bid", F.lit(batch_id).cast("int"))
+        .hint("shuffle_hash")
+        .alias("s")
+    )
     cond = F.col("t.is_current")
     for k in key:
         cond = cond & (F.col(f"t.{k}") == F.col(f"s.{k}"))
@@ -177,7 +189,7 @@ def merge_batch_rows(
         F.lit(True).alias("is_current"),
         F.col("s.ts").alias("effective_ts"),
         F.to_timestamp(F.lit(END_OF_TIME)).alias("end_ts"),
-        F.lit(batch_id).cast("int").alias("batch_id"),
+        F.col("s._s_bid").alias("batch_id"),
     )
 
     # Row 3: a DELETE that found no current row leaves a TOMBSTONE — a
@@ -192,7 +204,7 @@ def merge_batch_rows(
     # reason. The negative batch id is the exact, filterable marker:
     # genuine closed versions always keep their creating batch id (>= 1).
     tombstone = _tombstone_struct(
-        [F.col(f"s.{k}") for k in key], payload, table, F.col("s.ts"), batch_id
+        [F.col(f"s.{k}") for k in key], payload, table, F.col("s.ts"), F.col("s._s_bid")
     )
 
     # Emit the rows in ONE pass over the join: a multi-branch union would
@@ -225,10 +237,11 @@ def merge_batch_rows(
     return merged.select(*out_cols)
 
 
-def _tombstone_struct(key_cols, payload, table: LakeTable, ts_col, batch_id: int):
-    """The tombstone row image shared by merge_batch_rows and
-    insert_only_rows: payload NULL (except the event's own ``ts``),
-    zero-lifetime lineage, ``batch_id = -batch`` marker."""
+def _tombstone_struct(key_cols, payload, table: LakeTable, ts_col, bid_col):
+    """The merge's tombstone row image (``insert_only_rows`` flips a D row
+    to the same image in place): payload NULL (except the event's own
+    ``ts``), zero-lifetime lineage, ``batch_id = -batch`` marker, negated
+    from the int column ``bid_col``."""
     dtypes = {f.name: f.dataType for f in table.schema.fields}
     return F.struct(
         *[kc.alias(k) for kc, k in zip(key_cols, table.key_cols)],
@@ -239,7 +252,7 @@ def _tombstone_struct(key_cols, payload, table: LakeTable, ts_col, batch_id: int
         F.lit(False).alias("is_current"),
         ts_col.alias("effective_ts"),
         ts_col.alias("end_ts"),
-        F.lit(-batch_id).cast("int").alias("batch_id"),
+        (-bid_col).alias("batch_id"),
     )
 
 

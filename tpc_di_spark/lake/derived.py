@@ -35,7 +35,11 @@ Per refresh, for the unconsumed committed batch range ``(last, upto]``:
 
 Everything is DataFrame ops — a refresh costs one file-skipped scan of
 the pending batches' changelog, one fold shuffle and one key-partitioned
-child apply: O(changed rows), independent of either table's size. The range, checkpoint and
+child apply. The scan and the fold are O(changed rows); the child apply
+is a copy-on-write merge that rewrites the current family of every child
+bucket its events touch, and a batch of a few hundred keys touches every
+one of 8 buckets. So a refresh also pays O(the child's live set), not
+only O(changed rows). The range, checkpoint and
 guards are the shared consumer contract
 (:class:`~tpc_di_spark.lake.changelog.ChangelogConsumer`, README
 "Downstream fan-out").

@@ -78,6 +78,17 @@ def get_spark(
             "spark.hadoop.parquet.compression.codec.zstd.level",
             os.environ.get("SPARK_GRAFT_ZSTD_LEVEL", "3"),
         )
+        # Timestamps as INT64 TIMESTAMP(MICROS, UTC), Iceberg's
+        # `timestamptz`, not Spark's default INT96: a deprecated 12-byte
+        # type with no min/max statistics. `ts`, `effective_ts` and
+        # `end_ts` were 58% of a CoW bulk batch's data-file bytes as INT96
+        # (686 KB of 1.18 MB, perfbench sizes, seed 41); INT64 cut those
+        # files 19.8% (current `ts` 6.83 -> 4.44 B/row, history `end_ts`
+        # 7.00 -> 4.74 B/row). Fixed, not a knob: readers decode each
+        # file's own encoding, so INT96 files written before stay valid;
+        # a current file turns INT64 at its bucket's next merge, a history
+        # file at compaction.
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
