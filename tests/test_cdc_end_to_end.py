@@ -239,7 +239,7 @@ def test_crash_resume_mid_batch(spark, tmp_path):
     o_crash.apply_batch(batches[0][1], 1)
 
     calls = {"n": 0}
-    orig = t_crash.write_data_files_split
+    orig = t_crash.write_data_files
 
     def flaky(df, tag, **kw):
         calls["n"] += 1
@@ -247,10 +247,10 @@ def test_crash_resume_mid_batch(spark, tmp_path):
             raise RuntimeError("simulated kill")
         return orig(df, tag, **kw)
 
-    t_crash.write_data_files_split = flaky
+    t_crash.write_data_files = flaky
     with pytest.raises(RuntimeError, match="simulated kill"):
         o_crash.apply_batch(batches[1][1], 2)
-    t_crash.write_data_files_split = orig
+    t_crash.write_data_files = orig
 
     # Crash left the table on the pre-batch snapshot (atomicity).
     assert t_crash.refresh().snapshot.snapshot_id == t_ref.read_snapshot(
@@ -361,7 +361,7 @@ def test_resume_across_geometry_change(spark, tmp_path):
 
     # Kill after the first group's manifest is sealed.
     calls = {"n": 0}
-    orig = t.write_data_files_split
+    orig = t.write_data_files
 
     def flaky(df, tag, **kw):
         if calls["n"] == 1:
@@ -369,10 +369,10 @@ def test_resume_across_geometry_change(spark, tmp_path):
         calls["n"] += 1
         return orig(df, tag, **kw)
 
-    t.write_data_files_split = flaky
+    t.write_data_files = flaky
     with pytest.raises(RuntimeError, match="simulated kill"):
         grouped.apply_batch(batches[1][1], 2)
-    t.write_data_files_split = orig
+    t.write_data_files = orig
 
     # Resume under a DIFFERENT geometry: single-group fast path.
     single = CdcOrchestrator(t, buckets_per_group=8)

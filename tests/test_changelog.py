@@ -223,3 +223,45 @@ def test_changelog_consistent_after_resume(spark, tmp_path):
     )
     closed2 = rows_closed_in(table, 2).collect()
     assert len(closed2) == 1 and closed2[0].text == "v1"
+
+
+def test_every_write_path_records_batch_stats(spark, tmp_path):
+    """Every writer passes its files' batch_id ranges to the commit: after
+    a CoW apply, an append, a compaction and a rebucket every current and
+    history file carries a ``file_stats`` entry, so a changelog read
+    after a rewrite still selects only the files whose range holds the
+    batch instead of every file without stats."""
+    from tpc_di_spark.lake.maintenance import compact, rebucket
+
+    table = _replayed(spark, tmp_path)  # three CoW batches
+
+    def all_files():
+        s = table.snapshot
+        return [rel for fmap in (s.files, s.hist_files) for fl in fmap.values() for rel in fl]
+
+    def check_batch_4():
+        s = table.snapshot
+        assert [rel for rel in all_files() if rel not in s.file_stats] == []
+        hist = {rel for fl in s.hist_files.values() for rel in fl}
+        sel = files_for_batch(table, 4)
+        assert sel and set(sel) == {
+            rel for rel in all_files() if s.file_stats[rel][0] <= 4 <= s.file_stats[rel][1]
+        }
+        assert hist and not hist & set(sel), "closed versions of batches 1-3 skipped"
+        assert sorted(r.conv_id for r in rows_created_in(table, 4).collect()) == ["d", "e"]
+
+    assert all(rel in table.snapshot.file_stats for rel in all_files())
+    ts = dt.datetime(2024, 1, 2)
+    end = dt.datetime(9999, 12, 31)
+    table.append(
+        spark.createDataFrame(
+            [(k, 0, "user", f"{k}0v1", ts, True, ts, end, 4) for k in ("d", "e")],
+            table.schema,
+        ),
+        batch_id=4,
+    )
+    check_batch_4()
+    compact(table, max_files_per_bucket=1)
+    check_batch_4()
+    rebucket(table, 8)
+    check_batch_4()

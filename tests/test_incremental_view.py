@@ -540,3 +540,25 @@ def test_refresh_runs_one_fold_and_one_write(spark, tmp_path):
     quiet = refresh_jobs(spark, ext, "view-jobs-extremes")
     assert quiet <= 2, quiet
     assert {r.role: (r.hi, r.lo) for r in ext.state().collect()} == {"user": (9, 1)}
+
+
+def test_state_schema_derived_once_per_table_schema(spark, tmp_path):
+    """The state schema is derived once per table schema, not on every
+    call (three per refresh, each a probe frame and one projection per
+    typed aggregate), and re-derived when the table schema evolves."""
+    from tpc_di_spark.schemas import TRANSCRIPT_SCHEMA_EVOLVED
+
+    table, orch = _make(spark, tmp_path)
+    view = IncrementalView(table, str(tmp_path / "v"), ["role"], ROLE_SPEC)
+    derive, calls = view._derive_state_schema, []
+    view._derive_state_schema = lambda: calls.append(1) or derive()
+    want = derive()
+    for b in (1, 2):
+        orch.apply_batch(_batch(spark, BATCHES[b]), b)
+        assert _viewed(view) == _full_recompute(table)
+    assert len(calls) == 1 and view._state_schema() == want
+
+    table.evolve_schema(TRANSCRIPT_SCHEMA_EVOLVED)
+    orch.apply_batch(_batch(spark, BATCHES[3]), 3)
+    assert _viewed(view) == _full_recompute(table)
+    assert len(calls) == 2 and view._state_schema() == derive()

@@ -65,7 +65,7 @@ def test_replace_commit_copy_on_write(spark, tmp_path):
     before = {b: list(fl) for b, fl in t.snapshot.files.items()}
     # Rewrite bucket 0 only.
     rows = t.with_bucket(t.read(buckets=[0])).withColumn("text", F.lit("rewritten"))
-    files = t.write_data_files(rows, "rewrite-b0")
+    files, _ = t.write_data_files(rows, "rewrite-b0")
     t.commit(files, mode="replace", replaced_buckets=[0], summary={"operation": "test"})
     after = t.snapshot.files
     assert after["0"] != before["0"]
@@ -124,7 +124,7 @@ def test_exactly_once_batch_guard(spark, tmp_path):
     t.append(mkrows(spark, 10), batch_id=7)
     sid = t.snapshot.snapshot_id
     assert t.is_batch_committed(7)
-    files = t.write_data_files(t.with_bucket(mkrows(spark, 10)), "dup-attempt")
+    files, _ = t.write_data_files(t.with_bucket(mkrows(spark, 10)), "dup-attempt")
     snap = t.commit(files, mode="append", batch_id=7)
     assert snap.snapshot_id == sid, "recommitting batch 7 must be a no-op"
     assert t.read().count() == 10
@@ -205,6 +205,38 @@ def test_no_direct_fs_calls_outside_seam():
             if banned.search(code):
                 offenders.append(f"{mod.name}:{i}: {line.strip()}")
     assert not offenders, f"direct FS calls outside the seam: {offenders}"
+
+
+def test_one_data_file_writer():
+    """Every data file of the lake+cdc modules is written by ONE method,
+    ``LakeTable.write_data_files``: exactly one DataFrame ``.partitionBy(``
+    write (``Window.partitionBy`` is a window spec, not a write), so the
+    rules it applies — physical column names, family split, salted
+    attempt dirs — cannot be bypassed by a second copy. Comments and
+    docstrings never count: the scan walks the syntax tree."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent / "tpc_di_spark"
+    writers = []
+
+    def visit(node, mod, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "partitionBy"
+                and not (isinstance(child.func.value, ast.Name) and child.func.value.id == "Window")
+            ):
+                writers.append(f"{mod}:{scope}")
+            visit(child, mod, inner)
+
+    for mod in sorted(list((root / "lake").glob("*.py")) + list((root / "cdc").glob("*.py"))):
+        visit(ast.parse(mod.read_text()), mod.name, "")
+    assert writers == ["table.py:LakeTable.write_data_files"], writers
 
 
 def test_crash_during_version_flip_leaves_old_state_live(spark, tmp_path):
@@ -502,7 +534,7 @@ def test_snapshot_as_of_survives_expiry_holes(spark, tmp_path):
     after_pin = _time.time()
     _time.sleep(0.05)
     for i in range(4):
-        files = t.write_data_files(t.with_bucket(mkrows(spark, 10, text=f"v{i}")), f"rw-{i}")
+        files, _ = t.write_data_files(t.with_bucket(mkrows(spark, 10, text=f"v{i}")), f"rw-{i}")
         t.commit(files, mode="replace", replaced_buckets=list(range(4)),
                  summary={"operation": "test-rewrite"})
     expire_snapshots(t, keep_last=2)  # keeps {pin, last 2} -> hole between

@@ -199,3 +199,81 @@ def test_mor_append_refuses_nonpositive_batch_id(spark, tmp_path):
             apply_batch_mor(orch, events, bad)
         assert table.refresh().snapshot.snapshot_id == before
     assert pending_delta_batches(table) == []
+
+
+def _null_key_batch(spark):
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [
+            ("U", 1, "conv-000001", 0, "user", "kept", dt.datetime(2024, 6, 1)),
+            ("I", 2, None, 3, "user", "null conv", dt.datetime(2024, 6, 1)),
+        ],
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp",
+    )
+
+
+def test_mor_append_enforces_null_key_policy(spark, tmp_path):
+    """A MoR append counts its input in the one apply core: under the
+    default "error" policy a NULL-key event fails the batch before any
+    commit (no delta survives to compaction), under "drop" it is filtered
+    and reported as events_null_key in the returned and stored record."""
+    import json
+
+    from tpc_di_spark.cdc.generator import historical_batch
+    from tpc_di_spark.cdc.orchestrator import metrics_path
+
+    table = bootstrap_table(spark, str(tmp_path / "err"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)
+    orch.apply_batch(historical_batch(spark, 5, 2), 1)
+    before = table.snapshot.snapshot_id
+    with pytest.raises(ValueError, match="NULL business-key"):
+        apply_batch_mor(orch, _null_key_batch(spark), 2)
+    assert table.refresh().snapshot.snapshot_id == before
+    assert pending_delta_batches(table) == []
+    assert not table.is_batch_committed(2)
+
+    table = bootstrap_table(spark, str(tmp_path / "drop"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table, null_key_policy="drop")
+    orch.apply_batch(historical_batch(spark, 5, 2), 1)
+    rec = apply_batch_mor(orch, _null_key_batch(spark), 2)
+    assert rec["operation"] == "cdc-apply-mor"
+    assert (rec["events_in"], rec["events_null_key"]) == (2, 1)
+    with open(metrics_path(table.path, 2)) as f:
+        assert json.load(f)["events_null_key"] == 1
+    assert current_state_mor(table).filter("conv_id is null").count() == 0
+    compact_deltas(orch)
+    live = current_state(table)
+    assert live.filter("conv_id is null").count() == 0
+    assert live.filter("text = 'kept'").count() == 1
+
+
+def test_mor_append_leaves_no_staging(spark, tmp_path):
+    """No ``_staging/batch-*`` dir outlives a MoR append: not after a
+    commit, not after the exactly-once skip, and not after a conflict
+    whose retry finds the batch landed by a duelling driver."""
+    import os
+
+    from tests.test_concurrent_writers import B2, EV, _inject_competing_commit
+    from tpc_di_spark.lake.table import LakeTable
+
+    table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table, buckets_per_group=4)
+    staging = os.path.join(table.path, "_staging")
+
+    def leftover():
+        return os.listdir(staging) if os.path.isdir(staging) else []
+
+    apply_batch_mor(orch, spark.createDataFrame(B2, EV), 1)
+    assert leftover() == []
+    assert apply_batch_mor(orch, spark.createDataFrame(B2, EV), 1).get("skipped")
+    assert leftover() == []
+
+    other = CdcOrchestrator(LakeTable.load(spark, table.path), buckets_per_group=4)
+    _inject_competing_commit(
+        table, lambda: apply_batch_mor(other, spark.createDataFrame(B2, EV), 2)
+    )
+    rec = apply_batch_mor(orch, spark.createDataFrame(B2, EV), 2)
+    assert rec == {"batch_id": 2, "skipped": "already-committed"}
+    assert leftover() == []

@@ -107,7 +107,7 @@ def test_cdc_crash_resume_on_object_store(spark, tmp_path):
     o_crash.apply_batch(hist, 1)
 
     calls = {"n": 0}
-    orig = t_crash.write_data_files_split
+    orig = t_crash.write_data_files
 
     def flaky(df, tag, **kw):
         calls["n"] += 1
@@ -115,10 +115,10 @@ def test_cdc_crash_resume_on_object_store(spark, tmp_path):
             raise RuntimeError("simulated kill")
         return orig(df, tag, **kw)
 
-    t_crash.write_data_files_split = flaky
+    t_crash.write_data_files = flaky
     with pytest.raises(RuntimeError, match="simulated kill"):
         o_crash.apply_batch(incr, 2)
-    t_crash.write_data_files_split = orig
+    t_crash.write_data_files = orig
     assert not t_crash.refresh().is_batch_committed(2)
 
     rec = o_crash.apply_batch(incr, 2)

@@ -46,7 +46,7 @@ def test_tagged_snapshot_survives_expiry(spark, tmp_path):
     for i in range(4):
         # full rewrite: without the tag, the pinned snapshot's files
         # would be orphans after expiry
-        files = t.write_data_files(
+        files, _ = t.write_data_files(
             t.with_bucket(mkrows(spark, 10, text=f"v{i}")), f"rw-{i}"
         )
         t.commit(

@@ -6,8 +6,9 @@ batches localize, but a batch spraying updates across all conversations
 rewrites the whole table. The MoR path makes per-batch cost O(batch):
 
 - ``apply_batch_mor``: LWW-dedup the batch and APPEND it as bucket-
-  partitioned *delta files* (one commit, exactly-once by batch id; the
-  snapshot records the pending delta batches in order).
+  partitioned *delta files* through the orchestrator's one apply core
+  (one commit, exactly-once by batch id; the snapshot records the
+  pending delta batches in order).
 - ``current_state_mor``: the live view reconciled at read time — base
   current rows are treated as pseudo-'I' events and folded together with
   all pending deltas per key, in (batch_id, ts, cdc_dsn) order, through a
@@ -26,98 +27,58 @@ LakeTable snapshot log.
 from __future__ import annotations
 
 import os
-from typing import TYPE_CHECKING
+import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from tpc_di_spark.cdc.apply import data_cols, lww_dedup
+from tpc_di_spark.cdc.apply import data_cols
+from tpc_di_spark.cdc.orchestrator import CdcOrchestrator, _Op
 from tpc_di_spark.lake.table import LakeTable
-
-if TYPE_CHECKING:
-    from tpc_di_spark.cdc.orchestrator import CdcOrchestrator
 
 
 def pending_delta_batches(table: LakeTable) -> list[dict]:
     return list(table.snapshot.properties.get("delta_batches", []))
 
 
-def apply_batch_mor(orch: "CdcOrchestrator", events: DataFrame, batch_id: int) -> dict:
-    """Append one CDC batch as delta files. O(batch) work: generation ->
-    LWW dedup shuffle -> bucket-clustered write -> atomic commit."""
-    import time
+def apply_batch_mor(orch: CdcOrchestrator, events: DataFrame, batch_id: int) -> dict:
+    """Append one CDC batch as delta files. O(batch) work: the one apply
+    core (``CdcOrchestrator._apply``: entry guard, input accounting under
+    ``null_key_policy``, LWW dedup on the bucket-layout exchange, the one
+    data-file writer, seal, commit, metrics record) with the deduped
+    events as its rows and their files recorded in the ``delta_batches``
+    property, so plain ``read()`` keeps returning materialized SCD2 rows
+    only. One atomic commit records both the batch id (exactly-once) and
+    the delta list.
 
-    t0 = time.monotonic()
+    Delta rows never read the table, so the sealed manifest's basis names
+    this call rather than a snapshot: on a ``CommitConflict`` the core's
+    retry recomputes only the property against the refreshed snapshot
+    (the competing writer may have added deltas or compacted some away)
+    and re-commits the sealed files — no rewrite. A duelling driver of
+    the same batch id seals its own basis, so neither adopts the other's
+    files; the loser's resolve to the exactly-once skip and stay
+    unreferenced until ``expire_snapshots`` sweeps them."""
     table = orch.table
-    # The orchestrator's entry guard: batch_id >= 1 (a negative id is the
-    # delete-tombstone marker compaction would materialize), refresh,
-    # exactly-once skip, schema evolution, alignment.
-    events = orch._enter(events, batch_id)
-    if events is None:
-        return {"batch_id": batch_id, "skipped": "already-committed"}
-    # One exchange total: bucket-layout repartition feeds the LWW groupBy
-    # (distribution satisfied) AND bucket-co-locates the delta write (no
-    # write-side repartition — see LakeTable._bucket_clustered).
-    deduped = lww_dedup(table.bucket_partitioned(events), table.key_cols)
-    with_b = table.with_bucket(deduped)
-    tag = f"delta-{batch_id:06d}"
-    # Writer-salted attempt dirs (LakeTable.write_data_files): a duelling
-    # writer racing this same batch id writes its OWN files — neither
-    # side can delete the other's; the loser is resolved below at the
-    # commit CAS and its files become expire-swept orphans.
-    files = table.write_data_files(
-        with_b, tag, assume_bucket_partitioned=table.spark_aligned
+
+    def properties(files: dict) -> dict:
+        return {
+            **table.snapshot.properties,
+            "delta_batches": pending_delta_batches(table)
+            + [{"batch_id": batch_id, "files": files}],
+        }
+
+    op = _Op(
+        "cdc-apply-mor",
+        # The LWW-deduped batch, already in the bucket layout.
+        lambda src, _buckets: (src, table.spark_aligned),
+        mode="delta",
+        tag="delta",
+        basis=["cdc-apply-mor", uuid.uuid4().hex],
+        summary={"delta_batch": batch_id},
+        properties=properties,
     )
-
-    # Delta files are tracked in properties (not the base file map), so
-    # plain read() keeps returning materialized SCD2 rows only. One atomic
-    # commit records both the batch id (exactly-once) and the delta list.
-    # Optimistic-concurrency retry: unlike the CoW merge, the delta files'
-    # CONTENT is state-independent (a pure append of the batch's events),
-    # so a CommitConflict only needs the properties recomputed against the
-    # refreshed snapshot (the competing writer may have added deltas or
-    # compacted some away) and the CAS retried — no rewrite.
-    from tpc_di_spark.lake.table import CommitConflict
-
-    for attempt in range(3):
-        props = dict(table.snapshot.properties)
-        props["delta_batches"] = pending_delta_batches(table) + [
-            {"batch_id": batch_id, "files": files}
-        ]
-        try:
-            before = table.snapshot.snapshot_id
-            snap = table.commit(
-                new_files_by_bucket={},
-                mode="append",
-                batch_id=batch_id,
-                summary={"operation": "cdc-apply-mor", "delta_batch": batch_id},
-                new_properties=props,
-            )
-            if snap.snapshot_id == before:
-                # commit() hit its exactly-once guard without flipping:
-                # a duelling driver landed this very batch between our
-                # entry check and here; our delta files stay unreferenced
-                # (writer-salted dirs — nothing of the winner's was
-                # touched) and expire_snapshots sweeps them.
-                return {"batch_id": batch_id, "skipped": "already-committed"}
-            break
-        except CommitConflict:
-            table.refresh()
-            if table.is_batch_committed(batch_id):
-                # duelling driver committed this very batch; ours loses.
-                # Our salted-attempt files are unreferenced residue,
-                # swept by expire_snapshots.
-                return {"batch_id": batch_id, "skipped": "already-committed"}
-            if attempt == 2:
-                raise
-    elapsed = time.monotonic() - t0
-    return {
-        "batch_id": batch_id,
-        "mode": "mor",
-        "snapshot_id": table.snapshot.snapshot_id,
-        "delta_buckets": len(files),
-        "secs": round(elapsed, 3),
-    }
+    return orch._retrying(events, batch_id, op, retries=2)
 
 
 def _delta_schema(table: LakeTable):
@@ -145,7 +106,7 @@ def read_deltas(table: LakeTable, buckets=None) -> DataFrame:
         paths = [os.path.join(table.path, rel) for k in sorted(wanted) for rel in files[k]]
         if not paths:
             continue
-        df = table.spark.read.schema(schema).parquet(*paths).withColumn(
+        df = table.read_files(paths, schema=schema).withColumn(
             "_delta_batch", F.lit(b["batch_id"]).cast("int")
         )
         out = df if out is None else out.unionByName(df)
@@ -240,7 +201,7 @@ def lookup_mor(table: LakeTable, keys) -> DataFrame:
     return filt(current_state_mor(table, buckets=buckets))
 
 
-def compact_deltas(orch: "CdcOrchestrator") -> list[dict]:
+def compact_deltas(orch: CdcOrchestrator) -> list[dict]:
     """Materialize pending deltas into base SCD2 rows by replaying each
     delta batch through the CoW merge, in order. The resulting lineage is
     byte-identical to an all-CoW replay. Each replayed batch commits
@@ -259,7 +220,7 @@ def compact_deltas(orch: "CdcOrchestrator") -> list[dict]:
             for k in sorted(b["files"])
             for rel in b["files"][k]
         ]
-        events = table.spark.read.schema(_delta_schema(table)).parquet(*paths)
+        events = table.read_files(paths, schema=_delta_schema(table))
         # Replay through the CoW path under a compaction id; the original
         # batch_id is already committed (by the delta append).
         rec = orch._compact_one_delta(events, b["batch_id"])

@@ -2,15 +2,15 @@
 
 Replaces the reference's AWS Step Functions chain (report §4.2-4.3) with a
 deterministic local protocol. Every way a batch reaches the table —
-``apply_batch``, ``apply_snapshot_batch``, ``apply_late_batch`` and MoR
-delta compaction (``cdc/mor.py``) — runs ONE apply core,
-:meth:`CdcOrchestrator._apply`, in this order:
+``apply_batch``, ``apply_snapshot_batch``, ``apply_late_batch``, MoR
+delta appends and MoR delta compaction (``cdc/mor.py``) — runs ONE apply
+core, :meth:`CdcOrchestrator._apply`, in this order:
 
 1. **Entry guard**: ``batch_id >= 1`` (negative ids are the delete-
    tombstone marker, ``cdc/apply.py``), refresh, exactly-once skip,
    transactional schema evolution (a batch carrying new payload columns
    evolves the schema in a metadata-only commit first, per north_rule),
-   ``align_events``. MoR appends share this guard.
+   ``align_events``.
 2. **Input accounting** (:meth:`~CdcOrchestrator._account`): total,
    NULL-business-key and (snapshot chunks) delete counts ride a lazy
    ``Observation`` inside the first job that reads the batch — zero extra
@@ -26,14 +26,17 @@ delta compaction (``cdc/mor.py``) — runs ONE apply core,
    lineage, the group geometry, and the snapshot the rows were computed
    against). A resumed run reuses a sealed group only while the table is
    still at that snapshot — snapshot chunks and late batches interleave
-   with the tail, and rows planned against an older state are stale.
+   with the tail, and rows planned against an older state are stale. A
+   MoR delta never reads the table, so its basis names the call instead
+   of the snapshot: a conflict retry re-commits the sealed files.
 4. **One atomic snapshot commit** — the single commit point: a crash
    anywhere before it leaves the old table state fully live (the
    reference's per-row INSERT stream has no such property; a killed
    Lambda leaves half a batch applied,
    `Incremental1/IncrementalAccount.py:218-343`).
 5. **Duel skip**: a commit that hit the exactly-once guard without
-   flipping means a duelling driver landed this batch id first.
+   flipping means a duelling driver landed this batch id first. A
+   :class:`CommitConflict` re-runs the core (:meth:`_retrying`).
 6. **Staging cleanup**, then 7. **one metrics record** per batch in
    ``_metrics/`` (fields per operation: README "Per-batch metrics
    record"), the opt-in compaction policy, and the optional DImessages
@@ -99,16 +102,23 @@ class _Op:
     grouped: bool = False  # bucket-group resume granularity (cdc-apply)
     # "append" adds an insert set (snapshot chunks); it closes nothing,
     # so a 'D' event would be silently dropped — the accounting refuses it.
+    # "delta" writes a MoR delta batch: its files go into the
+    # delta_batches property (``properties``), not the base file map.
     mode: str = "replace"
     # False: the batch id is already committed (MoR delta compaction) —
-    # no exactly-once skip, no batch id on the commit, no null-key policy
-    # (the delta append accepted these events; compaction must not change
-    # the live view), and files tagged compact-delta-NNNNNN (the
-    # changelog's closing-batch tag for materialized deltas).
+    # no exactly-once skip, no batch id on the commit and no null-key
+    # policy (the delta append accepted these events; compaction must
+    # not change the live view).
     claims_batch: bool = True
+    # commit-tag prefix of the written files: compact-delta-NNNNNN is the
+    # changelog's closing-batch tag for materialized deltas
+    tag: str = "batch"
+    # what the sealed rows were computed from; None = the base snapshot
+    basis: list | None = None
     refuse_pending: bool = False  # refuse while MoR deltas are pending
     summary: dict = field(default_factory=dict)
-    properties: Callable[[], dict] | None = None  # new table properties
+    # (written current files) -> new table properties
+    properties: Callable[[dict], dict] | None = None
     extra: Callable[[dict], dict] = lambda record: {}  # extra record keys
 
 
@@ -273,44 +283,6 @@ class CdcOrchestrator:
         )
         return m if ok else None
 
-    def _lineage_rows(
-        self, files: dict[str, list[str]], hist_delta: dict[str, list[str]]
-    ) -> tuple[dict[str, int], dict[str, list]]:
-        """Per-bucket rows written this batch AND per-file batch_id
-        [min, max] ranges (the changelog data-skipping stats), from
-        parquet footers — driver-side metadata, no Spark job. Footer
-        reads are independent ranged GETs, so they run on a thread pool:
-        the serial loop was a per-batch driver cost that did not shrink
-        with executor count (the family split doubled the file count and
-        made it visible)."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        paths: list[tuple[str, str]] = [
-            (b, rel)
-            for fmap in (files, hist_delta)
-            for b, fl in fmap.items()
-            for rel in fl
-        ]
-
-        def meta(p: tuple[str, str]):
-            b, rel = p
-            full = os.path.join(self.table.path, rel)
-            return (
-                b,
-                rel,
-                self.table.fs.parquet_num_rows(full),
-                self.table.fs.parquet_column_minmax(full, "batch_id"),
-            )
-
-        rows: dict[str, int] = {}
-        stats: dict[str, list] = {}
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            for b, rel, n, mm in pool.map(meta, paths):
-                rows[b] = rows.get(b, 0) + n
-                if mm is not None:
-                    stats[rel] = mm
-        return rows, stats
-
     def _maybe_auto_compact(self, record: dict) -> None:
         """Post-commit compaction policy (see __init__): bounds per-bucket
         file counts under the append-only history family. Runs OUTSIDE the
@@ -374,12 +346,12 @@ class CdcOrchestrator:
         claims_batch: bool = True,
         refuse_pending: bool = False,
     ) -> DataFrame | None:
-        """Entry guard of every apply path, MoR appends included: the
-        batch aligned to the (possibly evolved) table schema, or None when
-        its id is already committed. Negative batch ids are the delete-
-        tombstone marker (cdc/apply.py) — real batches must stay strictly
-        positive. Every refusal comes BEFORE the schema evolution, which
-        is a commit of its own: a refused batch leaves no snapshot."""
+        """Entry guard of every apply path: the batch aligned to the
+        (possibly evolved) table schema, or None when its id is already
+        committed. Negative batch ids are the delete-tombstone marker
+        (cdc/apply.py) — real batches must stay strictly positive. Every
+        refusal comes BEFORE the schema evolution, which is a commit of
+        its own: a refused batch leaves no snapshot."""
         if batch_id <= 0:
             raise ValueError(f"batch_id must be >= 1, got {batch_id}")
         lineage = [c for c in events.columns if c in LINEAGE_COLS]
@@ -413,10 +385,15 @@ class CdcOrchestrator:
         docstring, steps 1-7). Raises :class:`CommitConflict` when another
         writer advanced the table; the caller decides what to recompute."""
         t0 = time.monotonic()
+        fs = self.table.fs
+        staging = staging_dir(self.table.path, batch_id)
         events = self._enter(events, batch_id, op.claims_batch, op.refuse_pending)
         if events is None:
+            # A committed batch's staging is garbage: an attempt of ours
+            # that lost the commit race to a duelling driver, or a killed
+            # run's.
+            fs.rmtree(staging)
             return _skipped(batch_id)
-        fs = self.table.fs
         policy = self.null_key_policy if op.claims_batch else None
         events, resolve = self._account(
             events, batch_id, policy, refuse_deletes=op.mode == "append"
@@ -443,10 +420,8 @@ class CdcOrchestrator:
         # discovery job, which would recompute the dedup: right when
         # batches touch most buckets anyway (bulk replays, benches).
         grouped = op.grouped and self.buckets_per_group < self.table.num_buckets
-        tag = "batch" if op.claims_batch else "compact-delta"
-        staging = staging_dir(self.table.path, batch_id)
         base = self.table.snapshot  # every group is planned against it
-        basis = [op.operation, base.snapshot_id, base.summary.get("committed_at")]
+        basis = op.basis or [op.operation, base.snapshot_id, base.summary.get("committed_at")]
         counted = bucket_counts = None
         files: dict[str, list[str]] = {}
         hist: dict[str, list[str]] = {}
@@ -489,14 +464,14 @@ class CdcOrchestrator:
                     if buckets is not None:
                         src = deduped.filter(F.col(LakeTable.BUCKET_COL).isin(buckets))
                     rows, aligned = op.plan(src, buckets)
-                    gfiles, ghist = self.table.write_data_files_split(
+                    gfiles, ghist = self.table.write_data_files(
                         self.table.with_bucket(rows),
-                        f"{tag}-{batch_id:06d}/group-{gi:03d}",
+                        f"{op.tag}-{batch_id:06d}/group-{gi:03d}",
                         assume_bucket_partitioned=aligned,
                     )
                     if counted is None:  # the write materialized the batch
                         counted = resolve()
-                    lineage_rows, fstats = self._lineage_rows(gfiles, ghist)
+                    lineage_rows, fstats = self.table.footer_stats(gfiles, ghist)
                     sealed = {
                         "files": gfiles, "hist_files": ghist, "file_stats": fstats,
                         "geometry": self._geometry(buckets), "basis": basis,
@@ -528,9 +503,9 @@ class CdcOrchestrator:
         # Buckets whose current rows this apply re-derived: the touched
         # ones of a grouped merge; EVERY pre-existing current bucket of a
         # whole-table merge (any may have lost all its rows to deletes);
-        # only the new files' buckets of an append. History is
+        # only the new files' buckets of an append or a delta. History is
         # append-only under every mode.
-        if op.mode == "append":
+        if op.mode != "replace":
             scope = set()
         elif grouped:
             scope = {str(b) for b in bucket_counts}
@@ -539,14 +514,16 @@ class CdcOrchestrator:
         replaced = scope | set(files)
         before = self.table.snapshot.snapshot_id
         snap = self.table.commit(
-            new_files_by_bucket=files,
-            mode=op.mode,
+            # a delta's files ride its delta_batches property, so plain
+            # read() keeps returning materialized SCD2 rows only
+            new_files_by_bucket={} if op.mode == "delta" else files,
+            mode="replace" if op.mode == "replace" else "append",
             replaced_buckets=replaced,
             batch_id=batch_id if op.claims_batch else None,
             append_hist_by_bucket=hist,
             new_file_stats=stats,
             summary={"operation": op.operation, "events": n_events, **op.summary},
-            new_properties=op.properties() if op.properties else None,
+            new_properties=op.properties(files) if op.properties else None,
         )
         # The staging manifests memoize only THIS attempt: drop them with
         # it whether it committed or lost the duel below.
@@ -624,16 +601,21 @@ class CdcOrchestrator:
         resolves the duelling-driver case where the competing writer
         committed THIS batch id. Bounded (default 2 re-computations) so
         livelock surfaces as the underlying conflict."""
+        op = _Op("cdc-apply", self._merge_plan(batch_id), grouped=True)
+        return self._retrying(events, batch_id, op, retries)
+
+    def _retrying(self, events: DataFrame, batch_id: int, op: _Op, retries: int) -> dict:
+        """:meth:`_apply`, re-run on :class:`CommitConflict` at most
+        ``retries`` times. Each re-run re-enters against the refreshed
+        table, and the sealed manifests' basis decides what it reuses: a
+        group planned against the old snapshot is recomputed, a MoR delta
+        (basis without a snapshot) is re-committed as written."""
         try:
-            return self._apply(
-                events, batch_id,
-                _Op("cdc-apply", self._merge_plan(batch_id), grouped=True),
-            )
+            return self._apply(events, batch_id, op)
         except CommitConflict:
             if retries <= 0:
                 raise
-            self.table.fs.rmtree(staging_dir(self.table.path, batch_id))
-            return self.apply_batch(events, batch_id, retries=retries - 1)
+        return self._retrying(events, batch_id, op, retries - 1)
 
     # ------------------------------------------------- snapshot handover
     def apply_snapshot_batch(
@@ -829,7 +811,7 @@ class CdcOrchestrator:
         swept)."""
         from tpc_di_spark.cdc.mor import pending_delta_batches
 
-        def properties() -> dict:
+        def properties(_files: dict) -> dict:
             remaining = [
                 b for b in pending_delta_batches(self.table)
                 if b["batch_id"] != orig_batch_id
@@ -838,7 +820,8 @@ class CdcOrchestrator:
 
         return self._apply(events, orig_batch_id, _Op(
             "compact-delta", self._merge_plan(orig_batch_id), claims_batch=False,
-            summary={"delta_batch": orig_batch_id}, properties=properties,
+            tag="compact-delta", summary={"delta_batch": orig_batch_id},
+            properties=properties,
         ))
 
     # --------------------------------------------------------------- replay

@@ -145,10 +145,21 @@ class IncrementalView(ChangelogConsumer):
         self.table = table
         self.key_cols = list(key_cols)
         self.aggs = list(aggs)
+        self._schema_memo: tuple[str, StructType] | None = None
 
     # -- state --------------------------------------------------------------
 
     def _state_schema(self) -> StructType:
+        """The state's schema, derived once per table schema: deriving
+        it costs py4j round trips (a probe frame and one projection per
+        typed aggregate), and a refresh needs it three times. Keyed by
+        the schema JSON, so an evolved table re-derives it."""
+        key = self.table.schema.json()
+        if self._schema_memo is None or self._schema_memo[0] != key:
+            self._schema_memo = (key, self._derive_state_schema())
+        return self._schema_memo[1]
+
+    def _derive_state_schema(self) -> StructType:
         tbl = {f.name: f for f in self.table.schema.fields}
         key_fields = [
             StructField(k, tbl[k].dataType, tbl[k].nullable) for k in self.key_cols

@@ -46,18 +46,16 @@ def compact(
     files_before = sum(n_files.get(b, 0) for b in targets)
     df = table.with_bucket(table.read(buckets=targets))
     tag = f"compact-{snap.snapshot_id:08d}-{int(time.time())}"
-    if "is_current" in df.columns:
-        # Family-aware rewrite: compaction must not merge immutable
-        # history rows back into current files (the merge-scan invariant).
-        new_files, new_hist = table.write_data_files_split(df, tag)
-    else:
-        new_files, new_hist = table.write_data_files(df, tag), {}
+    # The writer's family split keeps immutable history rows out of the
+    # current files (the merge-scan invariant).
+    new_files, new_hist = table.write_data_files(df, tag)
     table.commit(
         new_files_by_bucket=new_files,
         mode="replace",
         replaced_buckets=targets,
         append_hist_by_bucket=new_hist,
         replace_hist=True,
+        new_file_stats=table.footer_stats(new_files, new_hist)[1],
         summary={"operation": "compact", "buckets": len(targets)},
     )
     files_after = sum(len(fl) for fl in new_files.values()) + sum(
@@ -267,42 +265,25 @@ def rebucket(table: LakeTable, new_num_buckets: int) -> dict:
     snap = table.snapshot
     if new_num_buckets == snap.num_buckets and table.spark_aligned:
         return {"rebucketed": False, "num_buckets": snap.num_buckets}
-    df = table.read()
     new_bucket = F.pmod(
         F.hash(*[F.col(c) for c in snap.bucket_cols]), F.lit(new_num_buckets)
     ).cast("int")
-    tag = f"rebucket-{snap.snapshot_id:08d}-to-{new_num_buckets}"
-    # Temporarily present the new bucket count to the writer so the
-    # clustering exchange targets N' partitions; family-split so the
-    # current/history invariant survives the re-bucketing.
-    df_b = df.withColumn(LakeTable.BUCKET_COL, new_bucket)
-    out_dir = os.path.join(table.path, "data", tag)
-    if table.fs.exists(out_dir):
-        table.fs.rmtree(out_dir)
-    split = "is_current" in df_b.columns
-    writer = df_b
-    part_cols = [LakeTable.BUCKET_COL]
-    if split:
-        writer = df_b.withColumn(
-            "_ic", F.coalesce(F.col("is_current"), F.lit(True)).cast("string")
-        )
-        part_cols.append("_ic")
-    (
-        writer.repartition(new_num_buckets, F.col(LakeTable.BUCKET_COL))
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(out_dir)
+    # Clustered into N' partitions here (the writer's own exchange would
+    # target the old count); the writer's family split keeps the
+    # current/history invariant across the re-bucketing.
+    df = table.read().withColumn(LakeTable.BUCKET_COL, new_bucket)
+    new_files, new_hist = table.write_data_files(
+        df.repartition(new_num_buckets, F.col(LakeTable.BUCKET_COL)),
+        f"rebucket-{snap.snapshot_id:08d}-to-{new_num_buckets}",
+        assume_bucket_partitioned=True,
     )
-    if split:
-        new_files, new_hist = table._split_family_listing(out_dir)
-    else:
-        new_files, new_hist = table._list_bucket_files(out_dir), {}
     table.commit(
         new_files_by_bucket=new_files,
         mode="replace",
         replaced_buckets=set(snap.files) | set(snap.hist_files) | set(new_files) | set(new_hist),
         append_hist_by_bucket=new_hist,
         replace_hist=True,
+        new_file_stats=table.footer_stats(new_files, new_hist)[1],
         summary={"operation": "rebucket", "from": snap.num_buckets, "to": new_num_buckets},
         new_num_buckets=new_num_buckets,
         new_properties={**snap.properties, "bucket.hash": "murmur3"},

@@ -453,15 +453,19 @@ class LakeTable:
     def _colmap(self, snap: Snapshot | None = None) -> dict[str, str]:
         return dict((snap or self.snapshot).properties.get(self._COLMAP_PROP, {}))
 
-    def physical_schema(self, snap: Snapshot | None = None) -> StructType:
+    def physical_schema(
+        self, snap: Snapshot | None = None, schema: StructType | None = None
+    ) -> StructType:
+        """``schema`` (default: the snapshot's) under its file-side names."""
         snap = snap or self.snapshot
+        schema = schema or snap.schema
         cmap = self._colmap(snap)
         if not cmap:
-            return snap.schema
+            return schema
         return StructType(
             [
                 StructField(cmap.get(f.name, f.name), f.dataType, f.nullable)
-                for f in snap.schema.fields
+                for f in schema.fields
             ]
         )
 
@@ -473,23 +477,26 @@ class LakeTable:
         return df
 
     def read_files(
-        self, paths: Sequence[str], snapshot: Snapshot | None = None
+        self,
+        paths: Sequence[str],
+        snapshot: Snapshot | None = None,
+        schema: StructType | None = None,
     ) -> DataFrame:
-        """Scan data files through a snapshot's schema, applying the
+        """Scan data files through a snapshot's schema (or a logical
+        ``schema`` such as the MoR delta layout), applying the
         physical→logical column mapping — the ONE read primitive every
-        path (read(), changelog, MoR base) shares so rename evolution
-        cannot be bypassed."""
+        path (read(), changelog, MoR base and deltas) shares so rename
+        evolution cannot be bypassed."""
         snap = snapshot or self.snapshot
+        schema = schema or snap.schema
         if not paths:
-            return self.spark.createDataFrame([], snap.schema)
-        cmap = self._colmap(snap)
-        if not cmap:
-            return self.spark.read.schema(snap.schema).parquet(*paths)
-        phys = self.physical_schema(snap)
-        inv = {v: k for k, v in cmap.items()}
+            return self.spark.createDataFrame([], schema)
+        if not self._colmap(snap):
+            return self.spark.read.schema(schema).parquet(*paths)
+        phys = self.physical_schema(snap, schema)
         df = self.spark.read.schema(phys).parquet(*paths)
         return df.select(
-            *[F.col(f.name).alias(inv.get(f.name, f.name)) for f in phys.fields]
+            *[F.col(p.name).alias(f.name) for p, f in zip(phys.fields, schema.fields)]
         )
 
     def read(
@@ -833,37 +840,68 @@ class LakeTable:
         df_with_bucket: DataFrame,
         commit_tag: str,
         assume_bucket_partitioned: bool = False,
-    ) -> dict[str, list[str]]:
-        """Write ``df`` (already carrying _bucket) as data files under a
-        unique commit dir; return {bucket: [relative paths]}.
+    ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
+        """THE data-file writer: every write of the engine (CoW apply,
+        append, compaction, rebucket, MoR deltas) lands its parquet files
+        here, so the write rules live in one place. Writes ``df`` (already
+        carrying _bucket) under a unique commit dir and returns
+        ``(current, history)`` bucket->paths maps.
 
-        ``commit_tag`` is deterministic per unit of work (e.g.
-        ``batch-0007/group-02``) so downstream path-prefix selection
-        (changelog's ``hist_files_of_commit_tag``) can find a batch's
-        files; each physical write lands in a WRITER-SALTED attempt
-        subdirectory under it (``<tag>/attempt-<salt>/``), so no writer
-        ever deletes or overwrites another writer's part files — the one
-        duel outcome optimistic commit retry cannot repair (a loser
-        rmtree'ing a winner's committed-or-about-to-commit files). A
-        killed attempt's files leak as unreferenced orphans and are
-        reclaimed by ``expire_snapshots`` (min-age guarded), exactly like
-        crash orphans; a resumed run that finds a valid checkpoint
-        manifest reuses the previous attempt's files instead of
-        rewriting (orchestrator ``_sealed``).
+        - **Physical names**: logical columns are renamed to their birth
+          names (rename evolution, see the mapping block above read()).
+        - **File families**: a frame with ``is_current`` is split in ONE
+          pass — rows with ``is_current=false`` land in history files,
+          everything else in current files (``partitionBy(_bucket, _ic)``
+          on a COPY of the flag, so ``is_current`` itself stays a data
+          column readable without partition discovery). This is what
+          keeps SCD2 history append-only on disk: closed versions are
+          written once, in the batch that closes them, and no later merge
+          touches those bytes again. A frame without it (MoR deltas,
+          plain tables) is all "current", in a ``_bucket=b/`` layout.
+        - **Layout**: rows are clustered by bucket and optionally
+          key-sorted (``write.sort_keys``).
+        - **Writer-salted attempt dirs**: ``commit_tag`` is deterministic
+          per unit of work (e.g. ``batch-0007/group-02``) so downstream
+          path-prefix selection (changelog's ``hist_files_of_commit_tag``)
+          can find a batch's files; each physical write lands in a
+          subdirectory ``<tag>/attempt-<salt>/``, so no writer ever
+          deletes or overwrites another writer's part files — the one
+          duel outcome optimistic commit retry cannot repair (a loser
+          rmtree'ing a winner's committed-or-about-to-commit files). A
+          killed attempt's files leak as unreferenced orphans and are
+          reclaimed by ``expire_snapshots`` (min-age guarded), exactly
+          like crash orphans; a resumed run that finds a valid checkpoint
+          manifest reuses the previous attempt's files instead of
+          rewriting (orchestrator ``_sealed``).
+
+        Callers pass :meth:`footer_stats` of the result to ``commit`` so
+        every written file carries its data-skipping range.
         """
         out_dir = os.path.join(
             self.path, _DATA, commit_tag, f"attempt-{uuid.uuid4().hex[:8]}"
         )
-        df_with_bucket = self._to_physical(df_with_bucket)
+        df = self._to_physical(df_with_bucket)
+        parts = [self.BUCKET_COL]
+        if "is_current" in df.columns:
+            ic = F.coalesce(F.col("is_current"), F.lit(True)).cast("string")
+            df = df.withColumn("_ic", ic)
+            parts.append("_ic")
         (
+            # _ic leads the sort so each family's rows are contiguous
+            # (one open writer per family, not interleaved re-opens).
             self._key_sorted(
-                self._bucket_clustered(df_with_bucket, assume_bucket_partitioned)
+                self._bucket_clustered(df, assume_bucket_partitioned),
+                extra=parts[1:],
             )
             .write.mode("overwrite")
-            .partitionBy(self.BUCKET_COL)
+            .partitionBy(*parts)
             .parquet(out_dir)
         )
-        return self._list_bucket_files(out_dir)
+        return self._list_families(out_dir)
+
+    # Same method; perfbench/layers.py still wraps this name through the
+    # class dict.
+    write_data_files_split = write_data_files
 
     def _key_sorted(self, df_with_bucket: DataFrame, extra: Sequence[str] = ()) -> DataFrame:
         """OPT-IN key-sorted writes (table property ``write.sort_keys``,
@@ -886,47 +924,12 @@ class LakeTable:
         cols = [self.BUCKET_COL, *extra, *self.key_cols]
         return df_with_bucket.sortWithinPartitions(*cols)
 
-    def write_data_files_split(
-        self,
-        df_with_bucket: DataFrame,
-        commit_tag: str,
-        assume_bucket_partitioned: bool = False,
-    ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
-        """Write ``df`` split into the two file families in ONE pass:
-        rows with ``is_current=false`` land in history files, everything
-        else in current files (``partitionBy(_bucket, _ic)`` on a COPY of
-        the flag, so ``is_current`` itself stays a data column readable
-        without partition discovery). Returns ``(current, history)``
-        bucket->paths maps.
-
-        This is what keeps SCD2 history append-only on disk: closed
-        versions are written once, in the batch that closes them, and no
-        later merge touches those bytes again.
-        """
-        out_dir = os.path.join(
-            self.path, _DATA, commit_tag, f"attempt-{uuid.uuid4().hex[:8]}"
-        )
-        df_with_bucket = self._to_physical(df_with_bucket)
-        ic = F.coalesce(F.col("is_current"), F.lit(True)).cast("string")
-        (
-            # _ic leads the sort so each family's rows are contiguous
-            # (one open writer per family, not interleaved re-opens).
-            self._key_sorted(
-                self._bucket_clustered(
-                    df_with_bucket.withColumn("_ic", ic),
-                    assume_bucket_partitioned,
-                ),
-                extra=("_ic",),
-            )
-            .write.mode("overwrite")
-            .partitionBy(self.BUCKET_COL, "_ic")
-            .parquet(out_dir)
-        )
-        return self._split_family_listing(out_dir)
-
-    def _split_family_listing(
+    def _list_families(
         self, out_dir: str
     ) -> tuple[dict[str, list[str]], dict[str, list[str]]]:
+        """(current, history) maps of one partitioned write: files under
+        ``_bucket=b/_ic=false/`` are history; those under ``_bucket=b/``
+        or ``_bucket=b/_ic=true/`` are current."""
         current: dict[str, list[str]] = {}
         history: dict[str, list[str]] = {}
         for entry in self.fs.listdir(out_dir):
@@ -935,54 +938,66 @@ class LakeTable:
             bucket = entry.split("=", 1)[1]
             bdir = os.path.join(out_dir, entry)
             for sub in self.fs.listdir(bdir):
-                if not sub.startswith("_ic="):
-                    continue
-                fam = history if sub == "_ic=false" else current
-                sdir = os.path.join(bdir, sub)
+                if sub.startswith("_ic="):
+                    fam = history if sub == "_ic=false" else current
+                    sdir = os.path.join(bdir, sub)
+                    names = [os.path.join(sdir, f) for f in self.fs.listdir(sdir)]
+                else:
+                    fam, names = current, [os.path.join(bdir, sub)]
                 rels = [
-                    os.path.relpath(os.path.join(sdir, f), self.path)
-                    for f in self.fs.listdir(sdir)
-                    if f.endswith(".parquet")
+                    os.path.relpath(n, self.path) for n in names if n.endswith(".parquet")
                 ]
                 if rels:
                     fam.setdefault(bucket, []).extend(rels)
         return current, history
 
-    def _list_bucket_files(self, out_dir: str) -> dict[str, list[str]]:
-        files: dict[str, list[str]] = {}
-        for entry in self.fs.listdir(out_dir):
-            if not entry.startswith(f"{self.BUCKET_COL}="):
-                continue
-            bucket = entry.split("=", 1)[1]
-            bdir = os.path.join(out_dir, entry)
-            rels = [
-                os.path.relpath(os.path.join(bdir, f), self.path)
-                for f in self.fs.listdir(bdir)
-                if f.endswith(".parquet")
-            ]
-            if rels:
-                files[bucket] = rels
-        return files
+    def footer_stats(
+        self, *fmaps: dict[str, list[str]]
+    ) -> tuple[dict[str, int], dict[str, list]]:
+        """Per-bucket rows written AND per-file batch_id [min, max] ranges
+        (the changelog data-skipping stats) of freshly written file maps,
+        from parquet footers — driver-side metadata, no Spark job. Every
+        writer passes the ranges to ``commit(new_file_stats=...)``; a
+        file without one is scanned by every changelog read. Footer reads
+        are independent ranged GETs, so they run on a thread pool: the
+        serial loop was a per-batch driver cost that did not shrink with
+        executor count (the family split doubled the file count and made
+        it visible)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        paths = [(b, rel) for fmap in fmaps for b, fl in fmap.items() for rel in fl]
+
+        def meta(p: tuple[str, str]):
+            b, rel = p
+            full = os.path.join(self.path, rel)
+            return (
+                b,
+                rel,
+                self.fs.parquet_num_rows(full),
+                self.fs.parquet_column_minmax(full, "batch_id"),
+            )
+
+        rows: dict[str, int] = {}
+        stats: dict[str, list] = {}
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            for b, rel, n, mm in pool.map(meta, paths):
+                rows[b] = rows.get(b, 0) + n
+                if mm is not None:
+                    stats[rel] = mm
+        return rows, stats
 
     def append(self, df: DataFrame, batch_id: int | None = None, commit_tag: str | None = None) -> Snapshot:
         """Bulk append (the historical-load path, SURVEY S7). Rows carrying
         lineage are family-split on write so the current/history invariant
         holds for bulk-loaded data too."""
         tag = commit_tag or f"append-{uuid.uuid4().hex[:12]}"
-        if "is_current" in df.columns:
-            cur, hist = self.write_data_files_split(self.with_bucket(df), tag)
-            return self.commit(
-                new_files_by_bucket=cur,
-                mode="append",
-                batch_id=batch_id,
-                append_hist_by_bucket=hist,
-                summary={"operation": "append"},
-            )
-        new_files = self.write_data_files(self.with_bucket(df), tag)
+        cur, hist = self.write_data_files(self.with_bucket(df), tag)
         return self.commit(
-            new_files_by_bucket=new_files,
+            new_files_by_bucket=cur,
             mode="append",
             batch_id=batch_id,
+            append_hist_by_bucket=hist,
+            new_file_stats=self.footer_stats(cur, hist)[1],
             summary={"operation": "append"},
         )
 
@@ -1352,10 +1367,12 @@ class LakeTable:
         if name in self._PROTECTED_RENAME:
             raise ValueError(f"may not {op} lineage column {name!r}")
         if self.snapshot.properties.get("delta_batches"):
+            # Deltas now store physical names like every data file, but
+            # delta files written before they shared write_data_files
+            # carry logical names and would misread after the change.
             raise ValueError(
                 f"may not {op} a column while merge-on-read delta batches "
-                "are pending: delta files carry the current logical names "
-                "and would misread after the change — compact first"
+                "are pending — compact first"
             )
         if name == self.snapshot.properties.get(_bloom.PROP_COLUMN):
             raise ValueError(
