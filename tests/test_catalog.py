@@ -124,9 +124,10 @@ def test_pooled_applies_keep_caller_job_group(spark, tmp_path):
 
 
 def test_pool_stops_queued_calls_after_first_failure(spark):
-    """apply_batch_atomic and WAP audits run through session.spark_map:
-    once one call fails, the calls still queued must never start (a
-    failed multi-table publish stops applying sibling tables)."""
+    """apply_batch_atomic's applies, and apply_batch_atomic_wap's per-table
+    stagings and per-table audits, run through session.spark_map: once
+    one call fails, the calls still queued must never start (a failed
+    multi-table publish stops applying sibling tables)."""
     import threading
     import time
 

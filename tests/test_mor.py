@@ -214,6 +214,19 @@ def _null_key_batch(spark):
     )
 
 
+def _sample_batch(spark, text="v1"):
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [
+            ("U", 1, "conv-000001", 0, "user", text, dt.datetime(2024, 6, 1)),
+            ("U", 2, "conv-000002", 1, "assistant", text, dt.datetime(2024, 6, 1)),
+        ],
+        "cdc_flag string, cdc_dsn long, conv_id string, turn_idx int, "
+        "role string, text string, ts timestamp",
+    )
+
+
 def test_mor_append_enforces_null_key_policy(spark, tmp_path):
     """A MoR append counts its input in the one apply core: under the
     default "error" policy a NULL-key event fails the batch before any
@@ -277,3 +290,64 @@ def test_mor_append_leaves_no_staging(spark, tmp_path):
     rec = apply_batch_mor(orch, spark.createDataFrame(B2, EV), 2)
     assert rec == {"batch_id": 2, "skipped": "already-committed"}
     assert leftover() == []
+
+
+def test_refused_batch_leaves_no_files(spark, tmp_path):
+    """A batch the lazy input accounting refuses after its write (a
+    whole-table CoW group, a MoR append; NULL key under the "error"
+    policy) deletes its own attempt's data files and staging dir."""
+    import os
+
+    table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)  # 8 buckets per group: one whole-table group
+    orch.apply_batch(_sample_batch(spark), 1)
+
+    def files_under(rel):
+        root = os.path.join(table.path, rel)
+        return [f for _d, _s, fs in os.walk(root) for f in fs]
+
+    with pytest.raises(ValueError, match="NULL business-key"):
+        orch.apply_batch(_null_key_batch(spark), 2)
+    with pytest.raises(ValueError, match="NULL business-key"):
+        apply_batch_mor(orch, _null_key_batch(spark), 3)
+    assert files_under("data/batch-000002") == []
+    assert files_under("data/delta-000003") == []
+    assert files_under("_staging") == []
+    assert not os.path.exists(os.path.join(table.path, "_staging", "batch-000002"))
+    assert not os.path.exists(os.path.join(table.path, "_staging", "batch-000003"))
+    assert not table.refresh().is_batch_committed(2)
+
+
+def test_compaction_keeps_the_append_metrics_record(spark, tmp_path):
+    """A compacted MoR batch keeps both records: the append's
+    ``batch-NNNNNN.json`` and the compaction's ``compact-delta-NNNNNN.json``.
+    Aborting a WAP branch that appended and compacted a batch purges both."""
+    import json
+    import os
+
+    from tpc_di_spark.cdc.orchestrator import metrics_path
+    from tpc_di_spark.lake.wap import WapBranch
+
+    table = bootstrap_table(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    orch = CdcOrchestrator(table)
+    orch.apply_batch(_sample_batch(spark), 1)
+    apply_batch_mor(orch, _sample_batch(spark, text="v2"), 2)
+    compact_deltas(orch)
+
+    def record(bid, kind="batch"):
+        with open(metrics_path(table.path, bid, kind)) as f:
+            return json.load(f)
+
+    assert record(2)["operation"] == "cdc-apply-mor"
+    assert record(2, "compact-delta")["operation"] == "compact-delta"
+    assert record(2)["events_in"] == record(2, "compact-delta")["events_in"] == 2
+
+    wap = WapBranch.begin(table, "b3")
+    staged = orch.for_table(wap.staged)
+    apply_batch_mor(staged, _sample_batch(spark, text="v3"), 3)
+    compact_deltas(staged)
+    assert record(3)["operation"] == "cdc-apply-mor"
+    assert record(3, "compact-delta")["operation"] == "compact-delta"
+    wap.abort()
+    assert not os.path.exists(metrics_path(table.path, 3))
+    assert not os.path.exists(metrics_path(table.path, 3, "compact-delta"))

@@ -3,6 +3,7 @@ readers until an audited one-CAS fast-forward publish; a failed audit
 aborts for the cost of a ref delete; staging crash-resumes; expiry
 never reclaims a live branch's fork or files."""
 
+import pyspark.sql.functions as F
 import pytest
 
 from tpc_di_spark.cdc import CdcOrchestrator, current_state
@@ -70,6 +71,20 @@ def test_failed_audit_aborts_cheaply(spark, tmp_path):
     with pytest.raises(AuditFailed) as ei:
         wap.audit([row_count_delta(min_delta=500)])
     assert any(not r["ok"] for r in ei.value.results)
+    # One staged state that breaks two checks of the same pass: a
+    # duplicated live key pair and a NULL-key live row.
+    live = wap.staged.read(family="current").filter("is_current")
+    wap.staged.append(
+        live.orderBy("conv_id", "turn_idx").limit(2).unionByName(
+            live.limit(1).withColumn("conv_id", F.lit(None).cast("string"))
+        )
+    )
+    with pytest.raises(AuditFailed) as ei:
+        wap.audit([unique_business_key(), not_null(["conv_id", "turn_idx"])])
+    assert ei.value.results == [
+        {"check": "unique_business_key", "ok": False, "duplicate_keys": 2},
+        {"check": "not_null(conv_id,turn_idx)", "ok": False, "null_rows": 1},
+    ]
     wap.abort()
     assert list_branches(table) == {}
     assert _live(table.refresh()) == before
@@ -235,10 +250,10 @@ def test_schema_change_stages_on_branch(spark, tmp_path):
 
 
 def test_concurrent_audit_checks_preserve_order_and_failure(spark, tmp_path):
-    """audit() runs its checks as concurrent Spark actions; the result
-    list must still come back in input order, and a failing check among
-    concurrent passing ones must still raise AuditFailed with every
-    check's result present."""
+    """audit() computes its standard checks in one pass and runs custom
+    callables after it; the result list must still come back in input
+    order, and a failing check among passing ones must still raise
+    AuditFailed with every check's result present."""
     import time as _time
 
     table = _bootstrap(spark, str(tmp_path / "t"), convs=10, turns=2)
@@ -248,7 +263,7 @@ def test_concurrent_audit_checks_preserve_order_and_failure(spark, tmp_path):
     )
 
     def slow_ok(w):
-        _time.sleep(0.4)  # finishes LAST — must still come back FIRST
+        _time.sleep(0.4)  # runs after the pass — must still come back FIRST
         return {"check": "slow_ok", "ok": True}
 
     results = wap.audit([slow_ok, unique_business_key(), not_null(["conv_id"])])
@@ -264,4 +279,28 @@ def test_concurrent_audit_checks_preserve_order_and_failure(spark, tmp_path):
     checks = [r["check"] for r in ei.value.results]
     assert checks == ["slow_ok", "row_count_delta", "unique_business_key"]
     assert [r["ok"] for r in ei.value.results] == [True, False, True]
+    wap.abort()
+
+
+def test_standard_checks_share_one_pass(spark, tmp_path):
+    """unique_business_key and not_null fold into one aggregate plan over
+    the staged live rows: at most 3 Spark jobs (the per-key exchange, the
+    global aggregate's exchange, the collect), not one count per check."""
+    table = _bootstrap(spark, str(tmp_path / "t"))
+    wap = WapBranch.begin(table, "jobs")
+    CdcOrchestrator(wap.staged).apply_batch(
+        incremental_batch(spark, 2, n_events=30, n_convs=40, turns_per_conv=5), 2
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("wap-one-pass", "audit job count")
+    try:
+        results = wap.audit([unique_business_key(), not_null(table.key_cols)])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert results == [
+        {"check": "unique_business_key", "ok": True, "duplicate_keys": 0},
+        {"check": "not_null(conv_id,turn_idx)", "ok": True, "null_rows": 0},
+    ]
+    assert len(sc.statusTracker().getJobIdsForGroup("wap-one-pass")) <= 3
     wap.abort()

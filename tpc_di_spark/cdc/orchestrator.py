@@ -81,9 +81,11 @@ def staging_dir(table_path: str, batch_id: int) -> str:
     return os.path.join(table_path, "_staging", f"batch-{batch_id:06d}")
 
 
-def metrics_path(table_path: str, batch_id: int) -> str:
-    """The batch's ``_metrics`` record."""
-    return os.path.join(table_path, "_metrics", f"batch-{batch_id:06d}.json")
+def metrics_path(table_path: str, batch_id: int, kind: str = "batch") -> str:
+    """The batch's ``_metrics`` record: ``kind`` "batch" for the apply
+    that committed the batch id, "compact-delta" for the MoR compaction
+    that later materialized it."""
+    return os.path.join(table_path, "_metrics", f"{kind}-{batch_id:06d}.json")
 
 
 def _skipped(batch_id: int) -> dict:
@@ -470,7 +472,14 @@ class CdcOrchestrator:
                         assume_bucket_partitioned=aligned,
                     )
                     if counted is None:  # the write materialized the batch
-                        counted = resolve()
+                        try:
+                            counted = resolve()
+                        except ValueError:
+                            # Refused after the write: this attempt's files
+                            # and staging dir are unreferenced, drop them.
+                            self.table.remove_written(gfiles, ghist)
+                            fs.rmtree(staging)
+                            raise
                     lineage_rows, fstats = self.table.footer_stats(gfiles, ghist)
                     sealed = {
                         "files": gfiles, "hist_files": ghist, "file_stats": fstats,
@@ -551,7 +560,9 @@ class CdcOrchestrator:
         }
         record.update(op.extra(record))
         self._maybe_auto_compact(record)
-        path = metrics_path(self.table.path, batch_id)
+        # A compaction (claims no batch id) keeps its own record next to
+        # the append's.
+        path = metrics_path(self.table.path, batch_id, "batch" if op.claims_batch else op.tag)
         fs.makedirs(os.path.dirname(path))
         fs.replace_text(path, json.dumps(record))
         self._emit_status(record)

@@ -48,7 +48,6 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -401,37 +400,23 @@ def apply_batch_atomic_wap(
         branches[name] = wap
         records[name] = rec
 
-    from tpc_di_spark.lake.wap import _run_checks
-
-    # Flatten every table's checks into ONE concurrent pool (audits are
-    # independent read-only counts over staged state; serially they
-    # dominated multi-table publish wall time), then regroup results by
-    # table in the exact per-table order the serial loop produced.
-    published: set[str] = set()
-    pending: list[tuple[str, WapBranch, Callable]] = []
-    for name, wap in sorted(branches.items()):
+    def _audit(item):
+        name, wap = item
         ref = wap.staged._read_ref()
         if ref["head_id"] == ref["fork_id"] and wap.base.is_batch_committed(
             batch_id
         ):
             # Crash-retry: this table already published this batch; its
             # audit passed before that publish. Nothing staged to audit.
-            published.add(name)
-            continue
-        for c in audit_checks.get(name, []) if audit_checks else []:
-            pending.append((name, wap, c))
-    check_results = _run_checks([(w, c) for _n, w, c in pending])
+            return [{"check": "already-published", "ok": True, "table": name}]
+        results = wap.audit((audit_checks or {}).get(name, []), raise_on_fail=False)
+        return [{**r, "table": name} for r in results]
 
-    by_table: dict[str, list[dict]] = {
-        name: (
-            [{"check": "already-published", "ok": True, "table": name}]
-            if name in published
-            else []
-        )
-        for name in sorted(branches)
-    }
-    for (name, _w, _c), r in zip(pending, check_results):
-        by_table[name].append({**r, "table": name})
+    # One audit per table (each one aggregate pass over its own staged
+    # state), overlapped across tables like the staging above.
+    by_table = dict(
+        zip(sorted(branches), spark_map(catalog.spark, _audit, sorted(branches.items())))
+    )
     all_results = [r for rs in by_table.values() for r in rs]
     if not all(r["ok"] for r in all_results):
         for wap in branches.values():

@@ -16,7 +16,7 @@ import time
 
 import pyspark.sql.functions as F
 
-from tpc_di_spark.lake.table import LakeTable, _atomic_write
+from tpc_di_spark.lake.table import LakeTable
 
 # %08d zero-pads to AT LEAST 8 — match \d+, not a fixed width (the same
 # trap the changelog tag regex hit with 7-digit streaming batch ids).

@@ -175,11 +175,6 @@ class Snapshot:
         )
 
 
-# Backwards-compatible helper: atomic metadata replace on the local FS.
-def _atomic_write(path: str, text: str, fs: TableFS | None = None) -> None:
-    (fs or LocalFS()).replace_text(path, text)
-
-
 class LakeTable:
     """Handle to one transactional table rooted at ``path``."""
 
@@ -902,6 +897,16 @@ class LakeTable:
     # Same method; perfbench/layers.py still wraps this name through the
     # class dict.
     write_data_files_split = write_data_files
+
+    def remove_written(self, *fmaps: dict[str, list[str]]) -> None:
+        """Delete the ``attempt-<salt>`` dirs holding files that
+        :meth:`write_data_files` returned and no commit references."""
+        attempts = {
+            rel.split(f"{os.sep}{self.BUCKET_COL}=")[0]
+            for fmap in fmaps for fl in fmap.values() for rel in fl
+        }
+        for rel in attempts:
+            self.fs.rmtree(os.path.join(self.path, rel))
 
     def _key_sorted(self, df_with_bucket: DataFrame, extra: Sequence[str] = ()) -> DataFrame:
         """OPT-IN key-sorted writes (table property ``write.sort_keys``,

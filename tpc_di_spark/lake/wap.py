@@ -57,6 +57,7 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass
 from typing import Callable, Sequence
 
 import pyspark.sql.functions as F
@@ -197,16 +198,37 @@ class WapBranch:
         raise_on_fail: bool = True,
     ) -> list[dict]:
         """Run checks against the STAGED state (each check returns
-        ``{"check": name, "ok": bool, ...detail}``).
+        ``{"check": name, "ok": bool, ...detail}``); results come back in
+        input order.
 
-        The checks run CONCURRENTLY on a small thread pool, in no fixed
-        order: a check must not share mutable state with another one or
-        rely on running after it. The built-in checks only read the
-        staged state through ``read()``."""
-        results = _run_checks([(self, c) for c in checks])
+        Every :class:`FoldedCheck` is computed in ONE pass over the staged
+        live rows: one ``groupBy(key_cols)`` of all their per-key
+        aggregates, then one global sum. Any other check (``foreign_key``,
+        a custom callable) runs after it, one at a time."""
+        totals = iter(self._fold([c for c in checks if isinstance(c, FoldedCheck)]))
+        results = [
+            {"check": c.name, **c.result(self, next(totals))}
+            if isinstance(c, FoldedCheck) else c(self)
+            for c in checks
+        ]
         if raise_on_fail and any(not r["ok"] for r in results):
             raise AuditFailed(results)
         return results
+
+    def _fold(self, checks: list["FoldedCheck"]) -> list[int]:
+        """Each check's per-key aggregate summed over the staged live
+        rows, all in one aggregate plan."""
+        if not checks:
+            return []
+        names = [f"_c{i}" for i in range(len(checks))]
+        row = (
+            _live(self.staged)
+            .groupBy(*self.staged.key_cols)
+            .agg(*[F.expr(c.per_key).alias(n) for c, n in zip(checks, names)])
+            .agg(*[F.coalesce(F.sum(n), F.lit(0)).alias(n) for n in names])
+            .collect()[0]
+        )
+        return [row[n] for n in names]
 
     def publish(self, drop_branch: bool = True) -> Snapshot:
         """Fast-forward main to the audited staged head: materialize the
@@ -296,9 +318,10 @@ class WapBranch:
 
             for bid in staged_only:
                 fs.rmtree(staging_dir(self.base.path, bid))
-                mp = metrics_path(self.base.path, bid)
-                if fs.exists(mp):
-                    fs.remove(mp)
+                for kind in ("batch", "compact-delta"):
+                    mp = metrics_path(self.base.path, bid, kind)
+                    if fs.exists(mp):
+                        fs.remove(mp)
         self._drop_ref()
 
     def _drop_ref(self) -> None:
@@ -374,54 +397,66 @@ def live_branch_files(table: LakeTable) -> set[str]:
     return live
 
 
-def _run_checks(pairs: Sequence[tuple["WapBranch", Callable]]) -> list[dict]:
-    """Run independent (branch, check) pairs as CONCURRENT Spark actions.
-
-    Each audit check is a small read-only count job over staged state;
-    run serially they pay one full job-scheduling round trip each (the
-    audits of a 3-check publish were ~40% of its wall time at bench
-    scale). Submitting them from a small thread pool lets the scheduler
-    overlap them — results return in input order, and a check that
-    raises re-raises here exactly as the serial loop did (after the
-    other in-flight checks finish; queued checks never start)."""
-    if not pairs:
-        return []
-    from tpc_di_spark.session import spark_map
-
-    return spark_map(pairs[0][0].staged.spark, lambda p: p[1](p[0]), pairs)
-
-
 # ------------------------------------------------------------ audit checks
-def unique_business_key() -> Callable[[WapBranch], dict]:
+def _live(table: LakeTable, snapshot: Snapshot | None = None) -> DataFrame:
+    """The live rows: the current family, ``is_current`` rows only."""
+    df = table.read(snapshot=snapshot, family="current")
+    return df.filter(F.col("is_current")) if "is_current" in df.columns else df
+
+
+@dataclass(frozen=True, eq=False)
+class FoldedCheck:
+    """A standard check, computed in the audit's one pass over the staged
+    live rows. ``per_key`` is a SQL aggregate over one business-key group
+    (text, so a check can be built before a Spark session exists); the
+    pass sums it over all groups, and ``result`` maps ``(wap, total)`` to
+    the result's ``ok`` and detail fields. Calling it audits it alone."""
+
+    name: str
+    per_key: str
+    result: Callable[["WapBranch", int], dict]
+
+    def __call__(self, wap: "WapBranch") -> dict:
+        return wap.audit([self], raise_on_fail=False)[0]
+
+
+def unique_business_key() -> FoldedCheck:
     """No duplicate live (key_cols) rows — THE invariant the LWW merge
     maintains; a violation means a broken batch or a buggy transform."""
+    return FoldedCheck(
+        "unique_business_key",
+        "CAST(count(1) > 1 AS BIGINT)",
+        lambda _wap, n: {"ok": n == 0, "duplicate_keys": n},
+    )
 
-    def check(wap: WapBranch) -> dict:
-        t = wap.staged
-        df = t.read(family="current")
-        if "is_current" in df.columns:
-            df = df.filter(F.col("is_current"))
-        dupes = (
-            df.groupBy(*t.key_cols).count().filter(F.col("count") > 1).count()
+
+def not_null(cols: Sequence[str]) -> FoldedCheck:
+    """No live row has a NULL in any of ``cols``."""
+    pred = " OR ".join(f"`{c.replace('`', '``')}` IS NULL" for c in cols)
+    return FoldedCheck(
+        f"not_null({','.join(cols)})",
+        f"count_if({pred or 'false'})",
+        lambda _wap, n: {"ok": n == 0, "null_rows": n},
+    )
+
+
+def row_count_delta(
+    min_delta: int | None = None, max_delta: int | None = None
+) -> FoldedCheck:
+    """Live-row growth between the fork and the staged head stays inside
+    the expected envelope — the 'did this batch look like a batch'
+    sanity gate (TPC-DI audit's row-count checks, report §5.1.1). The
+    staged count comes from the audit's pass, the fork's from one count."""
+
+    def result(wap: WapBranch, staged_rows: int) -> dict:
+        fork = wap.base.read_snapshot(wap.staged._read_ref()["fork_id"])
+        delta = staged_rows - _live(wap.base, fork).count()
+        ok = (min_delta is None or delta >= min_delta) and (
+            max_delta is None or delta <= max_delta
         )
-        return {"check": "unique_business_key", "ok": dupes == 0, "duplicate_keys": dupes}
+        return {"ok": ok, "delta": delta}
 
-    return check
-
-
-def not_null(cols: Sequence[str]) -> Callable[[WapBranch], dict]:
-    def check(wap: WapBranch) -> dict:
-        df = wap.staged.read(family="current")
-        if "is_current" in df.columns:
-            df = df.filter(F.col("is_current"))
-        pred = None
-        for c in cols:
-            term = F.col(c).isNull()
-            pred = term if pred is None else (pred | term)
-        bad = df.filter(pred).count() if pred is not None else 0
-        return {"check": f"not_null({','.join(cols)})", "ok": bad == 0, "null_rows": bad}
-
-    return check
+    return FoldedCheck("row_count_delta", "count(1)", result)
 
 
 def foreign_key(
@@ -439,10 +474,7 @@ def foreign_key(
     pcols = list(parent_cols or cols)
 
     def check(wap: WapBranch) -> dict:
-        df = wap.staged.read(family="current")
-        if "is_current" in df.columns:
-            df = df.filter(F.col("is_current"))
-        child = df.select(*cols).na.drop(how="any", subset=list(cols))
+        child = _live(wap.staged).select(*cols).na.drop(how="any", subset=list(cols))
         keys = parent.select(
             *[F.col(p).alias(c) for c, p in zip(cols, pcols)]
         ).distinct()
@@ -452,31 +484,5 @@ def foreign_key(
             "ok": orphans == 0,
             "orphan_rows": orphans,
         }
-
-    return check
-
-
-def row_count_delta(
-    min_delta: int | None = None, max_delta: int | None = None
-) -> Callable[[WapBranch], dict]:
-    """Live-row growth between the fork and the staged head stays inside
-    the expected envelope — the 'did this batch look like a batch'
-    sanity gate (TPC-DI audit's row-count checks, report §5.1.1)."""
-
-    def _live_count(df: DataFrame) -> int:
-        if "is_current" in df.columns:
-            df = df.filter(F.col("is_current"))
-        return df.count()
-
-    def check(wap: WapBranch) -> dict:
-        ref = wap.staged._read_ref()
-        fork_snap = wap.base.read_snapshot(ref["fork_id"])
-        before = _live_count(wap.base.read(snapshot=fork_snap, family="current"))
-        after = _live_count(wap.staged.read(family="current"))
-        delta = after - before
-        ok = (min_delta is None or delta >= min_delta) and (
-            max_delta is None or delta <= max_delta
-        )
-        return {"check": "row_count_delta", "ok": ok, "delta": delta}
 
     return check
